@@ -61,7 +61,7 @@ def force(df) -> None:
 
 
 # The driver-registered fixture tables; shared by the DuckDB twin
-# harness here, tools/scale_trend.py, and tools/make_scale_fixtures.py
+# harness here and tools/make_scale_fixtures.py
 # so a fixture-set change lands in one place.
 TABLES = (
     "region nation customer supplier part orders lineitem "
@@ -483,9 +483,8 @@ def run_sf1_tier(spark, qids: list[str], sf1_dir: str, runs: int,
     tier where data volume and parallelism are visible; this emits it
     in the SAME artifact every round. Runs AFTER the sf0.1 record is
     complete — nothing here can contaminate the headline. Session conf
-    flips to the >0.2-SF posture (AQE on, width from input size/cores),
-    mirroring tools/scale_trend.py; the process exits after this, so
-    nothing needs restoring."""
+    flips to the >0.2-SF posture (AQE on, width from input size/cores);
+    the process exits after this, so nothing needs restoring."""
     cpus = n_cpus or os.cpu_count() or 8
     spark.conf.set("spark.sql.shuffle.partitions", str(max(32, cpus)))
     spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -581,7 +580,7 @@ def run_sf1_tier(spark, qids: list[str], sf1_dir: str, runs: int,
                         watchdog.cancel()
                         watchdog.join()
                     if fired.is_set():
-                        try:  # absorb a stale interrupt (scale_trend)
+                        try:  # absorb a stale interrupt
                             con.execute("SELECT 1").fetchall()
                         except Exception:
                             pass

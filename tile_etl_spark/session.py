@@ -3,15 +3,39 @@
 Local mode mirrors the cluster posture: AQE on (runtime re-planning,
 skew-join handling, partition coalescing), explicit shuffle partition
 count, UTC session time zone for cross-engine determinism (SURVEY §5.3).
+
+The driver JVM starts from an application class-data-sharing (AppCDS)
+archive of the installed JDK and Spark jars when one exists; the first
+session that finds none writes it at JVM exit (see ``get_spark``).
 """
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import glob
+import hashlib
 import os
+import shlex
+import shutil
+import subprocess
+import sys
+import time
+from typing import NamedTuple
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
+# The JVM writes the archive (~140 MB) at exit: ~15 s on 4 vCPUs.
+CDS_EXIT_TIMEOUT_S = 60
+# A dynamic dump logs hundreds of "[warning][cds] Skipping ..." lines to
+# stdout, where bench.py and the driver entry print their results.
+_CDS_QUIET = "-Xlog:cds*=off -Xlog:cds*=error:stderr"
+# Environment the Spark launcher adds to the driver's class path; a
+# non-empty directory there makes the dump fail at every exit.
+_CLASSPATH_ENV = ("SPARK_CLASSPATH", "HADOOP_CONF_DIR", "YARN_CONF_DIR",
+                  "SPARK_DIST_CLASSPATH")
+_JAVA_OPTIONS = "spark.driver.extraJavaOptions"
 
 
 def get_spark(
@@ -31,6 +55,25 @@ def get_spark(
     pure win when shuffles carry GBs (cluster_conf keeps it on), pure
     overhead when a whole query's shuffles carry KBs; the bench flips
     it off at tiny SFs (the small-input fast path, bench.py).
+
+    Cold start: when this call launches the driver JVM, it passes a Java
+    AppCDS archive (``-XX:SharedArchiveFile``) kept under
+    ``$XDG_CACHE_HOME/spark-graft/cds/`` (default ``~/.cache``), keyed by
+    the JDK, the ``$SPARK_HOME/jars`` listing, the conf dir, the driver
+    memory and other spark-submit arguments; that halves JVM start plus
+    first job. A session that
+    finds no archive takes a lock and writes one when its JVM exits
+    (``-XX:ArchiveClassesAtExit``): its own start is slower and its exit
+    waits for the dump, once per key. The archive is published only after
+    the JVM exited cleanly, with its size stamped beside it; an archive
+    whose size does not match its stamp is never passed (the session
+    starts plain and removes it). When ``$SPARK_HOME/conf``
+    holds only ``*.template`` files, the JVM gets an empty conf dir
+    instead, because CDS refuses a non-empty directory on the class path.
+    The flags are appended to any ``spark.driver.extraJavaOptions`` from
+    the builder or ``PYSPARK_SUBMIT_ARGS``; a running JVM is left as it
+    is. One line on stderr says whether the archive was used, is being
+    written, or why there is none.
     """
     cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*")
     shuffle = str(
@@ -79,7 +122,273 @@ def get_spark(
         # resident.
         .config("spark.sql.codegen.cache.maxEntries", "3000")
     )
-    return builder.getOrCreate()
+    return _start(builder)
+
+
+class _CdsPlan(NamedTuple):
+    """How the driver JVM uses the class-data archive: ``mode`` is
+    "use", "dump" or "none" and ``why`` the log line's detail."""
+
+    mode: str
+    why: str
+    archive: str = ""
+
+    @property
+    def tmp(self) -> str:
+        """Where a dump writes before it is published."""
+        return f"{self.archive}.{os.getpid()}.tmp"
+
+    @property
+    def flags(self) -> str:
+        if self.mode == "use":
+            return f"-XX:SharedArchiveFile={self.archive} {_CDS_QUIET}"
+        if self.mode == "dump":
+            return f"-XX:ArchiveClassesAtExit={self.tmp} {_CDS_QUIET}"
+        return ""
+
+
+def _log(msg: str) -> None:
+    print(f"class-data archive: {msg}", file=sys.stderr, flush=True)
+
+
+def _start(builder: SparkSession.Builder) -> SparkSession:
+    from pyspark import SparkContext
+
+    if SparkContext._gateway is not None or os.environ.get("PYSPARK_GATEWAY_PORT"):
+        return builder.getOrCreate()  # the JVM runs: its options are fixed
+    submit = os.environ.get("PYSPARK_SUBMIT_ARGS")
+    opts, rest = _split_java_options(submit or "")
+    plan, env = _cds_choose(builder._options.get("spark.driver.memory", ""), rest)
+    _log(f"{plan.mode} ({plan.why})")
+    if plan.mode == "none":
+        return builder.getOrCreate()
+    if opts is None:
+        opts = builder._options.get(_JAVA_OPTIONS)
+    builder.config(_JAVA_OPTIONS, " ".join(filter(None, (opts, plan.flags))))
+    if submit is not None:
+        env["PYSPARK_SUBMIT_ARGS"] = shlex.join(rest)
+    try:
+        with _environ(env):
+            spark = builder.getOrCreate()
+    except BaseException:
+        if plan.mode == "dump":
+            _release(plan)
+        raise
+    if plan.mode == "dump":
+        atexit.register(_publish, SparkContext._gateway.proc, plan)
+    return spark
+
+
+def _cds_choose(driver_memory: str, submit_args: list[str]) -> tuple[_CdsPlan, dict[str, str]]:
+    """The archive plan for this installation, and the environment the
+    JVM launch needs for it (an empty conf dir in place of one that holds
+    only templates)."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    spark_home = _find_spark_home()
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    cds_dir = os.path.join(
+        os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"),
+        "spark-graft", "cds",
+    )
+    extra = [k for k in _CLASSPATH_ENV if os.environ.get(k)]
+    java = _java_home()
+    templates = _only_templates(conf_dir)
+    if extra:
+        return _CdsPlan("none", f"${extra[0]} extends the class path"), {}
+    if java is None:
+        return _CdsPlan("none", "no java found"), {}
+    if templates is None:
+        return _CdsPlan("none", f"{conf_dir} holds more than *.template files"), {}
+    env = {}
+    if templates:
+        conf_dir = env["SPARK_CONF_DIR"] = os.path.join(cds_dir, "conf")
+    try:
+        key = _cds_key(java, os.path.join(spark_home, "jars"), conf_dir,
+                       driver_memory, shlex.join(submit_args))
+    except OSError as ex:
+        return _CdsPlan("none", f"cannot list the Spark jars: {ex}"), {}
+    plan = _cds_plan(cds_dir, key)
+    if plan.mode != "none" and env:
+        with contextlib.suppress(OSError):  # made by the dump; may be read-only
+            os.makedirs(conf_dir, exist_ok=True)
+    return plan, env
+
+
+@contextlib.contextmanager
+def _environ(changes: dict[str, str]):
+    """Set environment variables for the JVM launch, then restore them."""
+    saved = {k: os.environ.get(k) for k in changes}
+    os.environ.update(changes)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                os.environ.pop(k, None)
+            else:
+                os.environ[k] = v
+
+
+def _split_java_options(submit_args: str) -> tuple[str | None, list[str]]:
+    """Split ``PYSPARK_SUBMIT_ARGS`` into the driver JVM options it sets
+    (``--driver-java-options`` or ``--conf
+    spark.driver.extraJavaOptions=``; spark-submit keeps the last one, and
+    they override the builder's) and the remaining arguments."""
+    opts, rest = None, []
+    args = iter(shlex.split(submit_args))
+    for arg in args:
+        name, eq, value = arg.partition("=") if arg.startswith("--") else (arg, "", "")
+        if name not in ("--driver-java-options", "--conf", "-c"):
+            rest.append(arg)
+            continue
+        if not eq:
+            value = next(args, "")
+        if name == "--driver-java-options":
+            opts = value
+        elif value.partition("=")[0] == _JAVA_OPTIONS:
+            opts = value.partition("=")[2]
+        else:
+            rest += [name, value]
+    return opts, rest
+
+
+def _java_home() -> str | None:
+    """The JDK the Spark launcher runs: $JAVA_HOME, else java on PATH."""
+    if os.environ.get("JAVA_HOME"):
+        java = os.path.join(os.environ["JAVA_HOME"], "bin", "java")
+    else:
+        java = shutil.which("java")
+    if not java or not os.path.exists(java):
+        return None
+    return os.path.dirname(os.path.dirname(os.path.realpath(java)))
+
+
+def _only_templates(conf_dir: str) -> bool | None:
+    """True if the conf dir holds only ``*.template`` files (swap it for
+    an empty one), False if it is empty or missing (use it as it is),
+    None if it holds real configuration."""
+    try:
+        names = os.listdir(conf_dir)
+    except FileNotFoundError:
+        return False
+    except OSError:
+        return None  # unreadable: cannot tell
+    if any(not n.endswith(".template") for n in names):
+        return None
+    return bool(names)
+
+
+def _cds_key(java_home: str, jars_dir: str, conf_dir: str, driver_memory: str,
+             submit_args: str) -> str:
+    """Hash of what the JVM checks an archive against: the JDK build,
+    the class path (jar names, sizes and mtimes; the conf dir), the heap
+    size, which decides compressed oops, and the other spark-submit
+    arguments, which can change either."""
+    try:
+        with open(os.path.join(java_home, "release"), "rb") as f:
+            release = f.read()
+    except OSError:
+        release = b""
+    with os.scandir(jars_dir) as it:
+        jars = sorted((e.name, e.stat().st_size, int(e.stat().st_mtime)) for e in it)
+    parts = (java_home, release, jars, conf_dir, driver_memory, submit_args)
+    return hashlib.sha256(repr(parts).encode()).hexdigest()[:16]
+
+
+def _cds_plan(cds_dir: str, key: str) -> _CdsPlan:
+    """Decide from the cache dir alone: use the published archive if its
+    size matches its stamp, else dump one if this process can take the
+    dump lock, else start plain."""
+    archive = os.path.join(cds_dir, f"{key}.jsa")
+    try:
+        with open(archive + ".size") as f:
+            want = int(f.read())
+        have = os.path.getsize(archive)
+    except (OSError, ValueError):
+        pass  # not published (or half removed): build it
+    else:
+        if have == want:
+            return _CdsPlan("use", f"{archive}, {have >> 20} MB", archive)
+        why = f"{archive} holds {have} bytes, its stamp says {want}"
+        if _lock(cds_dir) is None:
+            for path in (archive + ".size", archive):
+                with contextlib.suppress(FileNotFoundError):
+                    os.unlink(path)
+            os.unlink(_lock_path(cds_dir))
+            why += "; removed it, the next session writes a new one"
+        return _CdsPlan("none", why)
+    busy = _lock(cds_dir)
+    if busy is not None:
+        return _CdsPlan("none", f"no archive yet, {busy}")
+    for stale in glob.glob(os.path.join(cds_dir, "*.tmp")):
+        os.unlink(stale)  # left by a dump whose process was killed
+    return _CdsPlan("dump", f"writing {archive} when the JVM exits", archive)
+
+
+def _lock_path(cds_dir: str) -> str:
+    return os.path.join(cds_dir, "dump.lock")
+
+
+def _lock(cds_dir: str) -> str | None:
+    """Create the dump lock (O_EXCL, holding this pid): None when taken,
+    else why not. A lock left by an exited process is removed, and this
+    session starts plain."""
+    path = _lock_path(cds_dir)
+    try:
+        os.makedirs(cds_dir, exist_ok=True)
+        fd = os.open(path, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o644)
+    except FileExistsError:
+        try:
+            with open(path) as f:
+                pid = int(f.read())
+            os.kill(pid, 0)
+        except ProcessLookupError:
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(path)
+            return f"removed the dump lock of exited process {pid}"
+        except (OSError, ValueError):
+            pass  # being written, or held by another user's process
+        return f"another process holds {path}"
+    except OSError as ex:
+        return f"cannot write {cds_dir}: {ex.strerror}"
+    with os.fdopen(fd, "w") as f:
+        f.write(str(os.getpid()))
+    return None
+
+
+def _release(plan: _CdsPlan) -> None:
+    for path in (plan.tmp, _lock_path(os.path.dirname(plan.archive))):
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(path)
+
+
+def _publish(proc: subprocess.Popen, plan: _CdsPlan) -> None:
+    """At interpreter exit: close the gateway's stdin so the JVM exits
+    and writes the archive, wait for it, and publish the archive only if
+    the JVM exited with status 0. A process above this one may kill
+    leftovers soon after this interpreter ends, so the wait happens
+    here."""
+    t0 = time.monotonic()
+    try:
+        proc.stdin.close()
+        try:
+            code = proc.wait(timeout=CDS_EXIT_TIMEOUT_S)
+        except subprocess.TimeoutExpired:
+            proc.kill()
+            code = proc.wait()
+        dt = time.monotonic() - t0
+        size = os.path.getsize(plan.tmp) if code == 0 and os.path.exists(plan.tmp) else 0
+        if not size:
+            _log(f"not published: the JVM exited with {code} after {dt:.1f} s")
+            return
+        os.replace(plan.tmp, plan.archive)
+        with open(plan.archive + ".size.tmp", "w") as f:
+            f.write(str(size))
+        os.replace(plan.archive + ".size.tmp", plan.archive + ".size")
+        _log(f"published {plan.archive}, {size >> 20} MB, written in {dt:.1f} s")
+    finally:
+        _release(plan)
 
 
 def cluster_conf() -> dict[str, str]:
