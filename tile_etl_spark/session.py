@@ -6,7 +6,9 @@ count, UTC session time zone for cross-engine determinism (SURVEY §5.3).
 
 The driver JVM starts from an application class-data-sharing (AppCDS)
 archive of the installed JDK and Spark jars when one exists; the first
-session that finds none writes it at JVM exit (see ``get_spark``).
+session that finds none writes it at JVM exit. Python workers import
+pyspark from its installed directory rather than Spark's zip (see
+``get_spark``).
 """
 
 from __future__ import annotations
@@ -18,6 +20,7 @@ import hashlib
 import os
 import shlex
 import shutil
+import site
 import subprocess
 import sys
 import time
@@ -36,6 +39,7 @@ _CDS_QUIET = "-Xlog:cds*=off -Xlog:cds*=error:stderr"
 _CLASSPATH_ENV = ("SPARK_CLASSPATH", "HADOOP_CONF_DIR", "YARN_CONF_DIR",
                   "SPARK_DIST_CLASSPATH")
 _JAVA_OPTIONS = "spark.driver.extraJavaOptions"
+_PYDAEMON = "tile_etl_spark._pydaemon"
 
 
 def get_spark(
@@ -74,6 +78,20 @@ def get_spark(
     the builder or ``PYSPARK_SUBMIT_ARGS``; a running JVM is left as it
     is. One line on stderr says whether the archive was used, is being
     written, or why there is none.
+
+    Python workers: every PySpark task calls
+    ``importlib.invalidate_caches()``, which makes each zipimporter
+    re-read its archive; with pyspark imported from
+    ``$SPARK_HOME/python/lib/pyspark.zip`` that cost ~0.25 s of CPU per
+    task. So the workers start from ``tile_etl_spark._pydaemon``
+    (``spark.python.daemon.module``) whenever they can import this
+    package (from the working directory, ``$PYTHONPATH`` or
+    site-packages). It drops the spark-core jar from their ``sys.path``,
+    and drops ``pyspark.zip`` and the py4j zip only when a directory copy
+    of both packages is on the rest of the path with a byte-identical
+    ``version.py``; the worker protocol belongs to the JVM's Spark. The
+    daemon logs one ``python workers:`` line on stderr saying which path
+    it took.
     """
     cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*")
     shuffle = str(
@@ -122,7 +140,19 @@ def get_spark(
         # resident.
         .config("spark.sql.codegen.cache.maxEntries", "3000")
     )
+    if _workers_import_package():
+        builder = builder.config("spark.python.daemon.module", _PYDAEMON)
     return _start(builder)
+
+
+def _workers_import_package() -> bool:
+    """Whether the Python workers the JVM starts can import this package:
+    its root is the working directory (``python -m`` puts that first on
+    ``sys.path``), on ``$PYTHONPATH`` or in site-packages."""
+    root = os.path.realpath(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    where = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep),
+             *site.getsitepackages()]
+    return any(p and os.path.realpath(p) == root for p in where)
 
 
 class _CdsPlan(NamedTuple):

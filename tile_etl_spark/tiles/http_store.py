@@ -48,16 +48,14 @@ RETRYABLE = frozenset({429, 500, 502, 503, 504})
 
 
 class ObjectStoreError(Exception):
-    """PUT failure; ``attempts`` records how many requests were
-    actually made (1 for a non-retryable status, max_attempts when
-    retries are exhausted) so dead-letter accounting reconciles with
-    server-side request counts."""
+    """PUT permanently failed (non-retryable status or retries spent);
+    ``attempts`` records how many requests were actually made (1 for a
+    non-retryable status, max_attempts when retries are exhausted) so
+    dead-letter accounting reconciles with server-side request counts."""
 
     def __init__(self, msg: str, attempts: int = 0) -> None:
         super().__init__(msg)
         self.attempts = attempts
-
-    """PUT permanently failed (non-retryable status or retries spent)."""
 
 
 # --------------------------------------------------------------------------
