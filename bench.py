@@ -8,7 +8,8 @@ line ``{"metric", "value", "unit", "queries", "sf", ...}``; the full
 record goes to BENCH_FULL.json. Both tiers (sf_dir, then sf1) run
 through ``run_tier``: a cold pass, a ``window`` per qid on Spark and on
 its DuckDB twin, then ``retime`` of the windows a box dip or a foreign
-CPU burst hit. Options: README "Bench"."""
+CPU burst hit, each under ``session.conf_for`` of its input size.
+Options: README "Bench"."""
 
 from __future__ import annotations
 
@@ -26,7 +27,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from perfbench.stats import descendants, proc_table  # noqa: E402
 from tile_etl_spark import registry  # noqa: E402
-from tile_etl_spark.session import get_spark  # noqa: E402
+from tile_etl_spark.io import TABLES, input_bytes  # noqa: E402
+from tile_etl_spark.session import conf_for, get_spark  # noqa: E402
 
 # Headline set: one per operator family; anything unregistered yet is
 # skipped so the bench stays runnable every round.
@@ -66,14 +68,6 @@ HEADLINE = [
 
 def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
-
-
-# The fixture tables, shared with
-# tools/make_scale_fixtures.py so a fixture-set change lands once.
-TABLES = (
-    "region nation customer supplier part orders lineitem "
-    "events documents embeddings"
-).split()
 
 
 def measure_floor(spark, runs: int) -> float:
@@ -614,17 +608,6 @@ def sf1_fixtures(sf1_dir: str) -> dict:
             "gen_sec": round(time.perf_counter() - t0, 1)}
 
 
-def sf1_conf(cpus: int) -> dict[str, str]:
-    """The sf1 tier's conf: AQE on, width from the core count. Walls
-    are data-dominated here, so core-count ratios mean something."""
-    return {
-        "spark.sql.shuffle.partitions": str(max(32, cpus)),
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.files.minPartitionNum": str(cpus),
-        "spark.sql.files.openCostInBytes": "262144",
-    }
-
-
 def sf1_record(res: dict, sf1_dir: str, runs: int, cpus: int,
                fixtures: dict) -> dict:
     """The ``sf1`` block. sf0.1 is floor-bound (job floor + decode
@@ -645,8 +628,8 @@ def sf1_record(res: dict, sf1_dir: str, runs: int, cpus: int,
                                "duck_flagged_qids", "duck_retimes")},
         "note": (
             "sf1 tier runs after the sf0.1 record completes (cannot "
-            "contaminate it); conf = AQE on, shuffle max(32,cpus), "
-            "minPartitionNum=cpus; warm best-of-n after a recorded "
+            "contaminate it); conf = session.conf_for(input bytes, "
+            "cpus); warm best-of-n after a recorded "
             "cold; duck twins stop at best-of-1 once a run >= 3 s and "
             "are retimed like the Spark windows"
         ),
@@ -660,7 +643,7 @@ def _spread(values: list[float]) -> tuple[float, float, float]:
 
 
 def build_records(res: dict, qids: list[str], extra_qids: list[str],
-                  runs: int, sf: float | None, shuffle: str | None,
+                  runs: int, sf: float | None, shuffle: str,
                   sf1_rec: dict | None, start: dict) -> tuple[dict, dict]:
     """(BENCH_FULL.json record, stdout line) from the sf_dir tier's
     ``run_tier`` result. ``start`` holds what main read before the
@@ -731,13 +714,14 @@ def build_records(res: dict, qids: list[str], extra_qids: list[str],
         "duck_flagged_qids": res["duck_flagged_qids"],
     }
     scaling_note = (
-        "at sf<=0.2 every headline wall is job floor "
+        "on an input session.conf_for counts as small every headline "
+        "wall is job floor "
         f"(~{floor}s) + single-digit-MB parquet decode; no stage moves "
         "enough bytes for reduce-width or core count to matter, so "
         "8-vs-32-core wall ratios read ~1 at this SF by construction. "
         "Widening the shuffle to the core count was A/B'd and LOST "
         "(+29.7% headline at width 32, plans/r14/AB_SHUFFLE_WIDTH"
-        f".json); width = min(8, $SPARK_GRAFT_CPUS) = {shuffle}. "
+        f".json); width from session.conf_for = {shuffle}. "
         "Core-count scaling is measurable in the sf1 tier (key 'sf1' "
         "here / BENCH_FULL.json), where walls are data-dominated."
     )
@@ -838,25 +822,10 @@ def main() -> None:
     qids = [q for q in HEADLINE if q in registry.QUERIES]
     extra_qids = [q for q in EXTRA if q in registry.QUERIES]
 
-    # Small-input fast path (sf≤0.2) unless SPARK_GRAFT_SHUFFLE /
-    # SPARK_GRAFT_AQE say otherwise. Width min(8, cpus): every shuffle
-    # moves at most a few MB and extra reduce tasks are scheduler
-    # overhead (width 32 on local[32] regressed the headline +29.7%,
-    # plans/r14/AB_SHUFFLE_WIDTH.json). AQE off: its per-exchange
-    # barrier (runtime stats + re-plan) costs ~50-150 ms/stage and buys
-    # nothing on KB shuffles (headline A/B 11.1 s → 8.1 s);
-    # cluster_conf() keeps it on, where the re-plan pays.
-    shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE")
-    aqe = os.environ.get("SPARK_GRAFT_AQE")
-    cpus_env = os.environ.get("SPARK_GRAFT_CPUS", "")
-    n_cpus = int(cpus_env) if cpus_env.isdigit() else None
-    if sf is not None and sf <= 0.2:
-        shuffle = shuffle or (str(min(8, n_cpus)) if n_cpus else "8")
-        aqe = aqe or "false"
-    conf = {k: v for k, v in (("spark.sql.shuffle.partitions", shuffle),
-                              ("spark.sql.adaptive.enabled", aqe)) if v}
-    spark = get_spark(app_name="tile-etl-spark-bench",
-                      shuffle_partitions=shuffle, adaptive=aqe)
+    spark = get_spark(app_name="tile-etl-spark-bench")
+    # Each tier's conf comes from its input size and the session's slots.
+    cpus = spark.sparkContext.defaultParallelism
+    conf = conf_for(input_bytes(sf_dir), cpus)
     # BASELINE.md protocol: warm best-of-N. Best-of-3: this box shows
     # ~1.6× whole-run noise windows; of 3 runs one lands clean.
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
@@ -871,17 +840,18 @@ def main() -> None:
     if sf1_env != "0" and (sf1_env not in ("auto", "1") or sf == 0.1):
         sf1_dir = DEFAULT_SF1 if sf1_env in ("auto", "1") else sf1_env
         fixtures = sf1_fixtures(sf1_dir)
-        cpus = n_cpus or os.cpu_count() or 8
         try:
             if not fixtures["ok"]:
                 raise RuntimeError(fixtures["status"])
-            tier = run_tier(spark, sf1_dir, qids, sf1_conf(cpus), runs)
+            tier = run_tier(spark, sf1_dir, qids,
+                            conf_for(input_bytes(sf1_dir), cpus), runs)
             sf1_rec = sf1_record(tier, sf1_dir, runs, cpus, fixtures)
         except Exception as ex:
             print(f"SF1 TIER ERROR: {str(ex)[:160]}", file=sys.stderr)
             sf1_rec = {"error": str(ex)[:160], "fixtures": fixtures}
 
-    full, line = build_records(res, qids, extra_qids, runs, sf, shuffle,
+    full, line = build_records(res, qids, extra_qids, runs, sf,
+                               conf["spark.sql.shuffle.partitions"],
                                sf1_rec, start)
     try:
         out = os.path.join(os.path.dirname(os.path.abspath(__file__)),

@@ -9,12 +9,9 @@ import pytest
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+from tile_etl_spark.io import TABLES  # noqa: E402
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="session")
@@ -23,7 +20,9 @@ def spark():
 
     # Small local session for unit tests: tiny data, low parallelism is
     # faster. Scale behavior is exercised via explain-plan assertions.
-    spark = get_spark(app_name="tile-etl-spark-tests", cpus=4, shuffle_partitions=8)
+    # AQE stays on: test_adaptive_exec pins its runtime coalescing.
+    spark = get_spark(app_name="tile-etl-spark-tests", cpus=4)
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
     yield spark
     spark.stop()
 

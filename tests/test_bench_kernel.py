@@ -318,13 +318,12 @@ def test_names_other_code_imports_from_bench_exist():
     assert [n for n in wanted if not hasattr(bench, n)] == []
 
 
-def test_bench_reads_eight_options():
+def test_bench_reads_six_options():
     import re
 
     src = open(os.path.join(REPO, "bench.py")).read()
     assert set(re.findall(r"SPARK_GRAFT_[A-Z0-9_]+", src)) == {
-        "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_SHUFFLE",
-        "SPARK_GRAFT_AQE", "SPARK_GRAFT_BENCH_RUNS",
+        "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_BENCH_RUNS",
         "SPARK_GRAFT_BOX_GATE_SHA", "SPARK_GRAFT_QUIET_WAIT",
         "SPARK_GRAFT_SF1",
     }
@@ -354,12 +353,3 @@ def test_explicit_sf1_dir_is_read_as_it_is(monkeypatch, tmp_path, complete):
         assert rec["status"].startswith("error: tables missing")
         assert "lineitem" in rec["status"]
 
-
-def test_sf1_conf_is_the_data_sized_posture():
-    assert bench.sf1_conf(4) == {
-        "spark.sql.shuffle.partitions": "32",
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.files.minPartitionNum": "4",
-        "spark.sql.files.openCostInBytes": "262144",
-    }
-    assert bench.sf1_conf(48)["spark.sql.shuffle.partitions"] == "48"

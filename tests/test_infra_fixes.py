@@ -490,7 +490,7 @@ def test_cached_dim_view_rejects_fact_tables_and_size_gates(
     pq.write_table(t, os.path.join(sf_dir, "region.parquet"))
     cm = spark._jsparkSession.sharedState().cacheManager()
     n0 = cm.numCachedEntries()
-    monkeypatch.setattr(io_mod, "_SMALL_SOURCE_MAX_BYTES", 10)
+    monkeypatch.setattr(io_mod, "SMALL_INPUT_BYTES", 10)
     v = io_mod.cached_dim_view(
         spark, sf_dir, "region", ("r_regionkey", "r_name")
     )
@@ -504,7 +504,7 @@ def test_cached_dim_view_rejects_fact_tables_and_size_gates(
     ) not in memo
     # under the real gate the same call pins the projection again
     monkeypatch.setattr(
-        io_mod, "_SMALL_SOURCE_MAX_BYTES", 32 * 1024 * 1024
+        io_mod, "SMALL_INPUT_BYTES", 32 * 1024 * 1024
     )
     v2 = io_mod.cached_dim_view(
         spark, sf_dir, "region", ("r_regionkey", "r_name")

@@ -13,7 +13,7 @@ import weakref
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tile_etl_spark.session import ensure_session_determinism
+from tile_etl_spark.session import SMALL_INPUT_BYTES, ensure_session_determinism
 
 TABLES = (
     "region",
@@ -294,17 +294,21 @@ def source_bytes(sf_dir: str, name: str) -> int:
         return 1 << 62
 
 
-# Compressed-bytes gate under which a table-backed relation may carry a
-# forced BROADCAST hint (scaled_broadcast_hint) or be pinned in the
-# columnar cache (cached_dim_view). 32 MB compressed is comfortably
-# inside the session's 64 MB autoBroadcastJoinThreshold after decode
-# expansion of the 1-4 projected columns; above it the planner/AQE must
-# decide from its own runtime stats (guide §3.1: a forced broadcast of
-# a relation that only LOOKS small is the canonical driver/executor OOM
-# at scale). Env-tunable for cluster postures with bigger thresholds.
-_SMALL_SOURCE_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_HINT_GATE_BYTES", str(32 * 1024 * 1024))
-)
+def input_bytes(sf_dir: str) -> int:
+    """Source bytes of every fixture table: the size session.conf_for
+    sizes a job by. A missing table counts as huge, so the conf fails
+    closed to the large posture."""
+    return sum(source_bytes(sf_dir, t) for t in TABLES)
+
+
+# SMALL_INPUT_BYTES is also the per-table gate under which a relation
+# may carry a forced BROADCAST hint (scaled_broadcast_hint) or be pinned
+# in the columnar cache (cached_dim_view). 32 MB compressed is
+# comfortably inside the session's 64 MB autoBroadcastJoinThreshold
+# after decode expansion of the 1-4 projected columns; above it the
+# planner/AQE must decide from its own runtime stats (guide §3.1: a
+# forced broadcast of a relation that only LOOKS small is the canonical
+# driver/executor OOM at scale).
 
 
 def scaled_broadcast_hint(
@@ -330,7 +334,7 @@ def scaled_broadcast_hint(
     keep = list(always) + [
         a
         for a, t in alias_to_table.items()
-        if source_bytes(sf_dir, t) <= _SMALL_SOURCE_MAX_BYTES
+        if source_bytes(sf_dir, t) <= SMALL_INPUT_BYTES
     ]
     if not keep:
         return ""
@@ -388,7 +392,7 @@ def cached_dim_view(spark: SparkSession, sf_dir: str, name: str,
             "cache — fact/corpus tables scale with the data and must "
             "go through table_view/load"
         )
-    if source_bytes(sf_dir, name) > _SMALL_SOURCE_MAX_BYTES:
+    if source_bytes(sf_dir, name) > SMALL_INPUT_BYTES:
         return table_view(spark, sf_dir, name)
     df = load(spark, sf_dir, name)
     memo = _memo_for(spark)

@@ -1,8 +1,11 @@
-"""SparkSession factory with scale-oriented defaults.
+"""SparkSession factory, and the one execution-conf rule.
 
-Local mode mirrors the cluster posture: AQE on (runtime re-planning,
-skew-join handling, partition coalescing), explicit shuffle partition
-count, UTC session time zone for cross-engine determinism (SURVEY §5.3).
+``get_spark`` builds the session with fixed defaults: AQE on (runtime
+re-planning, skew-join handling, partition coalescing), 32 shuffle
+partitions, UTC session time zone for cross-engine determinism (SURVEY
+§5.3). ``conf_for`` derives a job's shuffle width and AQE setting from
+its input size and core count; callers that know their input apply it
+with ``spark.conf.set``.
 
 The driver JVM starts from an application class-data-sharing (AppCDS)
 archive of the installed JDK and Spark jars when one exists; the first
@@ -29,6 +32,10 @@ from typing import NamedTuple
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
+# Compressed source bytes at or under which an input is small: its
+# shuffles move a few MB at most. io.py's per-table broadcast-hint and
+# dimension-cache gates use the same bound.
+SMALL_INPUT_BYTES = 32 * 1024 * 1024
 # The JVM writes the archive (~140 MB) at exit: ~15 s on 4 vCPUs.
 CDS_EXIT_TIMEOUT_S = 60
 # A dynamic dump logs hundreds of "[warning][cds] Skipping ..." lines to
@@ -45,8 +52,6 @@ _PYDAEMON = "tile_etl_spark._pydaemon"
 def get_spark(
     app_name: str = "tile-etl-spark",
     cpus: str | int | None = None,
-    shuffle_partitions: str | int | None = None,
-    adaptive: str | bool | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
@@ -54,11 +59,9 @@ def get_spark(
     configs apply — only ``master`` changes (provided externally via
     spark-submit).
 
-    ``adaptive`` (default on, override via $SPARK_GRAFT_AQE) gates AQE.
-    AQE's runtime re-planning costs one driver barrier per exchange —
-    pure win when shuffles carry GBs (cluster_conf keeps it on), pure
-    overhead when a whole query's shuffles carry KBs; the bench flips
-    it off at tiny SFs (the small-input fast path, bench.py).
+    The session starts with 32 shuffle partitions and AQE on whatever
+    its input; ``conf_for`` gives the size-derived conf to set on it.
+    Fetching a running session re-applies these defaults to it.
 
     Cold start: when this call launches the driver JVM, it passes a Java
     AppCDS archive (``-XX:SharedArchiveFile``) kept under
@@ -94,14 +97,6 @@ def get_spark(
     it took.
     """
     cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*")
-    shuffle = str(
-        shuffle_partitions
-        or os.environ.get("SPARK_GRAFT_SHUFFLE")
-        or DEFAULT_SHUFFLE_PARTITIONS
-    )
-    if adaptive is None:
-        adaptive = os.environ.get("SPARK_GRAFT_AQE", "true")
-    adaptive = str(adaptive).lower()
     builder = SparkSession.builder.appName(app_name)
     # Respect an externally provided master (spark-submit --master sets
     # PYSPARK_SUBMIT_ARGS; cluster launchers set SPARK_MASTER/MASTER) —
@@ -114,10 +109,10 @@ def get_spark(
         builder = builder.master(f"local[{cpus}]")
     builder = (
         builder.config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", shuffle)
+        .config("spark.sql.shuffle.partitions", DEFAULT_SHUFFLE_PARTITIONS)
         # AQE: runtime shuffle-partition coalescing, skew-join splitting,
         # sort-merge→broadcast conversion when runtime stats allow.
-        .config("spark.sql.adaptive.enabled", adaptive)
+        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Non-ANSI: bad casts yield NULL (oracle twins use TRY_CAST).
@@ -143,6 +138,33 @@ def get_spark(
     if _workers_import_package():
         builder = builder.config("spark.python.daemon.module", _PYDAEMON)
     return _start(builder)
+
+
+def conf_for(input_bytes: int, cpus: int) -> dict[str, str]:
+    """The execution conf for a job over ``input_bytes`` of compressed
+    source (``io.input_bytes``) on ``cpus`` task slots
+    (``spark.sparkContext.defaultParallelism``).
+
+    Up to SMALL_INPUT_BYTES: ``min(8, cpus)`` shuffle partitions and AQE
+    off. Every shuffle moves a few MB at most, so extra reduce tasks are
+    scheduler overhead (width 32 on local[32] cost +29.7% on the sf0.1
+    headline, plans/r14/AB_SHUFFLE_WIDTH.json), and AQE's per-exchange
+    barrier (runtime stats + re-plan, ~50-150 ms a stage) buys nothing
+    (headline 11.1 s → 8.1 s with it off).
+
+    Above it, walls are data-dominated: AQE on, ``max(32, cpus)``
+    partitions for AQE to coalesce, and at least ``cpus`` scan splits
+    with a 256 KB file open cost, so small files still fill every slot.
+    """
+    if input_bytes <= SMALL_INPUT_BYTES:
+        return {"spark.sql.shuffle.partitions": str(min(8, cpus)),
+                "spark.sql.adaptive.enabled": "false"}
+    return {
+        "spark.sql.shuffle.partitions": str(max(32, cpus)),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.files.minPartitionNum": str(cpus),
+        "spark.sql.files.openCostInBytes": "262144",
+    }
 
 
 def _workers_import_package() -> bool:
@@ -419,41 +441,6 @@ def _publish(proc: subprocess.Popen, plan: _CdsPlan) -> None:
         _log(f"published {plan.archive}, {size >> 20} MB, written in {dt:.1f} s")
     finally:
         _release(plan)
-
-
-def cluster_conf() -> dict[str, str]:
-    """Config delta for a real multi-executor deployment (the local[*]
-    factory above is the same engine; these knobs only matter with a
-    cluster manager and a 100 TB-class input):
-
-    - shuffle width sized so ~128-256 MB lands per reduce partition
-      (AQE coalesces down, so err high);
-    - RocksDB state store for streaming state that exceeds heap;
-    - dynamic allocation as the admission-control replacement for the
-      reference's Semaphore(40) (SURVEY §2A A12);
-    - shuffle/broadcast compression and off-heap memory for Tungsten.
-
-    Returned as a dict so spark-submit wrappers can splat it.
-    """
-    return {
-        "spark.sql.shuffle.partitions": "2000",
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "128MB",
-        "spark.sql.files.maxPartitionBytes": "256MB",
-        "spark.sql.autoBroadcastJoinThreshold": "256MB",
-        "spark.sql.streaming.stateStore.providerClass": (
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider"
-        ),
-        "spark.dynamicAllocation.enabled": "true",
-        "spark.dynamicAllocation.shuffleTracking.enabled": "true",
-        "spark.memory.offHeap.enabled": "true",
-        "spark.memory.offHeap.size": "8g",
-        "spark.sql.parquet.filterPushdown": "true",
-        "spark.sql.parquet.aggregatePushdown": "true",
-    }
 
 
 def ensure_session_determinism(spark: SparkSession) -> SparkSession:
