@@ -60,3 +60,37 @@ def test_fuzzy_oracle_dedup_form_equals_naive_form(duck):
         f"SELECT count(*) FROM ({structured})"
     ).fetchone()[0]
     assert n_naive == n_struct > 0  # EXCEPT is set-wise; counts too
+
+
+def test_embed_oracle_norm_once_form_equals_pairwise_form(duck):
+    """q_dedup_embed's oracle takes each vector's norm once, in a CTE;
+    the pairwise form below recomputed both norms for every pair, twice,
+    and made the sf1 twin ~40 s. Pin (DuckDB only) that the two forms
+    are value-identical: same division order, so bit-equal doubles."""
+    pairwise = """
+      WITH v AS (
+        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
+      )
+      SELECT a.vec_id AS v1, b.vec_id AS v2,
+             round(list_dot_product(a.e, b.e)
+                   / (sqrt(list_dot_product(a.e, a.e))
+                      * sqrt(list_dot_product(b.e, b.e))), 6) AS cos_sim
+      FROM v a JOIN v b ON a.vec_id < b.vec_id
+      WHERE list_dot_product(a.e, b.e)
+            / (sqrt(list_dot_product(a.e, a.e))
+               * sqrt(list_dot_product(b.e, b.e))) >= 0.4
+    """
+    structured = registry.ORACLES["q_dedup_embed"]
+    diff = duck.execute(
+        f"SELECT count(*) FROM (({pairwise}) EXCEPT ({structured})) "
+        f"UNION ALL "
+        f"SELECT count(*) FROM (({structured}) EXCEPT ({pairwise}))"
+    ).fetchall()
+    assert [r[0] for r in diff] == [0, 0]
+    n_pairwise = duck.execute(
+        f"SELECT count(*) FROM ({pairwise})"
+    ).fetchone()[0]
+    n_struct = duck.execute(
+        f"SELECT count(*) FROM ({structured})"
+    ).fetchone()[0]
+    assert n_pairwise == n_struct > 0

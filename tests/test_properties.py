@@ -116,9 +116,9 @@ def test_scan_relayout_preserves_values(
     rmtree'ing the SHARED /tmp artifact cache — the old teardown
     deleted scan-layout files out from under any concurrently running
     engine process (the r13 pre-driver sweep lost 55 qids to exactly
-    that: memoized plans referencing unlinked files). `_art()` reads
-    files.ART_DIR at call time, so the patch isolates every artifact
-    this test triggers."""
+    that: memoized plans referencing unlinked files). `artifact()`
+    reads files.ART_DIR at call time, so the patch isolates every
+    artifact this test triggers."""
     from tile_etl_spark import io as io_mod
     from tile_etl_spark.sources import files as files_mod
 

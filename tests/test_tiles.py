@@ -145,17 +145,16 @@ def test_sink_compact_reduces_file_count(spark, sf_dir):
     import glob
     import os
 
-    from tile_etl_spark.sources.files import ART_DIR, sink_compact
+    from tile_etl_spark.sources.files import (
+        ART_DIR,
+        _events_fragmented,
+        sink_compact,
+    )
 
     sink_compact(spark, sf_dir).collect()
-    # the fragment dir is fingerprint-suffixed (cache key per fixture);
-    # resolve it the same way sink_compact does
-    from tile_etl_spark.sources.files import source_fingerprint
-
-    fpr = source_fingerprint(os.path.join(sf_dir, "events.parquet"))
-    frag = glob.glob(
-        os.path.join(ART_DIR, f"events_fragmented_{fpr[:12]}", "*.parquet")
-    )
+    # the fragment dir is named by its artifact id; the builder returns
+    # the published dir without rebuilding it
+    frag = glob.glob(os.path.join(_events_fragmented(spark, sf_dir), "*.parquet"))
     comp = glob.glob(os.path.join(ART_DIR, "events_compacted", "*.parquet"))
     assert len(frag) == 64
     assert 1 <= len(comp) <= 4

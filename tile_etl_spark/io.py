@@ -7,6 +7,7 @@ and prunes columns into the parquet scan.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import weakref
 
@@ -89,8 +90,33 @@ _RELAYOUT_MAX_FILES = 32
 
 # Bump when _read_raw's normalization recipe changes (e.g. the events
 # nanos→µs handling): materialized layouts embed the recipe's OUTPUT,
-# so an old artifact must not satisfy a new recipe's marker.
+# so a new recipe must name a new layout.
 _RELAYOUT_RECIPE = "v2"
+
+
+def source_fingerprint(*paths: str) -> str:
+    """Identity of source files without reading them: md5 over each
+    file's name, size and mtime (a directory counts as every file under
+    it; a missing path contributes nothing). The one source identity of
+    the engine: artifact names (sources/files.artifact), the load memo
+    and plan_memo keys all use it, so a regenerated fixture under the
+    same path is a new source everywhere at once."""
+    parts = []
+    for p in paths:
+        if os.path.isdir(p):
+            files = sorted(
+                os.path.join(r, f)
+                for r, _, fs in os.walk(p)
+                for f in fs
+            )
+        elif os.path.exists(p):
+            files = [p]
+        else:
+            files = []
+        for f in files:
+            st = os.stat(f)
+            parts.append(f"{os.path.basename(f)}:{st.st_size}:{st.st_mtime_ns}")
+    return hashlib.md5("|".join(parts).encode()).hexdigest()
 
 
 def _scan_path(spark: SparkSession, sf_dir: str, name: str) -> str:
@@ -124,43 +150,34 @@ def _scan_path(spark: SparkSession, sf_dir: str, name: str) -> str:
         meta.num_rows < _RELAYOUT_MIN_ROWS and not floor
     ) or meta.num_row_groups >= max(4, _RELAYOUT_MAX_FILES // 2):
         return path
-    from tile_etl_spark.sources.files import (
-        _art,
-        marker_current,
-        publish_parquet,
-        source_fingerprint,
-        write_marker,
-    )
+    from tile_etl_spark.sources.files import artifact
 
-    fp = source_fingerprint(path)
     # EVERY layout param is part of the artifact identity — rows/file,
-    # the fan-out floor, the (session-independent) file count, and the
-    # normalization recipe version: changing any must regenerate, not
-    # reuse, old layouts.
+    # the fan-out floor, the (session-independent) file count, the
+    # cluster key and the normalization recipe: changing any names a new
+    # layout instead of reusing an old one.
     n = max(
         1,
         floor,
         min(_RELAYOUT_MAX_FILES, meta.num_rows // _RELAYOUT_ROWS_PER_FILE),
     )
-    dest = _art(
-        os.path.join(
-            "scan_layout",
-            f"{name}_{fp[:12]}_r{_RELAYOUT_ROWS_PER_FILE // 1000}k"
-            f"_f{floor}_n{n}_{_RELAYOUT_RECIPE}",
-        )
-    )
-    marker = dest + "._DONE"
-    if not marker_current(marker, fp):
+    key = _CLUSTER_KEY.get(name)
+
+    def write(tmp: str) -> None:
         raw = _read_raw(spark, path, name)
-        key = _CLUSTER_KEY.get(name)
         out = (
             raw.repartitionByRange(n, key).sortWithinPartitions(key)
             if key
             else raw.repartition(n)
         )
-        publish_parquet(out, dest)
-        write_marker(marker, fp)
-    return dest
+        out.write.parquet(tmp)
+
+    return artifact(
+        f"scan_layout_{name}",
+        [path],
+        f"r{_RELAYOUT_ROWS_PER_FILE}_f{floor}_n{n}_k{key}_{_RELAYOUT_RECIPE}",
+        write,
+    )
 
 
 def _read_raw(spark: SparkSession, path: str, name: str) -> DataFrame:
@@ -194,12 +211,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_session_determinism(spark)
     memo = _memo_for(spark)
     src = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        st = os.stat(src)
-        fp = f"{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        fp = "missing"
-    key = (sf_dir, name, fp)
+    key = (sf_dir, name, source_fingerprint(src))
     hit = memo.get(key)
     if hit is not None:
         return hit
@@ -221,8 +233,8 @@ def plan_memo(*tables: str):
     internal persist/scope state: re-running them re-derives the exact
     same plan (and, for probe-broadcast builders like cosine_topk,
     re-runs a driver-side probe-collect job) for nothing. The memo key
-    includes each declared source table's (size, mtime) fingerprint so
-    a regenerated fixture rebuilds the plan. NOT applicable to builders
+    includes the declared source tables' source_fingerprint so a
+    regenerated fixture rebuilds the plan. NOT applicable to builders
     that persist scoped intermediates (their scope lifecycle must
     re-run per call) or that have build-time side effects."""
 
@@ -232,14 +244,10 @@ def plan_memo(*tables: str):
         @functools.wraps(fn)
         def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
             memo = _memo_for(spark)
-            fps = []
-            for t in tables:
-                try:
-                    st = os.stat(os.path.join(sf_dir, f"{t}.parquet"))
-                    fps.append(f"{st.st_size}:{st.st_mtime_ns}")
-                except OSError:
-                    fps.append("missing")
-            key = ("__plan__", fn.__name__, sf_dir, tuple(fps))
+            fp = source_fingerprint(
+                *(os.path.join(sf_dir, f"{t}.parquet") for t in tables)
+            )
+            key = ("__plan__", fn.__name__, sf_dir, fp)
             hit = memo.get(key)
             if hit is None:
                 hit = fn(spark, sf_dir)
@@ -490,7 +498,7 @@ class SessionKeyed:
 # DataFrames are immutable; memoizing per (session, sf_dir, table)
 # saves re-listing files + re-reading parquet footers + re-analysis on
 # every one of the ~100 qids a driver sweep builds. Keyed on the source
-# file's (size, mtime) so a regenerated fixture invalidates the entry,
+# file's source_fingerprint so a regenerated fixture invalidates the entry,
 # and held per-session behind a weakref so a stopped session's
 # DataFrames (and the session itself) can be GC'd.
 _LOAD_MEMO = SessionKeyed()

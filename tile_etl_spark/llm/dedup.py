@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from tile_etl_spark.io import load, plan_memo
+from tile_etl_spark.io import load, plan_memo, source_fingerprint
 from tile_etl_spark.registry import query
 from tile_etl_spark.session import ensure_session_determinism
 
@@ -522,8 +522,6 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical: see plans/r14/AB_DEDUP_HASHED_SHINGLES.json."""
     import os
 
-    from tile_etl_spark.sources.files import source_fingerprint
-
     ensure_session_determinism(spark)
     _scope(f"q_dedup_near:{sf_dir}")
     fpr = source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
@@ -874,16 +872,15 @@ def _n_embed_blocks(sf_dir: str) -> int:
     "q_dedup_embed",
     oracle="""
     WITH v AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
+      SELECT vec_id, e, sqrt(list_dot_product(e, e)) AS norm
+      FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings)
+    ),
+    pairs AS (
+      SELECT a.vec_id AS v1, b.vec_id AS v2,
+             list_dot_product(a.e, b.e) / (a.norm * b.norm) AS cos
+      FROM v a JOIN v b ON a.vec_id < b.vec_id
     )
-    SELECT a.vec_id AS v1, b.vec_id AS v2,
-           round(list_dot_product(a.e, b.e)
-                 / (sqrt(list_dot_product(a.e, a.e))
-                    * sqrt(list_dot_product(b.e, b.e))), 6) AS cos_sim
-    FROM v a JOIN v b ON a.vec_id < b.vec_id
-    WHERE list_dot_product(a.e, b.e)
-          / (sqrt(list_dot_product(a.e, a.e))
-             * sqrt(list_dot_product(b.e, b.e))) >= 0.4
+    SELECT v1, v2, round(cos, 6) AS cos_sim FROM pairs WHERE cos >= 0.4
     """,
 )
 @plan_memo("embeddings")

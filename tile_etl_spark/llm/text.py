@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tile_etl_spark.cache import persist_scoped, scope
-from tile_etl_spark.io import load, table_view
+from tile_etl_spark.io import load, source_fingerprint, table_view
 from tile_etl_spark.operators.windows import (
     bounded_window_key,
     pid_hist_window,
@@ -36,8 +36,6 @@ _TFIDF_MEMO: dict[str, tuple] = {}
 
 def _corpus_count(spark: SparkSession, sf_dir: str, view: str) -> int:
     import os
-
-    from tile_etl_spark.sources.files import source_fingerprint
 
     fp = source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
     key = (id(spark), sf_dir, fp)
@@ -163,8 +161,6 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session_determinism(spark)
     scope(f"q_text_tfidf:{sf_dir}")
     t = table_view(spark, sf_dir, "documents")
-    from tile_etl_spark.sources.files import source_fingerprint
-
     fpr = source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
 
     def build():

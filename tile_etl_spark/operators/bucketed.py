@@ -8,15 +8,17 @@ sort-merges with ZERO exchanges — the dominant shuffle in the workload
 amortized into the write path. The plan test asserts the Exchange-free
 shape.
 
-The bucketed tables need a metastore (Derby in local runs). In a
-restricted driver environment where saveAsTable is unavailable the
-builder degrades to the plain (shuffling) join — identical rows, same
-oracle — and the scale path remains exercised by the test suite.
+The bucketed tables need a catalog (the session's in-memory one in
+local runs). In a restricted driver environment where saveAsTable is
+unavailable the builder degrades to the plain (shuffling) join —
+identical rows, same oracle — and the scale path remains exercised by
+the test suite.
 """
 
 from __future__ import annotations
 
 import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,45 +30,51 @@ from tile_etl_spark.session import ensure_session_determinism
 N_BUCKETS = 16
 
 
-def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame] | None:
-    """orders + lineitem as bucketed-by-orderkey external tables
-    (written once per sf); None if the environment has no metastore."""
-    from tile_etl_spark.sources.files import (
-        ART_DIR,
-        marker_current,
-        source_fingerprint,
-        write_marker,
+def _bucketed_table(
+    spark: SparkSession, sf_dir: str, src: str, by: str, sort: tuple[str, ...]
+) -> str:
+    """``src`` as an external table bucketed by ``by`` and sorted by
+    ``sort``: the files are an artifact (sources/files.artifact) whose
+    identity covers the source fingerprint and the bucket spec, and the
+    table takes its name from that artifact. The catalog is in-memory,
+    so each process registers the published files once."""
+    from tile_etl_spark.sources.files import artifact
+
+    spec = (
+        f"CLUSTERED BY ({by}) SORTED BY ({', '.join(sort)}) "
+        f"INTO {N_BUCKETS} BUCKETS"
     )
 
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    t_o, t_l = f"orders_bkt_{tag}", f"lineitem_bkt_{tag}"
+    def write(tmp: str) -> None:
+        # bucketBy needs a table to write through; the build table is
+        # external, so dropping it keeps the files
+        build = "bkt_build_" + uuid.uuid4().hex[:12]
+        load(spark, sf_dir, src).write.option("path", tmp).bucketBy(
+            N_BUCKETS, by
+        ).sortBy(*sort).saveAsTable(build)
+        spark.sql(f"DROP TABLE {build}")
+
+    path = artifact(
+        f"{src}_bkt", [os.path.join(sf_dir, f"{src}.parquet")], spec, write
+    )
+    tbl = os.path.basename(path)
+    if not spark.catalog.tableExists(tbl):
+        cols = load(spark, sf_dir, src).schema.toDDL()
+        spark.sql(
+            f"CREATE TABLE IF NOT EXISTS {tbl} ({cols}) USING parquet "
+            f"{spec} LOCATION '{path}'"
+        )
+    return tbl
+
+
+def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame] | None:
+    """orders + lineitem as bucketed-by-orderkey external tables
+    (written once per source); None if the environment has no metastore."""
     try:
-        for tbl, src, key in (
-            (t_o, "orders", "o_orderkey"),
-            (t_l, "lineitem", "l_orderkey"),
-        ):
-            # marker keyed on the source parquet's size+mtime: a
-            # regenerated fixture rebuilds the bucketed table instead
-            # of silently joining stale data.
-            marker = os.path.join(ART_DIR, f"{tbl}_FPR")
-            # layout params are part of the identity: changing
-            # N_BUCKETS or the sort spec must rebuild, not reuse
-            fpr = (
-                source_fingerprint(os.path.join(sf_dir, f"{src}.parquet"))
-                + f":b{N_BUCKETS}:sort={key}"
-            )
-            if spark.catalog.tableExists(tbl) and marker_current(marker, fpr):
-                continue
-            (
-                load(spark, sf_dir, src)
-                .write.mode("overwrite")
-                .option("path", os.path.join(ART_DIR, tbl))
-                .bucketBy(N_BUCKETS, key)
-                .sortBy(key)
-                .saveAsTable(tbl)
-            )
-            write_marker(marker, fpr)
-        return spark.table(t_o), spark.table(t_l)
+        return tuple(
+            spark.table(_bucketed_table(spark, sf_dir, src, key, (key,)))
+            for src, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey"))
+        )
     except Exception as ex:
         import sys
 
@@ -76,38 +84,16 @@ def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
 
 def orders_by_custkey(spark: SparkSession, sf_dir: str) -> str | None:
     """``orders`` as a custkey-bucketed external table (written once
-    per sf; fingerprint-keyed like the orderkey buckets above) — the
-    zero-exchange layout for every per-customer window/aggregate:
-    the bucketed scan's HashPartitioning(o_custkey) already satisfies
-    the window's ClusteredDistribution, so rank-per-customer plans as
-    scan → in-partition sort → WindowGroupLimit with NO shuffle at any
-    scale. Returns the table name, or None without a metastore."""
-    from tile_etl_spark.sources.files import (
-        ART_DIR,
-        marker_current,
-        source_fingerprint,
-        write_marker,
-    )
-
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    tbl = f"orders_ck_{tag}"
+    per source, like the orderkey buckets above) — the zero-exchange
+    layout for every per-customer window/aggregate: the bucketed scan's
+    HashPartitioning(o_custkey) already satisfies the window's
+    ClusteredDistribution, so rank-per-customer plans as scan →
+    in-partition sort → WindowGroupLimit with NO shuffle at any scale.
+    Returns the table name, or None without a metastore."""
     try:
-        marker = os.path.join(ART_DIR, f"{tbl}_FPR")
-        fpr = (
-            source_fingerprint(os.path.join(sf_dir, "orders.parquet"))
-            + f":b{N_BUCKETS}:sort=o_custkey,o_orderkey"
+        return _bucketed_table(
+            spark, sf_dir, "orders", "o_custkey", ("o_custkey", "o_orderkey")
         )
-        if not (spark.catalog.tableExists(tbl) and marker_current(marker, fpr)):
-            (
-                load(spark, sf_dir, "orders")
-                .write.mode("overwrite")
-                .option("path", os.path.join(ART_DIR, tbl))
-                .bucketBy(N_BUCKETS, "o_custkey")
-                .sortBy("o_custkey", "o_orderkey")
-                .saveAsTable(tbl)
-            )
-            write_marker(marker, fpr)
-        return tbl
     except Exception as ex:
         import sys
 

@@ -1,22 +1,38 @@
-"""CSV / JSON / partitioned-parquet / binary-file sources and sinks.
+"""CSV / JSON / partitioned-parquet / binary-file sources and sinks,
+and the build-once rule for every derived artifact.
 
-Artifacts (round-trip scratch data, materialized tile files) live under
-a per-process-safe dir in /tmp; every builder is idempotent so repeated
-driver invocations see identical inputs.
+Derived inputs — scan re-layouts (io), the tile cache, stream-replay
+chunks (streaming/replay), partitioned and bucketed copies — are built
+by ``artifact`` under ART_DIR, which bench, tests and the driver share
+at the same time. An artifact's identity (its sources' fingerprint plus
+the recipe that shapes it) is in its directory NAME; a build fills a
+private sibling directory and is published by one ``os.rename``; a
+published directory is never rewritten or removed, so a frame that
+read it stays readable for as long as its process lives. The sink qids'
+round-trip output (``_art``) is the operator under test and is
+rewritten on every call.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+import shutil
+import uuid
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tile_etl_spark.io import SessionKeyed, as_double, load
+from tile_etl_spark.io import SessionKeyed, as_double, load, source_fingerprint
 from tile_etl_spark.registry import query
 from tile_etl_spark.session import ensure_session_determinism
-from tile_etl_spark.tiles.grid import src_path_col, tile_grid
+from tile_etl_spark.tiles.grid import (
+    PRESENT_SQL,
+    grid_oracle_cte,
+    src_path_col,
+    tile_grid,
+)
 
 ART_DIR = os.environ.get(
     "SPARK_GRAFT_ART_DIR", "/tmp/tile_etl_spark_artifacts"
@@ -28,71 +44,38 @@ def _art(name: str) -> str:
     return os.path.join(ART_DIR, name)
 
 
-def source_fingerprint(*paths: str) -> str:
-    """Cheap content fingerprint of source files (size + mtime per
-    file, no reads). Artifact caches key their _DONE markers on this so
-    regenerated fixture parquet under the same path invalidates the
-    cache instead of silently replaying stale data."""
-    parts = []
-    for p in paths:
-        if os.path.isdir(p):
-            files = sorted(
-                os.path.join(r, f)
-                for r, _, fs in os.walk(p)
-                for f in fs
-            )
-        elif os.path.exists(p):
-            files = [p]
-        else:
-            files = []
-        for f in files:
-            st = os.stat(f)
-            parts.append(f"{os.path.basename(f)}:{st.st_size}:{st.st_mtime_ns}")
-    return hashlib.md5("|".join(parts).encode()).hexdigest()
+def artifact(
+    name: str,
+    sources: Iterable[str],
+    recipe: str,
+    write: Callable[[str], None],
+) -> str:
+    """Path of the derived artifact ``ART_DIR/{name}_{id}``, built once.
 
-
-def marker_current(marker: str, fingerprint: str) -> bool:
-    """True iff ``marker`` exists and records ``fingerprint``."""
-    try:
-        with open(marker) as f:
-            return f.read().strip() == fingerprint
-    except OSError:
-        return False
-
-
-def write_marker(marker: str, fingerprint: str) -> None:
-    with open(marker, "w") as f:
-        f.write(fingerprint + "\n")
-
-
-def publish_parquet(df, dest: str, partition_by: list[str] | None = None) -> None:
-    """Atomically publish a parquet artifact directory: build into a
-    uniquely named sibling, then rename into place. Two concurrent
-    builders (bench + test run, driver retries) each produce a COMPLETE
-    build and the loser discards — a bare overwrite to the shared dest
-    lets the second job's commit delete/interleave the first's files
-    mid-write, after which both write the _DONE marker and every later
-    session serves the corrupted artifact. Writes are forced to static
-    partitionOverwriteMode: under dynamic mode (a conf the external
-    driver session may carry) a rebuild after fixture regeneration
-    would only replace partitions present in the NEW data, leaving
-    orphan partitions from the old generation under a fresh marker."""
-    import shutil
-    import uuid
-
-    tmp = f"{dest}.build-{uuid.uuid4().hex[:8]}"
-    w = df.write.mode("overwrite").option(
-        "partitionOverwriteMode", "static"
+    ``id`` hashes ``source_fingerprint(*sources)`` and ``recipe`` (every
+    parameter that shapes the output), so a regenerated source or a new
+    recipe names a new directory instead of rebuilding one that readers
+    hold. If the directory exists it is returned as it is. Otherwise
+    ``write(tmp)`` creates and fills ``tmp``, a ``.build-<uuid>``
+    sibling, and ``os.rename`` publishes it; if another builder
+    published first, the rename fails and this build is dropped — the
+    published directory is never touched."""
+    key = f"{source_fingerprint(*sources)}|{recipe}"
+    path = os.path.join(
+        ART_DIR, f"{name}_{hashlib.md5(key.encode()).hexdigest()[:12]}"
     )
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(tmp)
+    if os.path.isdir(path):
+        return path
+    tmp = f"{path}.build-{uuid.uuid4().hex}"
     try:
-        shutil.rmtree(dest, ignore_errors=True)
-        os.rename(tmp, dest)
+        write(tmp)
+        os.rename(tmp, path)
     except OSError:
-        # a concurrent builder renamed its complete build first
+        if not os.path.isdir(path):
+            raise  # a failed build, not a lost race
+    finally:
         shutil.rmtree(tmp, ignore_errors=True)
+    return path
 
 
 @query(
@@ -254,7 +237,6 @@ def src_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Deterministic synthetic tile content shared with the DuckDB twin:
 # repeat md5(src_path) k times, k = ((ascii(4th md5 char) + 7) % 5) + 1.
 _K_SQL = "((ascii(substring(md5(src_path), 4, 1)) + 7) % 5) + 1"
-_PRESENT_SQL = "substring(md5(src_path), 1, 1) NOT IN ('0','1','2')"
 
 
 def _tile_files_df(spark: SparkSession, max_level: int = 5) -> DataFrame:
@@ -262,59 +244,40 @@ def _tile_files_df(spark: SparkSession, max_level: int = 5) -> DataFrame:
         tile_grid(spark)
         .where(F.col("level") <= max_level)
         .withColumn("src_path", src_path_col())
-        .where(F.expr(_PRESENT_SQL))
+        .where(F.expr(PRESENT_SQL))
     )
     return g.withColumn("k", F.expr(_K_SQL)).withColumn(
         "content_str", F.repeat(F.md5(F.col("src_path").cast("binary")), F.col("k"))
     )
 
 
-def materialize_tile_cache(spark: SparkSession, base: str) -> None:
-    """Write the level-5 present tiles as REAL files in the ArcGIS
-    exploded-cache layout (src/Program.cs:99-100), once. Content is the
-    deterministic md5-repeat string, so every engine can recompute it.
-    The marker records the generating formula: if the content recipe
-    changes, the cache rebuilds instead of serving stale tiles."""
+def tile_cache(spark: SparkSession) -> str:
+    """The level-5 present tiles as REAL files in the ArcGIS
+    exploded-cache layout (src/Program.cs:99-100), built once. Content
+    is the deterministic md5-repeat string, so every engine can
+    recompute it. The recipe covers EVERY input that shapes the file
+    set — the key/present formulas AND the grid definition (extent +
+    level-5 bounds) — so a change to any of them names a new cache."""
     from tile_etl_spark.tiles.grid import EXTENT, level_bounds
 
-    marker = os.path.join(base, "_DONE")
-    # the recipe hash covers EVERY input that shapes the file set: the
-    # key/present formulas AND the grid definition (extent + per-level
-    # bounds) — a bounds change must rebuild, or src_binary would list
-    # a stale file set under a current marker
-    recipe = hashlib.md5(
-        f"{_K_SQL}|{_PRESENT_SQL}|{EXTENT}|{level_bounds(5)}|v1".encode()
-    ).hexdigest()
-    if marker_current(marker, recipe):
-        return
-    import shutil
+    def write(tmp: str) -> None:
+        rows = _tile_files_df(spark).select("src_path", "content_str").collect()
+        for r in rows:
+            p = os.path.join(tmp, r["src_path"])
+            os.makedirs(os.path.dirname(p), exist_ok=True)
+            with open(p, "wb") as f:
+                f.write(r["content_str"].encode("ascii"))
 
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base, exist_ok=True)
-    rows = _tile_files_df(spark).select("src_path", "content_str").collect()
-    for r in rows:
-        p = os.path.join(base, r["src_path"])
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        with open(p, "wb") as f:
-            f.write(r["content_str"].encode("ascii"))
-    write_marker(marker, recipe)
+    return artifact(
+        "tiles_cache",
+        [],
+        f"{_K_SQL}|{PRESENT_SQL}|{EXTENT}|{level_bounds(5)}|v1",
+        write,
+    )
 
 
-from tile_etl_spark.tiles.grid import grid5_bounds_values_sql
-
-_GRID5_ORACLE = f"""
-    WITH bounds(level, r0, r1, c0, c1) AS {grid5_bounds_values_sql()},
-    rows_ AS (
-      SELECT level, unnest(generate_series(r0, r1)) AS "row", c0, c1
-      FROM bounds
-    ),
-    grid AS (
-      SELECT CAST(level AS INT) AS level,
-             CAST("row" AS INT) AS "row",
-             CAST(unnest(generate_series(c0, c1)) AS INT) AS col
-      FROM rows_
-    ),
-    paths AS (
+_GRID5_ORACLE = grid_oracle_cte((5, 5)) + """
+    , paths AS (
       SELECT printf('L%02d/R%s/C%s.jpg', level,
                     right(printf('%016x', CAST("row" AS BIGINT)), 8),
                     right(printf('%016x', CAST(col AS BIGINT)), 8)) AS src_path
@@ -330,7 +293,7 @@ _GRID5_ORACLE = f"""
     SELECT src_path,
            CAST(32 * ({_K_SQL}) AS BIGINT) AS length,
            md5(repeat(md5(src_path), {_K_SQL})) AS content_md5
-    FROM paths WHERE {_PRESENT_SQL}
+    FROM paths WHERE {PRESENT_SQL}
     """,
 )
 def src_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -341,8 +304,7 @@ def src_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunes non-tiles at listing time. H-checked: path, byte length and
     content md5 all recomputed by DuckDB from the shared formula."""
     ensure_session_determinism(spark)
-    base = _art("tiles_cache")
-    materialize_tile_cache(spark, base)
+    base = tile_cache(spark)
     files = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.jpg")
@@ -363,23 +325,22 @@ def _events_partitioned(spark: SparkSession, sf_dir: str) -> str:
     canonical lake layout, built once per source fingerprint and shared
     by the static (q_partition_prune) and dynamic (q_join_dpp) pruning
     qids."""
-    e = load(spark, sf_dir, "events")
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    fpr = source_fingerprint(os.path.join(sf_dir, "events.parquet"))
-    # fingerprint in the NAME (like io._scan_path): two sf_dirs sharing
-    # a basename, or an alternating old/new fixture, get distinct dirs
-    # instead of in-place rebuilds that stale-ify held DataFrames
-    out = _art(f"events_by_date_{tag}_{fpr[:12]}")
-    marker = os.path.join(out, "_DONE")
-    if not marker_current(marker, fpr):
-        publish_parquet(
-            e.withColumn("event_date", F.col("ts").cast("date"))
-            .repartition("event_date"),
-            out,
-            partition_by=["event_date"],
+
+    def write(tmp: str) -> None:
+        (
+            load(spark, sf_dir, "events")
+            .withColumn("event_date", F.col("ts").cast("date"))
+            .repartition("event_date")
+            .write.partitionBy("event_date")
+            .parquet(tmp)
         )
-        write_marker(marker, fpr)
-    return out
+
+    return artifact(
+        "events_by_date",
+        [os.path.join(sf_dir, "events.parquet")],
+        "partitionBy=event_date",
+        write,
+    )
 
 
 @query(
@@ -455,20 +416,20 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan-side build relation, not a LocalRelation."""
     ensure_session_determinism(spark)
     fact = spark.read.parquet(_events_partitioned(spark, sf_dir))
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    fpr = source_fingerprint(os.path.join(sf_dir, "events.parquet"))
-    dim_dir = _art(f"date_dim_{tag}_{fpr[:12]}")
-    marker = os.path.join(dim_dir, "_DONE")
-    if not marker_current(marker, fpr):
-        publish_parquet(
+
+    def write(tmp: str) -> None:
+        (
             load(spark, sf_dir, "events")
             .select(F.col("ts").cast("date").alias("event_date"))
             .distinct()
             .withColumn("dom", F.dayofmonth("event_date"))
-            .coalesce(1),
-            dim_dir,
+            .coalesce(1)
+            .write.parquet(tmp)
         )
-        write_marker(marker, fpr)
+
+    dim_dir = artifact(
+        "date_dim", [os.path.join(sf_dir, "events.parquet")], "dom", write
+    )
     dim = spark.read.parquet(dim_dir).where(F.col("dom") <= 5)
     return (
         fact.join(F.broadcast(dim), "event_date")
@@ -538,7 +499,7 @@ _PREV_STALE_SQL = "ascii(substring(md5(src_path), 5, 1)) % 7 = 0"
     + f"""
     , cur AS (
       SELECT src_path, md5(repeat(md5(src_path), {_K_SQL})) AS h
-      FROM paths WHERE {_PRESENT_SQL}
+      FROM paths WHERE {PRESENT_SQL}
     ),
     prev AS (
       SELECT src_path,
@@ -639,37 +600,25 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The two generations are deterministic halves of orders (orderkey
     parity), so the oracle recomputes the identical union from the
-    source table. Artifacts rebuild per source fingerprint."""
+    source table. The two-generation artifact is built once per source
+    fingerprint and published as ONE rename."""
     ensure_session_determinism(spark)
-    o = load(spark, sf_dir, "orders")
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    fpr = source_fingerprint(os.path.join(sf_dir, "orders.parquet"))
-    base = _art(f"orders_evolving_{tag}_{fpr[:12]}")
-    marker = os.path.join(base, "_DONE")
-    if not marker_current(marker, fpr):
-        # two-generation artifact published atomically as ONE rename
-        import shutil as _shutil
-        import uuid as _uuid
 
-        tmp = f"{base}.build-{_uuid.uuid4().hex[:8]}"
-        (
-            o.where(F.col("o_orderkey") % 2 == 0)
-            .select("o_orderkey", "o_totalprice")
-            .write.mode("overwrite")
-            .parquet(os.path.join(tmp, "gen=1"))
-        )
-        (
-            o.where(F.col("o_orderkey") % 2 == 1)
-            .select("o_orderkey", "o_totalprice", "o_orderpriority")
-            .write.mode("overwrite")
-            .parquet(os.path.join(tmp, "gen=2"))
-        )
-        try:
-            _shutil.rmtree(base, ignore_errors=True)
-            os.rename(tmp, base)
-        except OSError:
-            _shutil.rmtree(tmp, ignore_errors=True)
-        write_marker(marker, fpr)
+    def write(tmp: str) -> None:
+        o = load(spark, sf_dir, "orders")
+        o.where(F.col("o_orderkey") % 2 == 0).select(
+            "o_orderkey", "o_totalprice"
+        ).write.parquet(os.path.join(tmp, "gen=1"))
+        o.where(F.col("o_orderkey") % 2 == 1).select(
+            "o_orderkey", "o_totalprice", "o_orderpriority"
+        ).write.parquet(os.path.join(tmp, "gen=2"))
+
+    base = artifact(
+        "orders_evolving",
+        [os.path.join(sf_dir, "orders.parquet")],
+        "gen1=even-no-priority,gen2=odd",
+        write,
+    )
     merged = (
         spark.read.option("mergeSchema", True)
         .option("recursiveFileLookup", True)
@@ -754,6 +703,20 @@ def src_csv_badrecords(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _events_fragmented(spark: SparkSession, sf_dir: str) -> str:
+    """``events`` as 64 splinter files: sink_compact's small-file
+    problem, built once per source fingerprint. The fragmentation is
+    test SETUP (a real pipeline inherits its fragments from the ingest);
+    the compaction rewrite is the operator and always runs."""
+
+    def write(tmp: str) -> None:
+        load(spark, sf_dir, "events").repartition(64).write.parquet(tmp)
+
+    return artifact(
+        "events_fragmented", [os.path.join(sf_dir, "events.parquet")], "n64", write
+    )
+
+
 @query(
     "sink_compact",
     oracle="""
@@ -777,21 +740,10 @@ def sink_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (compact yesterday's directory, not the table) — the same plan
     applies under a partition predicate."""
     ensure_session_determinism(spark)
-    e = load(spark, sf_dir, "events")
-    fpr = source_fingerprint(os.path.join(sf_dir, "events.parquet"))
-    frag = _art(f"events_fragmented_{fpr[:12]}")
     compacted = _art("events_compacted")
-    # produce the small-file problem once per fixture: 64 splinters.
-    # The fragmentation is test SETUP (a real pipeline inherits its
-    # fragments from the ingest), so it's fingerprint-cached; the
-    # compaction rewrite below is the operator and always runs.
-    marker = os.path.join(frag, "_DONE")
-    if not marker_current(marker, fpr):
-        publish_parquet(e.repartition(64), frag)
-        write_marker(marker, fpr)
     # the compaction job: few range-clustered files, bounded size
     (
-        spark.read.parquet(frag)
+        spark.read.parquet(_events_fragmented(spark, sf_dir))
         .repartitionByRange(4, "event_id")
         .write.mode("overwrite")
         .option("maxRecordsPerFile", 2_000_000)
@@ -894,8 +846,6 @@ def src_python_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
 # purge hook removes a dead session's on-disk checkpoint tree (its
 # memory-table rows died with the session).
 def _pyds_purge(pair: tuple[str, str]) -> None:
-    import shutil
-
     shutil.rmtree(pair[1], ignore_errors=True)
 
 
@@ -925,8 +875,6 @@ def src_python_ds_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-for-row — offset bookkeeping can neither drop nor duplicate a
     level."""
     ensure_session_determinism(spark)
-    import uuid as _uuid
-
     from pyspark.sql.datasource import (
         DataSource,
         DataSourceStreamReader,
@@ -994,15 +942,13 @@ def src_python_ds_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # most ONE set is ever live.
     prev = _pyds_pop_prev(spark)
     if prev is not None:
-        import shutil as _shutil
-
         prev_name, prev_ckpt = prev
         try:
             spark.catalog.dropTempView(prev_name)
         except Exception:
             pass
-        _shutil.rmtree(prev_ckpt, ignore_errors=True)
-    name = "pyds_" + _uuid.uuid4().hex[:8]
+        shutil.rmtree(prev_ckpt, ignore_errors=True)
+    name = "pyds_" + uuid.uuid4().hex[:8]
     ckpt = _art(f"checkpoints_{name}")
     q = (
         spark.readStream.format("tile_manifest_stream")

@@ -29,6 +29,7 @@ from tile_etl_spark.streaming.replay import (
     replay_dir_with_flush,
     run_to_table,
 )
+from tile_etl_spark.tiles.grid import PRESENT_SQL, grid_oracle_cte
 
 
 @query("s_tumbling")
@@ -586,19 +587,9 @@ def s_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "s_tile_ingest",
-    oracle="""
-    WITH bounds(level, r0, r1, c0, c1) AS (VALUES (5, 4, 20, -2, 14)),
-    rows_ AS (
-      SELECT level, unnest(generate_series(r0, r1)) AS "row", c0, c1
-      FROM bounds
-    ),
-    grid AS (
-      SELECT CAST(level AS INT) AS level,
-             CAST("row" AS INT) AS "row",
-             CAST(unnest(generate_series(c0, c1)) AS INT) AS col
-      FROM rows_
-    ),
-    tiles AS (
+    oracle=grid_oracle_cte((5, 5))
+    + f"""
+    , tiles AS (
       SELECT level, "row", col,
              printf('L%02d/R%s/C%s.jpg', level,
                     right(printf('%016x', CAST("row" AS BIGINT)), 8),
@@ -611,7 +602,7 @@ def s_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
              32 * (((ascii(substring(md5(src_path), 4, 1)) + 7) % 5) + 1)
                AS length
       FROM tiles
-      WHERE substring(md5(src_path), 1, 1) NOT IN ('0','1','2')
+      WHERE {PRESENT_SQL}
     )
     SELECT level, CAST(((col % 4) + 4) % 4 AS INT) AS col_bucket,
            CAST(count(*) AS BIGINT) AS n_tiles,
@@ -640,11 +631,10 @@ def s_tile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     to hash-match. availableNow drains the backlog; the groupBy runs in
     complete mode over the drained replay."""
     ensure_session_determinism(spark)
-    from tile_etl_spark.sources.files import materialize_tile_cache, _art
+    from tile_etl_spark.sources.files import tile_cache
     from tile_etl_spark.tiles.grid import parse_src_path
 
-    base = _art("tiles_cache")
-    materialize_tile_cache(spark, base)
+    base = tile_cache(spark)
     schema = (
         "path STRING, modificationTime TIMESTAMP, length BIGINT, "
         "content BINARY"

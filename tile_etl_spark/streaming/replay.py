@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tile_etl_spark.io import SessionKeyed, load
+from tile_etl_spark.sources import files
 
 EVENTS_SCHEMA = (
     "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
@@ -25,9 +26,7 @@ N_CHUNKS = 8
 
 
 def _art_root() -> str:
-    from tile_etl_spark.sources.files import ART_DIR
-
-    return ART_DIR
+    return files.ART_DIR
 
 
 def _write_chunk(df: DataFrame, base: str, i: int) -> None:
@@ -43,65 +42,44 @@ def _write_chunk(df: DataFrame, base: str, i: int) -> None:
 
 
 def replay_dir(spark: SparkSession, sf_dir: str, n_chunks: int = N_CHUNKS) -> str:
-    """Write events as n time-ordered parquet chunk files (idempotent).
+    """Events as n time-ordered parquet chunk files, built once per
+    source fingerprint and chunk count (sources/files.artifact).
 
     Chunk i holds the i-th quantile of the ts order; file mtimes
     ascend so the file source processes them oldest-first.
     """
-    from tile_etl_spark.sources.files import (
-        marker_current,
-        source_fingerprint,
-        write_marker,
-    )
+    def write(tmp: str) -> None:
+        # EXACT percentile bounds: percentile_approx's Greenwald-Khanna
+        # merge is shuffle-arrival-order dependent past its accuracy
+        # parameter, so two builds could cut chunks differently. The
+        # exact aggregate is deterministic; this is a once-per-source
+        # fixture builder, so the exact sort cost is fine (a 100 TB
+        # replay builder would repartitionByRange instead). Source
+        # persisted so the n_chunks filtered writes scan it once.
+        e = load(spark, sf_dir, "events").persist()
+        fracs = ",".join(str((i + 1) / n_chunks) for i in range(n_chunks - 1))
+        bounds = e.selectExpr(
+            f"percentile(unix_micros(ts), array({fracs})) AS b"
+        ).first()["b"]
+        lo = None
+        for i in range(n_chunks):
+            hi = bounds[i] if i < n_chunks - 1 else None
+            us = F.unix_micros("ts")
+            chunk = e
+            if lo is not None:
+                chunk = chunk.where(us > lo)
+            if hi is not None:
+                chunk = chunk.where(us <= hi)
+            _write_chunk(chunk, tmp, i)
+            lo = hi
+        e.unpersist()
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(_art_root(), f"events_stream_{tag}")
-    marker = os.path.join(base, "_DONE")
-    # keyed on the source parquet's size+mtime PLUS a recipe token: a
-    # regenerated fixture OR a chunking-recipe change rebuilds the
-    # replay chunks instead of silently streaming stale data.
-    fpr = (
-        source_fingerprint(os.path.join(sf_dir, "events.parquet"))
-        + ":exact-pct-v2"
+    return files.artifact(
+        "events_stream",
+        [os.path.join(sf_dir, "events.parquet")],
+        f"exact-pct-v2:n{n_chunks}",
+        write,
     )
-    if marker_current(marker, fpr):
-        return base
-    # EXACT percentile bounds: percentile_approx's Greenwald-Khanna
-    # merge is shuffle-arrival-order dependent past its accuracy
-    # parameter, so two rebuilds could cut chunks differently (and a
-    # concurrent-rebuild race could interleave two cuts). The exact
-    # aggregate is deterministic; this is a once-per-fingerprint
-    # fixture builder, so the exact sort cost is fine (a 100 TB replay
-    # builder would repartitionByRange instead). Source persisted so
-    # the n_chunks filtered writes scan it once, and the chunk set is
-    # published ATOMICALLY (tmp sibling + rename, the publish_parquet
-    # discipline) so a concurrent builder can never commit a mixed cut.
-    tmp = f"{base}.build-{uuid.uuid4().hex[:8]}"
-    os.makedirs(tmp, exist_ok=True)
-    e = load(spark, sf_dir, "events").persist()
-    fracs = ",".join(str((i + 1) / n_chunks) for i in range(n_chunks - 1))
-    bounds = e.selectExpr(
-        f"percentile(unix_micros(ts), array({fracs})) AS b"
-    ).first()["b"]
-    lo = None
-    for i in range(n_chunks):
-        hi = bounds[i] if i < n_chunks - 1 else None
-        us = F.unix_micros("ts")
-        chunk = e
-        if lo is not None:
-            chunk = chunk.where(us > lo)
-        if hi is not None:
-            chunk = chunk.where(us <= hi)
-        _write_chunk(chunk, tmp, i)
-        lo = hi
-    e.unpersist()
-    try:
-        shutil.rmtree(base, ignore_errors=True)
-        os.rename(tmp, base)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    write_marker(marker, fpr)
-    return base
 
 
 def read_stream(spark: SparkSession, base: str) -> DataFrame:
@@ -177,53 +155,38 @@ def replay_dir_with_flush(
     new data (or punctuation heartbeats) moves the watermark.
     """
     base = replay_dir(spark, sf_dir, n_chunks)
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(_art_root(), f"events_stream_flush_{tag}")
-    marker = os.path.join(out, "_DONE")
-    from tile_etl_spark.sources.files import (
-        marker_current,
-        source_fingerprint,
-        write_marker,
-    )
 
-    fpr = (
-        source_fingerprint(os.path.join(sf_dir, "events.parquet"))
-        + ":exact-pct-v2"
+    def write(tmp: str) -> None:
+        os.makedirs(tmp)
+        chunks = sorted(
+            f for f in os.listdir(base) if f.endswith(".parquet")
+        )
+        for i, f in enumerate(chunks):
+            dst = os.path.join(tmp, f)
+            shutil.copy2(os.path.join(base, f), dst)
+            os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+        e = load(spark, sf_dir, "events")
+        flush = e.agg(F.max("ts").alias("mx")).select(
+            F.explode(
+                F.array(F.lit("click"), F.lit("purchase"))
+            ).alias("event_type"),
+            (F.col("mx") + F.expr("INTERVAL 3 HOURS")).alias("ts"),
+        ).select(
+            F.lit(-1).cast("bigint").alias("event_id"),
+            "ts",
+            F.lit(-1).cast("bigint").alias("user_id"),
+            "event_type",
+            F.lit(0.0).alias("value"),
+            F.lit("{}").alias("props"),
+        )
+        _write_chunk(flush, tmp, len(chunks))
+
+    return files.artifact(
+        "events_stream_flush",
+        [os.path.join(sf_dir, "events.parquet")],
+        f"exact-pct-v2:n{n_chunks}:flush-3h",
+        write,
     )
-    if marker_current(marker, fpr):
-        return out
-    # atomic publish, like replay_dir
-    tmp = f"{out}.build-{uuid.uuid4().hex[:8]}"
-    os.makedirs(tmp, exist_ok=True)
-    chunks = sorted(
-        f for f in os.listdir(base) if f.endswith(".parquet")
-    )
-    for i, f in enumerate(chunks):
-        dst = os.path.join(tmp, f)
-        shutil.copy2(os.path.join(base, f), dst)
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-    e = load(spark, sf_dir, "events")
-    flush = e.agg(F.max("ts").alias("mx")).select(
-        F.explode(
-            F.array(F.lit("click"), F.lit("purchase"))
-        ).alias("event_type"),
-        (F.col("mx") + F.expr("INTERVAL 3 HOURS")).alias("ts"),
-    ).select(
-        F.lit(-1).cast("bigint").alias("event_id"),
-        "ts",
-        F.lit(-1).cast("bigint").alias("user_id"),
-        "event_type",
-        F.lit(0.0).alias("value"),
-        F.lit("{}").alias("props"),
-    )
-    _write_chunk(flush, tmp, len(chunks))
-    try:
-        shutil.rmtree(out, ignore_errors=True)
-        os.rename(tmp, out)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    write_marker(marker, fpr)
-    return out
 
 
 DOCS_SCHEMA = "doc_id BIGINT, text STRING"
@@ -236,56 +199,43 @@ def replay_docs_dir(
     sources: tuple[str, ...],
     n_chunks: int = N_DOC_CHUNKS,
 ) -> str:
-    """Write the given sources' documents as n doc_id-ordered parquet
-    chunks (idempotent, fingerprint-keyed like replay_dir) — the file
+    """The given sources' documents as n doc_id-ordered parquet chunks,
+    built once per source fingerprint (like replay_dir) — the file
     replay standing in for a Kafka topic of newly crawled documents."""
-    from tile_etl_spark.sources.files import (
-        marker_current,
-        source_fingerprint,
-        write_marker,
-    )
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(
-        _art_root(), f"docs_stream_{tag}_{'_'.join(sorted(sources))}"
-    )
-    marker = os.path.join(base, "_DONE")
-    fpr = source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    if marker_current(marker, fpr):
-        return base
-    tmp = f"{base}.build-{uuid.uuid4().hex[:8]}"
-    os.makedirs(tmp, exist_ok=True)
     from pyspark.sql import Window
 
-    # one pass derives the chunk index (ntile over doc_id order — the
-    # batch side is small by definition, so the single-partition window
-    # is fine in this fixture builder), cached so the n_chunks filtered
-    # writes don't re-scan the source; no driver-side id collect
-    d = (
-        load(spark, sf_dir, "documents")
-        .where(F.col("source").isin(*sources))
-        .select(
-            "doc_id",
-            "text",
-            (F.ntile(n_chunks).over(Window.orderBy("doc_id")) - 1).alias(
-                "chunk_id"
-            ),
+    def write(tmp: str) -> None:
+        os.makedirs(tmp)
+        # one pass derives the chunk index (ntile over doc_id order —
+        # the batch side is small by definition, so the
+        # single-partition window is fine in this fixture builder),
+        # cached so the n_chunks filtered writes don't re-scan the
+        # source; no driver-side id collect
+        d = (
+            load(spark, sf_dir, "documents")
+            .where(F.col("source").isin(*sources))
+            .select(
+                "doc_id",
+                "text",
+                (F.ntile(n_chunks).over(Window.orderBy("doc_id")) - 1).alias(
+                    "chunk_id"
+                ),
+            )
+            .persist()
         )
-        .persist()
+        n_used = d.select("chunk_id").distinct().count()
+        for i in range(min(n_chunks, n_used)):
+            _write_chunk(
+                d.where(F.col("chunk_id") == i).drop("chunk_id"), tmp, i
+            )
+        d.unpersist()
+
+    return files.artifact(
+        "docs_stream",
+        [os.path.join(sf_dir, "documents.parquet")],
+        f"{','.join(sorted(sources))}:n{n_chunks}",
+        write,
     )
-    n_used = d.select("chunk_id").distinct().count()
-    for i in range(min(n_chunks, n_used)):
-        _write_chunk(
-            d.where(F.col("chunk_id") == i).drop("chunk_id"), tmp, i
-        )
-    d.unpersist()
-    try:
-        shutil.rmtree(base, ignore_errors=True)
-        os.rename(tmp, base)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    write_marker(marker, fpr)
-    return base
 
 
 def read_docs_stream(spark: SparkSession, base: str) -> DataFrame:

@@ -13,32 +13,20 @@ isolation; this qid verifies the composition.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tile_etl_spark.registry import query
-from tile_etl_spark.tiles.grid import grid5_bounds_values_sql
+from tile_etl_spark.tiles.grid import PRESENT_SQL, grid_oracle_cte
 from tile_etl_spark.session import ensure_session_determinism
 from tile_etl_spark.tiles.sink import objectstore_sink
 
 
 @query(
     "q_tile_etl_e2e",
-    oracle=f"""
-    WITH bounds(level, r0, r1, c0, c1) AS {grid5_bounds_values_sql()},
-    rows_ AS (
-      SELECT level, unnest(generate_series(r0, r1)) AS "row", c0, c1
-      FROM bounds
-    ),
-    grid AS (
-      SELECT CAST(level AS INT) AS level,
-             CAST("row" AS INT) AS "row",
-             CAST(unnest(generate_series(c0, c1)) AS INT) AS col
-      FROM rows_
-    ),
-    tiles AS (
+    oracle=grid_oracle_cte((5, 5))
+    + f"""
+    , tiles AS (
       SELECT level, "row", col,
              printf('L%02d/R%s/C%s.jpg', level,
                     right(printf('%016x', CAST("row" AS BIGINT)), 8),
@@ -51,7 +39,7 @@ from tile_etl_spark.tiles.sink import objectstore_sink
              CAST(32 * (((ascii(substring(md5(src_path), 4, 1)) + 7) % 5) + 1)
                   AS BIGINT) AS n_bytes
       FROM tiles
-      WHERE substring(md5(src_path), 1, 1) NOT IN ('0','1','2')
+      WHERE {PRESENT_SQL}
     )
     SELECT level,
            CAST(count(*) FILTER (WHERE substring(md5(object_key), 1, 1) <> '0')
@@ -71,12 +59,11 @@ def q_tile_etl_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes uploads, dead letters and byte volume from the
     shared deterministic formulas."""
     ensure_session_determinism(spark)
-    from tile_etl_spark.sources.files import ART_DIR, materialize_tile_cache
+    from tile_etl_spark.sources.files import _art, tile_cache
     from tile_etl_spark.tiles.grid import parse_src_path
 
-    cache = os.path.join(ART_DIR, "tiles_cache")
-    materialize_tile_cache(spark, cache)
-    store = os.path.join(ART_DIR, "object_store_e2e")
+    cache = tile_cache(spark)
+    store = _art("object_store_e2e")
 
     files = (
         spark.read.format("binaryFile")

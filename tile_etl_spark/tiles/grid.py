@@ -56,15 +56,6 @@ def level_bounds(
     return start_row, end_row, start_col, end_col
 
 
-def grid5_bounds_values_sql() -> str:
-    """DuckDB VALUES clause of the level-5 bounds DERIVED from
-    level_bounds() — oracles that hardcoded (4, 20, -2, 14) would keep
-    agreeing with a stale tile set if the grid definition changed,
-    masking exactly the drift the artifact recipe markers catch."""
-    r0, r1, c0, c1 = level_bounds(5)
-    return f"(VALUES (5, {r0}, {r1}, {c0}, {c1}))"
-
-
 def grid_counts() -> dict[int, int]:
     """Per-level candidate-cell counts (golden values in BASELINE.md)."""
     out = {}
@@ -185,11 +176,21 @@ def tile_grid(
     return grid
 
 
-def _grid_oracle_cte() -> str:
-    """DuckDB twin: the same bounds as literal VALUES + generate_series."""
+def grid_oracle_cte(
+    levels: tuple[int, int] = LEVELS,
+    extent: tuple[float, float, float, float] = EXTENT,
+    delta: float = WEB_MERCATOR_DELTA,
+) -> str:
+    """DuckDB twin of tile_grid: ``WITH bounds → rows_ → grid`` over the
+    per-level bounds DERIVED from level_bounds() and inlined as VALUES
+    literals. Every grid oracle starts here, so a change to the grid
+    definition reaches every twin (a hard-coded bounds literal would
+    keep agreeing with a stale tile set)."""
     values = ", ".join(
-        "({}, {}, {}, {}, {})".format(lvl, *level_bounds(lvl))
-        for lvl in range(LEVELS[0], LEVELS[1] + 1)
+        "({}, {}, {}, {}, {})".format(
+            lvl, *level_bounds(lvl, extent=extent, delta=delta)
+        )
+        for lvl in range(levels[0], levels[1] + 1)
     )
     return f"""
     WITH bounds(level, r0, r1, c0, c1) AS (VALUES {values}),
@@ -267,7 +268,7 @@ def parse_src_path(path_col: F.Column) -> tuple[F.Column, F.Column, F.Column]:
 
 @query(
     "q_tile_grid",
-    oracle=_grid_oracle_cte()
+    oracle=grid_oracle_cte()
     + 'SELECT level, "row", col FROM grid',
 )
 def q_tile_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -278,7 +279,7 @@ def q_tile_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_tile_path",
-    oracle=_grid_oracle_cte()
+    oracle=grid_oracle_cte()
     + f"""
     SELECT level, "row", col,
            printf('L%02d/R%s/C%s.jpg', level,
@@ -306,32 +307,9 @@ def q_tile_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _s3_oracle_cte() -> str:
-    values = ", ".join(
-        "({}, {}, {}, {}, {})".format(
-            lvl,
-            *level_bounds(lvl, extent=S3_EXTENT, delta=S3_DELTA),
-        )
-        for lvl in range(S3_LEVELS[0], S3_LEVELS[1] + 1)
-    )
-    return f"""
-    WITH bounds(level, r0, r1, c0, c1) AS (VALUES {values}),
-    rows_ AS (
-      SELECT level, unnest(generate_series(r0, r1)) AS "row", c0, c1
-      FROM bounds
-    ),
-    grid AS (
-      SELECT CAST(level AS INT) AS level,
-             CAST("row" AS INT) AS "row",
-             CAST(unnest(generate_series(c0, c1)) AS INT) AS col
-      FROM rows_
-    )
-    """
-
-
 @query(
     "q_tile_s3_variant",
-    oracle=_s3_oracle_cte()
+    oracle=grid_oracle_cte(S3_LEVELS, S3_EXTENT, S3_DELTA)
     + f"""
     SELECT level, "row", col,
            printf('L%02d/R%s/C%s.png', level,
@@ -366,7 +344,7 @@ def q_tile_s3_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
 # engines agree on md5 of the same UTF-8 string. ~81% of cells present
 # (md5 first hex digit not in 0..2), mirroring the existence filter's
 # purpose (P:102-106): most cells exist, some don't.
-_PRESENT_SQL = "substring(md5(src_path), 1, 1) NOT IN ('0','1','2')"
+PRESENT_SQL = "substring(md5(src_path), 1, 1) NOT IN ('0','1','2')"
 _TILE_LEN_SQL = (
     "((ascii(substring(md5(src_path), 2, 1)) * 256"
     " + ascii(substring(md5(src_path), 3, 1))) % 1801) + 200"
@@ -401,7 +379,7 @@ def tile_manifest(spark: SparkSession) -> DataFrame:
     g = tile_grid(spark, cells_per_task=5_000).withColumn(
         "src_path", src_path_col()
     )
-    m = g.where(F.expr(_PRESENT_SQL)).withColumn(
+    m = g.where(F.expr(PRESENT_SQL)).withColumn(
         "tile_len", F.expr(_TILE_LEN_SQL).cast("int")
     )
     # Persisted (bounded: one row per PRESENT tile of the reference
@@ -416,7 +394,7 @@ def tile_manifest(spark: SparkSession) -> DataFrame:
 
 @query(
     "q_tile_manifest_semi",
-    oracle=_grid_oracle_cte()
+    oracle=grid_oracle_cte()
     + f"""
     , paths AS (
       SELECT level, "row", col,
@@ -425,7 +403,7 @@ def tile_manifest(spark: SparkSession) -> DataFrame:
                     {_HEX8_DUCK.format(c='col')}) AS src_path
       FROM grid
     )
-    SELECT level, "row", col FROM paths WHERE {_PRESENT_SQL}
+    SELECT level, "row", col FROM paths WHERE {PRESENT_SQL}
     """,
 )
 def q_tile_manifest_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -443,7 +421,7 @@ def q_tile_manifest_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_tile_stats",
-    oracle=_grid_oracle_cte()
+    oracle=grid_oracle_cte()
     + f"""
     , paths AS (
       SELECT level,
@@ -454,7 +432,7 @@ def q_tile_manifest_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     manifest AS (
       SELECT level, src_path, {_TILE_LEN_SQL} AS tile_len
-      FROM paths WHERE {_PRESENT_SQL}
+      FROM paths WHERE {PRESENT_SQL}
     )
     SELECT level,
            CAST(count(*) AS BIGINT) AS tile_count,
@@ -559,7 +537,7 @@ def q_tile_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_tile_pyramid",
-    oracle=_grid_oracle_cte()
+    oracle=grid_oracle_cte()
     + """
     SELECT CAST(level - 1 AS INT) AS level,
            CAST("row" // 2 AS INT) AS row,
@@ -619,7 +597,7 @@ def _morton_sql(row: str, col: str, bits: int = 12) -> str:
 
 @query(
     "q_tile_zorder",
-    oracle=_grid_oracle_cte()
+    oracle=grid_oracle_cte()
     + f"""
     SELECT level, "row", col,
            CAST({_morton_sql('("row" + 16)', '(col + 16)')} AS BIGINT)
@@ -662,7 +640,7 @@ def q_tile_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_tile_neighbors",
-    oracle=_grid_oracle_cte()
+    oracle=grid_oracle_cte()
     + f"""
     , paths AS (
       SELECT level, "row", col,
@@ -672,7 +650,7 @@ def q_tile_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM grid WHERE level <= 7
     ),
     present AS (
-      SELECT level, "row", col FROM paths WHERE {_PRESENT_SQL}
+      SELECT level, "row", col FROM paths WHERE {PRESENT_SQL}
     ),
     offsets(dr, dc) AS (VALUES (-1,-1), (-1,0), (-1,1), (0,-1),
                                (0,1), (1,-1), (1,0), (1,1)),
@@ -713,7 +691,7 @@ def q_tile_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         tile_grid(spark)
         .where(F.col("level") <= 7)
         .withColumn("src_path", src_path_col())
-        .where(F.expr(_PRESENT_SQL))
+        .where(F.expr(PRESENT_SQL))
         .select("level", "row", "col")
     )
     offsets = present.sparkSession.createDataFrame(
@@ -891,7 +869,7 @@ def _quaddec_sql(which: str) -> str:
 
 @query(
     "q_tile_quadkey",
-    oracle=_grid_oracle_cte()
+    oracle=grid_oracle_cte()
     + f"""
     , qk AS (
       SELECT level, "row", col,
@@ -944,7 +922,7 @@ def q_tile_quadkey(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_tile_knn",
-    oracle=_grid_oracle_cte()
+    oracle=grid_oracle_cte()
     + f"""
     , paths AS (
       SELECT level, "row", col,
@@ -954,7 +932,7 @@ def q_tile_quadkey(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM grid WHERE level = 7
     ),
     present AS (
-      SELECT level, "row", col FROM paths WHERE {_PRESENT_SQL}
+      SELECT level, "row", col FROM paths WHERE {PRESENT_SQL}
     ),
     offsets(dr, dc) AS (
       SELECT r.r, c.c
@@ -1010,7 +988,7 @@ def q_tile_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         tile_grid(spark)
         .where(F.col("level") == 7)
         .withColumn("src_path", src_path_col())
-        .where(F.expr(_PRESENT_SQL))
+        .where(F.expr(PRESENT_SQL))
         .select("level", "row", "col")
     )
     offsets = present.sparkSession.createDataFrame(

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tile_etl_spark.registry import query
-from tile_etl_spark.tiles.grid import grid5_bounds_values_sql
+from tile_etl_spark.tiles.grid import PRESENT_SQL, grid_oracle_cte
 from tile_etl_spark.session import ensure_session_determinism
 
 # Deterministic injected PUT failure: ~1/16 of keys, recomputable by
@@ -148,19 +148,9 @@ def objectstore_sink(
 
 @query(
     "sink_objectstore",
-    oracle=f"""
-    WITH bounds(level, r0, r1, c0, c1) AS {grid5_bounds_values_sql()},
-    rows_ AS (
-      SELECT level, unnest(generate_series(r0, r1)) AS "row", c0, c1
-      FROM bounds
-    ),
-    grid AS (
-      SELECT CAST(level AS INT) AS level,
-             CAST("row" AS INT) AS "row",
-             CAST(unnest(generate_series(c0, c1)) AS INT) AS col
-      FROM rows_
-    ),
-    tiles AS (
+    oracle=grid_oracle_cte((5, 5))
+    + f"""
+    , tiles AS (
       SELECT level, "row", col,
              printf('L%02d/R%s/C%s.jpg', level,
                     right(printf('%016x', CAST("row" AS BIGINT)), 8),
@@ -170,7 +160,7 @@ def objectstore_sink(
     ),
     manifest AS (
       SELECT object_key FROM tiles
-      WHERE substring(md5(src_path), 1, 1) NOT IN ('0','1','2')
+      WHERE {PRESENT_SQL}
     )
     SELECT CASE WHEN substring(md5(object_key), 1, 1) = '0'
                 THEN 'err' ELSE 'ok' END AS status,
