@@ -44,6 +44,42 @@ def test_put_roundtrip_headers_and_bytes(store):
     c.close()
 
 
+def test_store_accepts_a_burst_of_concurrent_clients(store):
+    """32 keep-alive clients connecting at once, 3 PUTs each: the
+    store's listen backlog holds every connection, so no request is
+    reset and retried (the default backlog of 5 reset several per
+    burst, and each retry is an extra PUT in the attempt audit)."""
+    import threading
+
+    n_clients, n_puts = 32, 3
+    gate = threading.Barrier(n_clients)
+    errors: list[str] = []
+
+    def client(i: int) -> None:
+        c = HttpPutClient(store.endpoint)
+        try:
+            gate.wait()
+            for j in range(n_puts):
+                attempts = c.put(f"burst/{i}/{j}", b"x" * 1024)
+                if attempts != 1:
+                    errors.append(f"burst/{i}/{j}: {attempts} attempts")
+        except Exception as ex:  # any failure fails the burst
+            errors.append(f"client {i}: {type(ex).__name__}: {ex}")
+        finally:
+            c.close()
+
+    threads = [
+        threading.Thread(target=client, args=(i,)) for i in range(n_clients)
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(60)
+    assert errors == []
+    assert len(store.attempts) == n_clients * n_puts
+    assert set(store.attempts.values()) == {1}
+
+
 def test_client_retries_transient_503_then_succeeds(store):
     store.faults["k1"] = [503, 503]
     c = HttpPutClient(store.endpoint, max_attempts=4)

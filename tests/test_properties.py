@@ -109,8 +109,10 @@ def test_scan_relayout_preserves_values(
     value-transparent: same multiset of rows, just spread over multiple
     files for scan parallelism. Exercised here at tiny SF by dropping
     the row threshold (real SFs trigger it naturally at >=100k rows).
-    Covers both the plain path (orders) and the events path, whose
-    ns->us timestamp conversion is materialized INTO the artifact.
+    Covers both the plain path (orders) and the events path: the
+    artifact holds the source's own rows and types, and ``load`` applies
+    the same ``_read_raw`` normalization (ns->us timestamps) to it as to
+    the raw file.
 
     r13: ART_DIR is monkeypatched to an isolated tmp dir instead of
     rmtree'ing the SHARED /tmp artifact cache — the old teardown
@@ -143,6 +145,102 @@ def test_scan_relayout_preserves_values(
         # the memoized frames point into the tmp ART_DIR about to be
         # torn down — drop them so later tests re-derive real layouts
         io_mod._LOAD_MEMO.clear()
+
+
+def _relayout_small(monkeypatch, tmp_path):
+    """io with the re-layout thresholds dropped so tiny tables are
+    re-laid in 100-row files (at sf0.001: orders 1500 rows -> 15 files,
+    lineitem ~6000 rows -> the 32-file cap), building into a private
+    ART_DIR."""
+    from tile_etl_spark import io as io_mod
+    from tile_etl_spark.sources import files as files_mod
+
+    monkeypatch.setattr(io_mod, "_RELAYOUT_MIN_ROWS", 1)
+    monkeypatch.setattr(io_mod, "_RELAYOUT_ROWS_PER_FILE", 100)
+    monkeypatch.setattr(files_mod, "ART_DIR", str(tmp_path / "art"))
+    return io_mod
+
+
+def test_scan_relayout_slices_sorted_source(spark, sf_dir, monkeypatch,
+                                            tmp_path):
+    """The re-layout is the source stable-sorted on the cluster key and
+    cut into n ``ceil(rows / n)``-row files, one row group each: n
+    non-empty files whose row counts differ by at most one slice, each
+    sorted, with key ranges ordered in file-name order (a repeated key
+    such as l_orderkey may straddle one boundary, so ranges may touch
+    but never cross), and read back in name order they ARE the sorted
+    source."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    io_mod = _relayout_small(monkeypatch, tmp_path)
+    for name in ("orders", "lineitem"):
+        src = os.path.join(sf_dir, f"{name}.parquet")
+        key = io_mod._CLUSTER_KEY[name]
+        rows = pq.ParquetFile(src).metadata.num_rows
+        n = min(io_mod._RELAYOUT_MAX_FILES, rows // 100)
+        step = math.ceil(rows / n)
+        out = io_mod._scan_path(spark, sf_dir, name)
+        parts = sorted(os.listdir(out))
+        assert len(parts) == n, (name, parts)
+        tables = [pq.read_table(os.path.join(out, f)) for f in parts]
+        counts = [t.num_rows for t in tables]
+        assert min(counts) > 0 and max(counts) - min(counts) < step, counts
+        prev_max = None
+        for f, t in zip(parts, tables):
+            assert pq.ParquetFile(os.path.join(out, f)).num_row_groups == 1
+            keys = t.column(key).to_pylist()
+            assert keys == sorted(keys), (name, f)
+            if prev_max is not None:
+                assert prev_max <= keys[0], (name, f)
+            prev_max = keys[-1]
+        whole = pa.concat_tables(tables)
+        assert whole.equals(pq.read_table(src).sort_by(key)), name
+
+
+def test_scan_relayout_reads_in_the_task(spark, sf_dir, monkeypatch,
+                                         tmp_path):
+    """The table never reaches the driver: with pyarrow's read_table
+    broken in this process, the re-layout still builds, because the
+    read happens in the Spark task's Python worker."""
+    import pyarrow.parquet as pq
+
+    io_mod = _relayout_small(monkeypatch, tmp_path)
+
+    def no_driver_read(*a, **k):
+        raise AssertionError("re-layout read the table on the driver")
+
+    monkeypatch.setattr(pq, "read_table", no_driver_read)
+    out = io_mod._scan_path(spark, sf_dir, "orders")
+    assert len(os.listdir(out)) > 1
+
+
+def test_scan_relayout_task_ships_by_value(sf_dir, tmp_path):
+    """The task function pickles without any reference to this package,
+    and the unpickled copy re-lays a table in an interpreter that
+    cannot import it (the case of a worker whose path lacks the repo)."""
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from tile_etl_spark import io as io_mod
+
+    blob = cloudpickle.dumps(io_mod._RELAYOUT_TASK)
+    assert b"tile_etl_spark" not in blob
+    out = tmp_path / "layout"
+    job = (os.path.join(sf_dir, "orders.parquet"), str(out), 4, "o_orderkey")
+    code = (
+        "import importlib.util, pickle, sys\n"
+        "assert importlib.util.find_spec('tile_etl_spark') is None\n"
+        "pickle.loads(sys.stdin.buffer.read())(%r)\n" % (job,)
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    subprocess.run(
+        [sys.executable, "-c", code], input=blob, cwd=tmp_path, env=env,
+        check=True, timeout=120,
+    )
+    assert sorted(os.listdir(out)) == [f"part-{i:05d}.parquet" for i in range(4)]
 
 
 def test_registry_outputs_driver_hashable(spark, sf_dir):

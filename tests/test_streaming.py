@@ -381,13 +381,44 @@ def test_progress_metrics_conserve_input_rows(spark, sf_dir):
     assert (prog.state_rows > 0).any()
 
 
+def _art_entries(kind: str) -> set[str]:
+    from tile_etl_spark.sources import files
+
+    d = os.path.join(files.ART_DIR, kind)
+    return set(os.listdir(d)) if os.path.isdir(d) else set()
+
+
 def test_s_dedup_incremental_equals_batch(spark, sf_dir):
     """Micro-batched verify-against-static-index ≡ the H-checked batch
-    twin — micro-batching cannot change a per-pair exact computation."""
+    twin — micro-batching cannot change a per-pair exact computation.
+    The result is an eager local checkpoint, so the run leaves no epoch
+    output or stream checkpoint behind in the shared ART_DIR."""
+    before = _art_entries("s_dedup_incremental")
     s = registry.QUERIES["s_dedup_incremental"](spark, sf_dir)
+    assert _art_entries("s_dedup_incremental") <= before
     b = registry.QUERIES["q_dedup_incremental"](spark, sf_dir)
     cols = ["new_id", "idx_id", "jaccard"]
     assert rows_set(s, cols) == rows_set(b, cols)
+
+
+def test_s_foreachbatch_keeps_only_the_final_version(spark, sf_dir):
+    """The upsert chain's result reads its final version only: the run
+    leaves that one version in ART_DIR, no superseded versions and no
+    stream checkpoint, and the final state has one row per user."""
+    from tile_etl_spark.io import load
+    from tile_etl_spark.sources import files
+
+    before = _art_entries("febatch")
+    s = registry.QUERIES["s_foreachbatch"](spark, sf_dir)
+    (run,) = _art_entries("febatch") - before
+    base = os.path.join(files.ART_DIR, "febatch", run)
+    (final,) = os.listdir(base)
+    assert all(
+        os.path.join(base, final) + "/" in f for f in s.inputFiles()
+    )
+    assert not os.path.exists(os.path.join(files.ART_DIR, "checkpoints", run))
+    users = load(spark, sf_dir, "events").select("user_id").distinct()
+    assert s.count() == users.count()
 
 
 def test_python_ds_stream_offset_resume_no_redelivery(spark, tmp_path):

@@ -14,6 +14,7 @@ vs Kafka) differs.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -459,7 +460,11 @@ def s_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    final = versions()[-1]
+    # the result reads only the final version: drop the stream's
+    # checkpoint and the superseded versions from the shared ART_DIR
+    *old, final = versions()
+    for p in (ckpt, *old):
+        shutil.rmtree(p, ignore_errors=True)
     return spark.read.parquet(final)
 
 
@@ -690,7 +695,6 @@ def s_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     stored table. Output ≡ the batch twin (asserted in tests): B
     oracle, since micro-batching cannot change a per-pair exact
     computation."""
-    import shutil
     import uuid
 
     ensure_session_determinism(spark)
@@ -760,5 +764,7 @@ def s_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = spark.read.parquet(*epochs).localCheckpoint(eager=True)
     idx_sh.unpersist()
     idx_sizes.unpersist()
-    shutil.rmtree(ckpt, ignore_errors=True)
+    # the eager checkpoint holds the result: the epoch output and the
+    # stream checkpoint under it can go
+    shutil.rmtree(sink, ignore_errors=True)
     return out

@@ -63,6 +63,15 @@ class ObjectStoreError(Exception):
 # --------------------------------------------------------------------------
 
 
+class _Server(ThreadingHTTPServer):
+    # socketserver listens with a backlog of 5: a burst of clients
+    # connecting at once overflows it, and the overflow shows up as
+    # connection resets (a retried PUT, one request too many in the
+    # attempt audit) or 1 s SYN retransmits. The kernel caps this value
+    # at its own somaxconn.
+    request_queue_size = socket.SOMAXCONN
+
+
 class LocalObjectStore:
     """In-process threaded HTTP object store with scriptable faults.
 
@@ -188,7 +197,7 @@ class LocalObjectStore:
                 self.end_headers()
                 self.wfile.write(body)
 
-        self._server = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+        self._server = _Server(("127.0.0.1", 0), Handler)
         self.port = self._server.server_address[1]
         self._thread = threading.Thread(
             target=self._server.serve_forever, daemon=True
