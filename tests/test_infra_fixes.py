@@ -79,63 +79,30 @@ def test_load_memo_reloads_regenerated_fixture(spark, tmp_path):
     shutil.rmtree(sf_dir, ignore_errors=True)
 
 
-def test_load_memo_is_per_session_weakref(spark):
-    """The memo must key per live session and drop dead entries; it must
-    never pin a DataFrame under a foreign session id."""
+def test_load_memo_is_per_session(spark):
+    """The load memo keys on the live session: a new session gets its
+    own memo (so register_once registers again there), and clear(), the
+    isolation reset tests/test_properties.py uses, empties it."""
     memo = io_mod._memo_for(spark)
     assert io_mod._memo_for(spark) is memo  # stable for the live session
-    # simulate a dead session entry: weakref that resolves to None
-    class _Dead:
-        def __call__(self):
-            return None
+    other = spark.newSession()
+    assert io_mod._memo_for(other) is not memo
 
-    io_mod._LOAD_MEMO._entries[-1] = (_Dead(), {"sentinel": object()})
-    io_mod._memo_for(spark)  # any access sweeps dead entries
-    assert -1 not in io_mod._LOAD_MEMO._entries
+    calls = []
+    for s, tag in ((spark, "a"), (spark, "b"), (other, "c")):
+        io_mod.register_once(
+            s, "probe", "memo-test", lambda t=tag: calls.append(t)
+        )
+    assert calls == ["a", "c"]
 
-
-def test_session_keyed_purge_and_id_reuse(spark):
-    """SessionKeyed must run on_purge exactly once per dead entry and
-    must never hand a dead session's payload to a new session that
-    reuses its id()."""
-    purged = []
-    reg = io_mod.SessionKeyed(on_purge=purged.append)
-
-    class _Dead:
-        def __call__(self):
-            return None
-
-    # dead entry at some id: purged (with hook) on any access
-    reg._entries[1234] = (_Dead(), "stale-payload")
-    assert reg.get_or_create(spark, list) == []
-    assert purged == ["stale-payload"]
-    assert 1234 not in reg._entries
-
-    # id-reuse guard: a dead entry AT THIS SESSION'S OWN id must not
-    # leak its payload into the live session via get_or_create or pop
-    reg._entries[id(spark)] = (_Dead(), "reused-address")
-    fresh = reg.get_or_create(spark, dict)
-    assert fresh == {} and purged == ["stale-payload", "reused-address"]
-
-    # put() over a LIVE payload purges the replaced payload (ADVICE r9:
-    # a put-without-pop caller must not leak the old payload's disk
-    # state); the slot currently holds `fresh` from get_or_create above
-    reg.put(spark, ("t", "ckpt"))
-    assert purged == ["stale-payload", "reused-address", fresh]
-    # re-putting the SAME payload object is a no-op purge-wise
-    same = reg._entries[id(spark)][1]
-    reg.put(spark, same)
-    assert len(purged) == 3
-    assert reg.pop(spark) == ("t", "ckpt")
-    assert reg.pop(spark) is None  # popped means gone
-
-    # put() over an EMPTY slot purges nothing; clear() drops entries
-    # WITHOUT running on_purge (live payloads' disk state must survive
-    # test-isolation clears)
-    reg.put(spark, "live")
-    reg.clear()
-    assert purged == ["stale-payload", "reused-address", fresh]
-    assert reg.pop(spark) is None
+    saved = dict(io_mod._LOAD_MEMO)
+    io_mod._LOAD_MEMO.clear()
+    try:
+        assert len(io_mod._LOAD_MEMO) == 0
+        assert io_mod._memo_for(spark) == {}
+    finally:
+        io_mod._LOAD_MEMO.clear()
+        io_mod._LOAD_MEMO.update(saved)
 
 
 def test_cache_scope_context_restores_previous_tag(spark, sf_dir):

@@ -388,6 +388,17 @@ def _art_entries(kind: str) -> set[str]:
     return set(os.listdir(d)) if os.path.isdir(d) else set()
 
 
+def _checkpoint_entries() -> set[str]:
+    """Every ``checkpoints/<run>`` and ``checkpoints_*`` entry in ART_DIR."""
+    from tile_etl_spark.sources import files
+
+    root = files.ART_DIR
+    if not os.path.isdir(root):
+        return set()
+    out = {e for e in os.listdir(root) if e.startswith("checkpoints_")}
+    return out | {f"checkpoints/{e}" for e in _art_entries("checkpoints")}
+
+
 def test_s_dedup_incremental_equals_batch(spark, sf_dir):
     """Micro-batched verify-against-static-index ≡ the H-checked batch
     twin — micro-batching cannot change a per-pair exact computation.
@@ -408,7 +419,7 @@ def test_s_foreachbatch_keeps_only_the_final_version(spark, sf_dir):
     from tile_etl_spark.io import load
     from tile_etl_spark.sources import files
 
-    before = _art_entries("febatch")
+    before, ckpts = _art_entries("febatch"), _checkpoint_entries()
     s = registry.QUERIES["s_foreachbatch"](spark, sf_dir)
     (run,) = _art_entries("febatch") - before
     base = os.path.join(files.ART_DIR, "febatch", run)
@@ -416,7 +427,7 @@ def test_s_foreachbatch_keeps_only_the_final_version(spark, sf_dir):
     assert all(
         os.path.join(base, final) + "/" in f for f in s.inputFiles()
     )
-    assert not os.path.exists(os.path.join(files.ART_DIR, "checkpoints", run))
+    assert _checkpoint_entries() == ckpts
     users = load(spark, sf_dir, "events").select("user_id").distinct()
     assert s.count() == users.count()
 
@@ -542,3 +553,29 @@ def test_python_ds_stream_offset_resume_no_redelivery(spark, tmp_path):
     ]
     assert commits == [8]  # run 1's durable progress, acked by run 2
 
+
+@pytest.mark.parametrize(
+    "qid",
+    sorted(
+        q for q in registry.QUERIES
+        if q.startswith("s_") or q == "src_python_ds_stream"
+    ),
+)
+def test_stream_run_leaves_nothing_behind(spark, sf_dir, qid):
+    """A qid that starts a stream ends its checkpoint with the run: the
+    checkpoint entries in the shared ART_DIR are the same before and
+    after it (compared, not checked empty: other runs' trees may be
+    there), the catalog gains no temp view, no stream stays active, and
+    the returned frame still collects the same rows twice."""
+    from collections import Counter
+
+    def views() -> set[str]:
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    ckpts, before_views = _checkpoint_entries(), views()
+    df = registry.QUERIES[qid](spark, sf_dir)
+    assert _checkpoint_entries() == ckpts
+    assert views() <= before_views
+    assert spark.streams.active == []
+    first = Counter(map(tuple, df.collect()))
+    assert first and Counter(map(tuple, df.collect())) == first

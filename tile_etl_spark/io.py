@@ -480,81 +480,18 @@ def cached_dim_view(spark: SparkSession, sf_dir: str, name: str,
     return vname
 
 
-class SessionKeyed:
-    """Process-lifetime registry of per-SparkSession payloads, keyed on
-    ``id(session)`` but guarded by a weakref so the three hazards of
-    bare-id keying never bite: (1) a NEW session reusing a dead
-    session's address never inherits its payload (the stored ref is
-    identity-checked on every access), (2) dead sessions' entries are
-    purged on access instead of leaking for the process lifetime, and
-    (3) ``on_purge(payload)`` releases any on-disk state (checkpoint
-    trees) the payload owns. One implementation serves the load memo
-    (here), the streaming run window (streaming/replay.py), and the
-    Python-datasource stream pair (sources/files.py) — fix purge
-    semantics once, every user gets it."""
-
-    def __init__(self, on_purge=None) -> None:
-        self._entries: dict[int, tuple[weakref.ref, object]] = {}
-        self._on_purge = on_purge
-
-    def _purge_dead(self) -> None:
-        for sid in list(self._entries):
-            ref, payload = self._entries[sid]
-            if ref() is None:
-                if self._on_purge is not None:
-                    self._on_purge(payload)
-                del self._entries[sid]
-
-    def get_or_create(self, spark: SparkSession, factory):
-        """This session's payload, creating it via ``factory()`` on
-        first access (or when the slot holds a dead session's entry)."""
-        self._purge_dead()
-        ent = self._entries.get(id(spark))
-        if ent is None or ent[0]() is not spark:
-            ent = (weakref.ref(spark), factory())
-            self._entries[id(spark)] = ent
-        return ent[1]
-
-    def pop(self, spark: SparkSession):
-        """Remove and return this session's payload (None if absent or
-        if the slot belonged to a dead session at the same address)."""
-        self._purge_dead()
-        ent = self._entries.pop(id(spark), None)
-        if ent is None or ent[0]() is not spark:
-            return None
-        return ent[1]
-
-    def put(self, spark: SparkSession, payload) -> None:
-        """Install this session's payload, releasing whatever the slot
-        held. The current callers pop() first, but put() must not rely
-        on that: a replaced entry that still owned disk state (a
-        checkpoint tree) would silently leak it, so a live payload being
-        overwritten gets the same ``on_purge`` treatment a dead one
-        gets in ``_purge_dead`` (ADVICE r9)."""
-        self._purge_dead()
-        ent = self._entries.get(id(spark))
-        if (ent is not None and ent[0]() is spark
-                and ent[1] is not payload and self._on_purge is not None):
-            self._on_purge(ent[1])
-        self._entries[id(spark)] = (weakref.ref(spark), payload)
-
-    def clear(self) -> None:
-        """Drop every entry WITHOUT running on_purge (test isolation —
-        live sessions' payloads must not have their disk state removed)."""
-        self._entries.clear()
-
-
 # DataFrames are immutable; memoizing per (session, sf_dir, table)
 # saves re-listing files + re-reading parquet footers + re-analysis on
 # every one of the ~100 qids a driver sweep builds. Keyed on the source
 # file's source_fingerprint so a regenerated fixture invalidates the entry,
-# and held per-session behind a weakref so a stopped session's
-# DataFrames (and the session itself) can be GC'd.
-_LOAD_MEMO = SessionKeyed()
+# and held per session in a WeakKeyDictionary (a SparkSession hashes by
+# identity), so a new session never sees another session's frames. The
+# frames hold their session, so an entry lives as long as the process.
+_LOAD_MEMO: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def _memo_for(spark: SparkSession) -> dict:
-    return _LOAD_MEMO.get_or_create(spark, dict)
+    return _LOAD_MEMO.setdefault(spark, {})
 
 
 def source_memo(memo: dict, spark: SparkSession, sf_dir: str, fpr: str,
@@ -572,10 +509,8 @@ def source_memo(memo: dict, spark: SparkSession, sf_dir: str, fpr: str,
     The stored payload frames DELIBERATELY hold a strong reference to
     their session until replaced: that reference is what makes the
     ``id(spark)`` equality below safe (CPython cannot reuse the
-    address of an object that is still alive). Mirroring _memo_for's
-    weakref pattern here would free a stopped session sooner but would
-    also reopen the id-reuse hazard — if you weaken the payload, key
-    on a weakref identity instead."""
+    address of an object that is still alive). If you weaken the
+    payload, key on the session itself instead, as _memo_for does."""
     hit = memo.get(sf_dir)
     if hit is not None and hit[0] == id(spark) and hit[1] == fpr:
         payload = hit[2]

@@ -24,7 +24,7 @@ from collections.abc import Callable, Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tile_etl_spark.io import SessionKeyed, as_double, load, source_fingerprint
+from tile_etl_spark.io import as_double, load, source_fingerprint
 from tile_etl_spark.registry import query
 from tile_etl_spark.session import ensure_session_determinism
 from tile_etl_spark.tiles.grid import (
@@ -839,24 +839,6 @@ def src_python_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.format("tile_manifest").load()
 
 
-# Last (memory-sink table, checkpoint dir) per session for
-# src_python_ds_stream — see the leak note inside the builder. Keyed
-# via io.SessionKeyed (shared with the load memo and the streaming run
-# window): id-reuse and dead-session leaks handled in one place; the
-# purge hook removes a dead session's on-disk checkpoint tree (its
-# memory-table rows died with the session).
-def _pyds_purge(pair: tuple[str, str]) -> None:
-    shutil.rmtree(pair[1], ignore_errors=True)
-
-
-_PYDS_STREAM_LAST = SessionKeyed(on_purge=_pyds_purge)
-
-
-def _pyds_pop_prev(spark: SparkSession) -> tuple[str, str] | None:
-    """Pop THIS session's previous (table, ckpt) pair, if any."""
-    return _PYDS_STREAM_LAST.pop(spark)
-
-
 @query("src_python_ds_stream", oracle=_manifest_oracle())
 def src_python_ds_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSTOM PYTHON STREAMING SOURCE (Spark 4 DataSourceStreamReader):
@@ -932,37 +914,11 @@ def src_python_ds_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, "datasource", "tile_manifest_stream",
         lambda: spark.dataSource.register(TileManifestStreamSource),
     )
-    # Each invocation needs a FRESH memory sink + checkpoint (reusing a
-    # checkpoint under availableNow resumes from committed offsets and
-    # drains zero rows), but the previous invocation's pair must not
-    # leak: under the driver pattern (one long session, retries, bench
-    # best-of-N) uuid-named memory tables pin their rows in driver
-    # memory and checkpoint trees accumulate under ART_DIR for the
-    # process lifetime. Drop the prior invocation's pair first — at
-    # most ONE set is ever live.
-    prev = _pyds_pop_prev(spark)
-    if prev is not None:
-        prev_name, prev_ckpt = prev
-        try:
-            spark.catalog.dropTempView(prev_name)
-        except Exception:
-            pass
-        shutil.rmtree(prev_ckpt, ignore_errors=True)
-    name = "pyds_" + uuid.uuid4().hex[:8]
-    ckpt = _art(f"checkpoints_{name}")
-    q = (
-        spark.readStream.format("tile_manifest_stream")
-        .load()
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    from tile_etl_spark.streaming.replay import run_to_table
+
+    return run_to_table(
+        spark.readStream.format("tile_manifest_stream").load(), "append"
     )
-    q.awaitTermination()
-    _PYDS_STREAM_LAST.put(spark, (name, ckpt))
-    return spark.table(name)
 
 
 @query(

@@ -25,6 +25,7 @@ from tile_etl_spark.session import ensure_session_determinism
 from tile_etl_spark.streaming.replay import (
     EVENTS_SCHEMA,
     _art_root,
+    drain,
     read_stream,
     replay_dir,
     replay_dir_with_flush,
@@ -452,18 +453,11 @@ def s_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 2)
         .parquet(replay_dir(spark, sf_dir) + "/chunk_*.parquet")
     )
-    ckpt = os.path.join(_art_root(), "checkpoints", os.path.basename(base))
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # the result reads only the final version: drop the stream's
-    # checkpoint and the superseded versions from the shared ART_DIR
+    drain(stream.writeStream.foreachBatch(upsert))
+    # the result reads only the final version: drop the superseded
+    # versions from the shared ART_DIR
     *old, final = versions()
-    for p in (ckpt, *old):
+    for p in old:
         shutil.rmtree(p, ignore_errors=True)
     return spark.read.parquet(final)
 
@@ -550,27 +544,16 @@ def s_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     event count exactly (no batch lost or double-counted).
 
     Emitted as a small driver-side DataFrame (one row per micro-batch
-    — O(batches), never data-sized)."""
+    — O(batches), never data-sized). Only the progress feed is read, so
+    the aggregate goes to the noop sink."""
     ensure_session_determinism(spark)
-    import uuid as _uuid
-
     stream = read_stream(spark, replay_dir(spark, sf_dir))
     agg = (
         stream.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    name = "s_prog_" + _uuid.uuid4().hex[:8]
-    ckpt = os.path.join(_art_root(), "checkpoints", name)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = drain(agg.writeStream.format("noop").outputMode("append"))
     rows = []
     for p in q.recentProgress:
         state = p.get("stateOperators") or []
@@ -730,7 +713,6 @@ def s_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink = os.path.join(
         _art_root(), "s_dedup_incremental", uuid.uuid4().hex[:12]
     )
-    ckpt = os.path.join(sink, "_ckpt")
 
     def verify_batch(batch_df: DataFrame, epoch_id: int) -> None:
         new_sh = batch_df.select(
@@ -744,14 +726,7 @@ def s_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(sink, f"e{epoch_id}")
         )
 
-    stream = read_docs_stream(spark, base)
-    q = (
-        stream.writeStream.foreachBatch(verify_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(read_docs_stream(spark, base).writeStream.foreachBatch(verify_batch))
     # concrete epoch dirs, not the "e*" glob: a glob path makes
     # FileStreamSink.hasMetadata throw-and-WARN a full stacktrace into
     # every driver/bench tail (it cannot stat a wildcard); explicit
@@ -764,7 +739,6 @@ def s_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = spark.read.parquet(*epochs).localCheckpoint(eager=True)
     idx_sh.unpersist()
     idx_sizes.unpersist()
-    # the eager checkpoint holds the result: the epoch output and the
-    # stream checkpoint under it can go
+    # the eager checkpoint holds the result: the epoch output can go
     shutil.rmtree(sink, ignore_errors=True)
     return out

@@ -14,8 +14,9 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from tile_etl_spark.io import SessionKeyed, load
+from tile_etl_spark.io import load
 from tile_etl_spark.sources import files
 
 EVENTS_SCHEMA = (
@@ -90,53 +91,42 @@ def read_stream(spark: SparkSession, base: str) -> DataFrame:
     )
 
 
-# Recent (memory-sink table, checkpoint dir) pairs per session — each
-# run_to_table call needs a fresh pair (a reused checkpoint under
-# availableNow resumes from committed offsets and drains nothing), but
-# old pairs must not leak: uuid memory tables pin their rows in driver
-# memory and checkpoint trees accumulate under ART_DIR for the process
-# lifetime under the driver/bench usage pattern (hundreds of streaming
-# runs). A bounded keep-last window (not drop-immediately-previous)
-# lets tests hold a few un-collected streaming results at once.
-# io.SessionKeyed handles the id-reuse/leak hazards; the purge hook
-# removes the dead session's on-disk checkpoint trees.
-_RUN_RECENT = SessionKeyed(
-    on_purge=lambda pairs: [
-        shutil.rmtree(ckpt, ignore_errors=True) for _name, ckpt in pairs
-    ]
-)
-_RUN_KEEP = 8
+def drain(writer: DataStreamWriter) -> StreamingQuery:
+    """Run ``writer``'s stream to completion (availableNow) against a
+    fresh checkpoint dir and return the finished query.
 
-
-def _recent_for(spark_s: SparkSession) -> list[tuple[str, str]]:
-    return _RUN_RECENT.get_or_create(spark_s, list)
+    Every run needs its own checkpoint: a reused one resumes from its
+    committed offsets under availableNow and drains nothing. A finished
+    run never reads it again, so the dir is removed whether the run
+    ends or raises, and no run leaves a checkpoint tree behind."""
+    ckpt = os.path.join(_art_root(), "checkpoints", uuid.uuid4().hex[:12])
+    try:
+        q = (
+            writer.option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return q
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def run_to_table(df: DataFrame, mode: str) -> DataFrame:
-    """Execute a streaming DataFrame to completion (availableNow) into
-    an in-memory table; return it as a batch DataFrame."""
+    """Execute a streaming DataFrame to completion into a memory sink;
+    return the sink's rows as a batch DataFrame.
+
+    The sink publishes its rows as a temp view named after the query.
+    The returned frame resolves that view at once and holds the sink
+    itself, so the view is dropped before returning: the rows live as
+    long as the caller holds the frame, and the catalog gains nothing."""
     spark_s = df.sparkSession
-    recent = _recent_for(spark_s)
-    while len(recent) >= _RUN_KEEP:
-        old_name, old_ckpt = recent.pop(0)
-        try:
-            spark_s.catalog.dropTempView(old_name)
-        except Exception:
-            pass
-        shutil.rmtree(old_ckpt, ignore_errors=True)
     name = "s_" + uuid.uuid4().hex[:12]
-    ckpt = os.path.join(_art_root(), "checkpoints", name)
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    recent.append((name, ckpt))
-    return df.sparkSession.table(name)
+    drain(df.writeStream.format("memory").queryName(name).outputMode(mode))
+    try:
+        return spark_s.table(name)
+    finally:
+        spark_s.catalog.dropTempView(name)
 
 
 def replay_dir_with_flush(
