@@ -8,7 +8,8 @@ line ``{"metric", "value", "unit", "queries", "sf", ...}``; the full
 record goes to BENCH_FULL.json. Both tiers (sf_dir, then sf1) run
 through ``run_tier``: a cold pass, a ``window`` per qid on Spark and on
 its DuckDB twin, then ``retime`` of the windows a box dip or a foreign
-CPU burst hit, each under ``session.conf_for`` of its input size.
+CPU burst hit. Each qid runs under ``session.conf_for`` of its input
+size, which the registry sets before it builds the query.
 Options: README "Bench"."""
 
 from __future__ import annotations
@@ -504,22 +505,18 @@ def _ratios(spark_best: dict, duck_best: dict, minus: float = 0.0) -> dict:
             for q, d in duck_best.items() if q in spark_best}
 
 
-def run_tier(spark, sf_dir: str, qids: list[str], conf: dict[str, str],
-             runs: int) -> dict:
-    """One scale: ``conf`` on the session, a warm scan, ingest artifacts,
-    a timed cold pass, the floor, a window per qid and per DuckDB twin,
-    then retimes of both under one shared wait deadline."""
+def run_tier(spark, sf_dir: str, qids: list[str], runs: int) -> dict:
+    """One scale: ingest artifacts, a timed cold pass, the floor, a
+    window per qid and per DuckDB twin, then retimes of both under one
+    shared wait deadline."""
     import duckdb
 
     from tile_etl_spark.io import DIM_CACHE_BUILDS
     from tile_etl_spark.operators.bucketed import orders_by_custkey
 
-    for k, v in conf.items():
-        spark.conf.set(k, v)
-    # Warm the JVM + parquet footers: the clocks measure queries, not
-    # session bootstrap. The custkey-bucketed orders copy (the
-    # zero-exchange plan of q_topk_per_group) is an ingest artifact:
-    # build it before any timed pass and record which path runs.
+    # The custkey-bucketed orders copy (the zero-exchange plan of
+    # q_topk_per_group) is an ingest artifact: build it before any timed
+    # pass and record which path runs.
     topk_path = ("bucketed" if orders_by_custkey(spark, sf_dir) is not None
                  else "plain_view")
     stop = spark.sparkContext.cancelAllJobs
@@ -823,13 +820,11 @@ def main() -> None:
     extra_qids = [q for q in EXTRA if q in registry.QUERIES]
 
     spark = get_spark(app_name="tile-etl-spark-bench")
-    # Each tier's conf comes from its input size and the session's slots.
     cpus = spark.sparkContext.defaultParallelism
-    conf = conf_for(input_bytes(sf_dir), cpus)
     # BASELINE.md protocol: warm best-of-N. Best-of-3: this box shows
     # ~1.6× whole-run noise windows; of 3 runs one lands clean.
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    res = run_tier(spark, sf_dir, qids + extra_qids, conf, runs)
+    res = run_tier(spark, sf_dir, qids + extra_qids, runs)
 
     # sf1 tier after the sf0.1 record is complete, so it cannot
     # contaminate it: by default with every standard sf0.1 bench (core
@@ -843,15 +838,15 @@ def main() -> None:
         try:
             if not fixtures["ok"]:
                 raise RuntimeError(fixtures["status"])
-            tier = run_tier(spark, sf1_dir, qids,
-                            conf_for(input_bytes(sf1_dir), cpus), runs)
+            tier = run_tier(spark, sf1_dir, qids, runs)
             sf1_rec = sf1_record(tier, sf1_dir, runs, cpus, fixtures)
         except Exception as ex:
             print(f"SF1 TIER ERROR: {str(ex)[:160]}", file=sys.stderr)
             sf1_rec = {"error": str(ex)[:160], "fixtures": fixtures}
 
-    full, line = build_records(res, qids, extra_qids, runs, sf,
-                               conf["spark.sql.shuffle.partitions"],
+    # the width the registry set on every query of the sf_dir tier
+    shuffle = conf_for(input_bytes(sf_dir), cpus)["spark.sql.shuffle.partitions"]
+    full, line = build_records(res, qids, extra_qids, runs, sf, shuffle,
                                sf1_rec, start)
     try:
         out = os.path.join(os.path.dirname(os.path.abspath(__file__)),

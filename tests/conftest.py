@@ -20,9 +20,8 @@ def spark():
 
     # Small local session for unit tests: tiny data, low parallelism is
     # faster. Scale behavior is exercised via explain-plan assertions.
-    # AQE stays on: test_adaptive_exec pins its runtime coalescing.
+    # Each registry call sets the conf of its input (registry.query).
     spark = get_spark(app_name="tile-etl-spark-tests", cpus=4)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     yield spark
     spark.stop()
 

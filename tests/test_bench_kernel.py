@@ -228,8 +228,7 @@ def tier(monkeypatch, tmp_path):
         "sha256_25mb_sec": 0.02, "pyloop_2m_sec": 0.1})
     monkeypatch.setattr(bench, "_loadavg", lambda: [0.1, 0.1, 0.1])
     spark = FakeSpark()
-    res = bench.run_tier(spark, str(tmp_path), ["q_a", "q_err", "q_b"],
-                         {"spark.sql.shuffle.partitions": "8"}, 2)
+    res = bench.run_tier(spark, str(tmp_path), ["q_a", "q_err", "q_b"], 2)
     return spark, res
 
 
@@ -271,7 +270,8 @@ PARENT_LINE_SF1 = {"value", "queries", "ratios", "floor_sec", "cpus",
 
 def test_run_tier_measures_spark_and_twins_and_names_errors(tier):
     spark, res = tier
-    assert spark.confs == {"spark.sql.shuffle.partitions": "8"}
+    # the conf is the registry's to set, per query
+    assert spark.confs == {}
     assert set(res["cold"]) == {"q_a", "q_b"}
     assert res["errors"] == {"q_err": "cold: query failed"}
     assert set(res["best"]) == set(res["duck"]) == {"q_a", "q_b"}

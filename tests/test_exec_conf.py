@@ -8,7 +8,9 @@ from tile_etl_spark import io, session
 from tile_etl_spark.session import SMALL_INPUT_BYTES, conf_for
 
 SMALL = {"spark.sql.shuffle.partitions": "4",
-         "spark.sql.adaptive.enabled": "false"}
+         "spark.sql.adaptive.enabled": "false",
+         "spark.sql.files.minPartitionNum": "4",
+         "spark.sql.files.openCostInBytes": "4194304"}
 LARGE = {"spark.sql.shuffle.partitions": "32",
          "spark.sql.adaptive.enabled": "true",
          "spark.sql.files.minPartitionNum": "4",
@@ -17,15 +19,19 @@ LARGE = {"spark.sql.shuffle.partitions": "32",
 
 def fixture_dir(path, tables, size=1024):
     for t in tables:
-        (path / f"{t}.parquet").write_bytes(b"\0" * size)
+        with open(path / f"{t}.parquet", "wb") as f:
+            f.truncate(size)  # sparse: stat reads the size, no bytes land
     return str(path)
 
 
 def test_conf_for(tmp_path):
     assert conf_for(SMALL_INPUT_BYTES, 4) == SMALL
     assert conf_for(SMALL_INPUT_BYTES + 1, 4) == LARGE
-    assert conf_for(0, 48) == {"spark.sql.shuffle.partitions": "8",
-                               "spark.sql.adaptive.enabled": "false"}
+    assert conf_for(0, 48) == {**SMALL, "spark.sql.shuffle.partitions": "8",
+                               "spark.sql.files.minPartitionNum": "48"}
+    # both postures set the same keys: moving from a large input to a
+    # small one leaves nothing of the large posture on the session
+    assert conf_for(0, 4).keys() == conf_for(SMALL_INPUT_BYTES + 1, 4).keys()
     assert conf_for(SMALL_INPUT_BYTES + 1, 48) == {
         **LARGE, "spark.sql.shuffle.partitions": "48",
         "spark.sql.files.minPartitionNum": "48"}
@@ -33,16 +39,21 @@ def test_conf_for(tmp_path):
     whole.mkdir()
     assert io.input_bytes(fixture_dir(whole, io.TABLES)) == 1024 * len(io.TABLES)
     assert conf_for(io.input_bytes(str(whole)), 4) == SMALL
-    # a missing table reads as huge: the conf fails closed to large
+    # a dir missing a table is sized by the tables it has
     partial = tmp_path / "partial"
     partial.mkdir()
     fixture_dir(partial, io.TABLES[:-1])
-    assert conf_for(io.input_bytes(str(partial)), 4) == LARGE
+    assert io.input_bytes(str(partial)) == 1024 * (len(io.TABLES) - 1)
+    assert conf_for(io.input_bytes(str(partial)), 4) == SMALL
+    big = tmp_path / "big"
+    big.mkdir()
+    fixture_dir(big, io.TABLES[:1], size=SMALL_INPUT_BYTES + 1)
+    assert conf_for(io.input_bytes(str(big)), 4) == LARGE
 
 
 def test_get_spark_keeps_its_session_defaults(monkeypatch):
-    """Both perfbench workloads run on these defaults, whatever the
-    environment says."""
+    """Work that no registry call precedes runs on these defaults,
+    whatever the environment says."""
     for knob, value in (("SHUFFLE", "3"), ("AQE", "false")):
         monkeypatch.setenv(f"SPARK_GRAFT_{knob}", value)
     monkeypatch.setattr(session, "_start", lambda builder: builder._options)

@@ -144,11 +144,9 @@ def test_archive_flags_append_to_caller_options(monkeypatch, tmp_path, submit, b
 def test_running_jvm_gets_no_archive_flag(spark, capsys):
     conf = spark.sparkContext.getConf()
     before = conf.get("spark.driver.extraJavaOptions")
-    width = spark.conf.get("spark.sql.shuffle.partitions")
+    # fetching re-applies the session defaults, until the next registry
+    # call sets the conf of its input
     again = get_spark(app_name="tile-etl-spark-tests", cpus=4)
-    # fetching re-applies the session defaults; later tests expect the
-    # fixture's width
-    spark.conf.set("spark.sql.shuffle.partitions", width)
     assert again.sparkContext is spark.sparkContext
     assert again.sparkContext.getConf().get("spark.driver.extraJavaOptions") == before
     assert "class-data archive" not in capsys.readouterr().err

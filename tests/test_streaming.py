@@ -413,21 +413,14 @@ def test_s_dedup_incremental_equals_batch(spark, sf_dir):
 
 
 def test_s_foreachbatch_keeps_only_the_final_version(spark, sf_dir):
-    """The upsert chain's result reads its final version only: the run
-    leaves that one version in ART_DIR, no superseded versions and no
-    stream checkpoint, and the final state has one row per user."""
+    """The upsert chain's result keeps its final version only, as an
+    eager local checkpoint: it reads no file under ART_DIR (the run's
+    versions are gone, see test_stream_run_leaves_nothing_behind), and
+    the final state has one row per user."""
     from tile_etl_spark.io import load
-    from tile_etl_spark.sources import files
 
-    before, ckpts = _art_entries("febatch"), _checkpoint_entries()
     s = registry.QUERIES["s_foreachbatch"](spark, sf_dir)
-    (run,) = _art_entries("febatch") - before
-    base = os.path.join(files.ART_DIR, "febatch", run)
-    (final,) = os.listdir(base)
-    assert all(
-        os.path.join(base, final) + "/" in f for f in s.inputFiles()
-    )
-    assert _checkpoint_entries() == ckpts
+    assert s.inputFiles() == []
     users = load(spark, sf_dir, "events").select("user_id").distinct()
     assert s.count() == users.count()
 
@@ -563,18 +556,21 @@ def test_python_ds_stream_offset_resume_no_redelivery(spark, tmp_path):
 )
 def test_stream_run_leaves_nothing_behind(spark, sf_dir, qid):
     """A qid that starts a stream ends its checkpoint with the run: the
-    checkpoint entries in the shared ART_DIR are the same before and
-    after it (compared, not checked empty: other runs' trees may be
-    there), the catalog gains no temp view, no stream stays active, and
-    the returned frame still collects the same rows twice."""
+    checkpoint and foreachBatch-sink entries in the shared ART_DIR are
+    the same before and after it (compared, not checked empty: other
+    runs' trees may be there), the catalog gains no temp view, no
+    stream stays active, and the returned frame still collects the same
+    rows twice."""
     from collections import Counter
 
     def views() -> set[str]:
         return {t.name for t in spark.catalog.listTables() if t.isTemporary}
 
-    ckpts, before_views = _checkpoint_entries(), views()
+    ckpts, febatch, before_views = (_checkpoint_entries(),
+                                    _art_entries("febatch"), views())
     df = registry.QUERIES[qid](spark, sf_dir)
     assert _checkpoint_entries() == ckpts
+    assert _art_entries("febatch") == febatch
     assert views() <= before_views
     assert spark.streams.active == []
     first = Counter(map(tuple, df.collect()))

@@ -8,8 +8,12 @@ DuckDB ANSI-SQL oracle twin. ``__spark_entry__.queries()`` /
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from typing import Any
+
+from tile_etl_spark.io import input_bytes
+from tile_etl_spark.session import conf_for
 
 QUERIES: dict[str, Callable[..., Any]] = {}
 ORACLES: dict[str, str] = {}
@@ -18,19 +22,32 @@ ORACLES: dict[str, str] = {}
 def query(name: str, oracle: str | None = None):
     """Register a query builder, optionally with its DuckDB oracle twin.
 
+    The registered function wraps the builder: before building, it sets
+    ``conf_for(io.input_bytes(sf_dir), defaultParallelism)`` on the
+    session (shuffle width, AQE, scan split keys). The builder's own
+    eager jobs and the caller's action both plan under that conf; so
+    does any frame built earlier that runs after the call.
+
     Oracle-less registrations get the driver's weaker rows-only check
     (streaming / non-SQL-expressible ops — SURVEY §2B codes B and R).
     """
 
     def deco(fn):
-        QUERIES[name] = fn
+        @functools.wraps(fn)
+        def sized(spark, sf_dir):
+            cpus = spark.sparkContext.defaultParallelism
+            for k, v in conf_for(input_bytes(sf_dir), cpus).items():
+                spark.conf.set(k, v)
+            return fn(spark, sf_dir)
+
+        QUERIES[name] = sized
         if oracle is not None:
             # Collapse whitespace for readable driver JSON. Line comments
             # would swallow the rest of the query — forbid them.
             assert "--" not in oracle, f"{name}: no '--' comments in oracle SQL"
             ORACLES[name] = " ".join(oracle.split())
-        fn.__qid__ = name
-        return fn
+        sized.__qid__ = name
+        return sized
 
     return deco
 

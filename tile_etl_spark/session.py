@@ -3,9 +3,10 @@
 ``get_spark`` builds the session with fixed defaults: AQE on (runtime
 re-planning, skew-join handling, partition coalescing), 32 shuffle
 partitions, UTC session time zone for cross-engine determinism (SURVEY
-§5.3). ``conf_for`` derives a job's shuffle width and AQE setting from
-its input size and core count; callers that know their input apply it
-with ``spark.conf.set``.
+§5.3). ``conf_for`` derives a job's shuffle width, AQE setting and scan
+splits from its input size and core count; every registry query sets it
+on the session before it builds (``registry.query``), so the defaults
+hold only for work that no registry call precedes.
 
 The driver JVM starts from an application class-data-sharing (AppCDS)
 archive of the installed JDK and Spark jars when one exists; the first
@@ -59,9 +60,11 @@ def get_spark(
     configs apply — only ``master`` changes (provided externally via
     spark-submit).
 
-    The session starts with 32 shuffle partitions and AQE on whatever
-    its input; ``conf_for`` gives the size-derived conf to set on it.
-    Fetching a running session re-applies these defaults to it.
+    The session starts with 32 shuffle partitions and AQE on. Each
+    registry query replaces them with ``conf_for`` of its input before
+    it builds, so they govern only what runs before the first registry
+    call. Fetching a running session re-applies these defaults to it,
+    until the next registry call.
 
     Cold start: when this call launches the driver JVM, it passes a Java
     AppCDS archive (``-XX:SharedArchiveFile``) kept under
@@ -155,10 +158,18 @@ def conf_for(input_bytes: int, cpus: int) -> dict[str, str]:
     Above it, walls are data-dominated: AQE on, ``max(32, cpus)``
     partitions for AQE to coalesce, and at least ``cpus`` scan splits
     with a 256 KB file open cost, so small files still fill every slot.
+
+    Both postures set the same keys, so a session that moves from a
+    large input to a small one keeps nothing of the large posture: the
+    small one sets the scan keys to Spark's own effective values on
+    ``local[cpus]`` (``minPartitionNum`` defaults to the leaf node's
+    default parallelism, ``openCostInBytes`` to 4 MB).
     """
     if input_bytes <= SMALL_INPUT_BYTES:
         return {"spark.sql.shuffle.partitions": str(min(8, cpus)),
-                "spark.sql.adaptive.enabled": "false"}
+                "spark.sql.adaptive.enabled": "false",
+                "spark.sql.files.minPartitionNum": str(cpus),
+                "spark.sql.files.openCostInBytes": "4194304"}
     return {
         "spark.sql.shuffle.partitions": str(max(32, cpus)),
         "spark.sql.adaptive.enabled": "true",

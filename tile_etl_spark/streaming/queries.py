@@ -454,12 +454,11 @@ def s_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(replay_dir(spark, sf_dir) + "/chunk_*.parquet")
     )
     drain(stream.writeStream.foreachBatch(upsert))
-    # the result reads only the final version: drop the superseded
-    # versions from the shared ART_DIR
-    *old, final = versions()
-    for p in old:
-        shutil.rmtree(p, ignore_errors=True)
-    return spark.read.parquet(final)
+    out = spark.read.parquet(versions()[-1]).localCheckpoint(eager=True)
+    # the eager checkpoint holds the final version: the run's versions
+    # can go from the shared ART_DIR
+    shutil.rmtree(base, ignore_errors=True)
+    return out
 
 
 @query("s_ss_join_louter")

@@ -38,8 +38,8 @@ from bench import (  # noqa: E402
     measure_floor,
 )
 from tile_etl_spark import registry  # noqa: E402
-from tile_etl_spark.io import input_bytes, load  # noqa: E402
-from tile_etl_spark.session import conf_for, get_spark  # noqa: E402
+from tile_etl_spark.io import load  # noqa: E402
+from tile_etl_spark.session import get_spark  # noqa: E402
 
 # The r9/r10 perf-weak fair-class headline qids, with the (table,
 # columns) sets their plans actually scan (read from the pinned plans'
@@ -125,9 +125,6 @@ def main() -> None:
 
     registry.load_all()
     spark = get_spark(app_name="tile-etl-spark-decompose")
-    cpus = spark.sparkContext.defaultParallelism
-    for k, v in conf_for(input_bytes(args.sf_dir), cpus).items():
-        spark.conf.set(k, v)
     force(spark.read.parquet(f"{args.sf_dir}/lineitem.parquet"))
     # r12 floor comparability (VERDICT r11 #2): bench.py measures its
     # floor AFTER a cold pass over ~145 qids — a deeply JIT-warmed JVM
