@@ -11,7 +11,10 @@ thin view over its query registry.
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import re
 import sys
 from collections.abc import Callable
 
@@ -26,340 +29,29 @@ registry.load_all()
 _SMOKE_SF_DIR = "/root/testdata/sf0.001"
 FLAGSHIP = "q_agg_group"
 
-# Verification priority for DRIVER ROUND 14. The driver records ~50
-# CORRECTNESS rows per round from the FRONT of this list and may snapshot
-# the repo mid-round, so this ordering is committed at round START.
-# Strictly STALEST-FIRST by each qid's most recent driver row, computed
-# mechanically from CORRECTNESS_r01..r13 (ties alphabetical, deduped by
-# construction): after r13's rotation the stalest cohorts are the r7
-# remainder (21 qids) and the r8 cohort (27) — together they fill the
-# ~50-row sample. Spliced to the very front (VERDICT r7 #6 discipline —
-# every touch gets a driver row same-round): the 14 TPC-H qids plus
-# q_join_inner/q_join_broadcast whose broadcast hints were size-gated
-# and/or whose cached_dim_view build path changed this round (eager
-# cache population + fact-table guard — execution path, not semantics),
-# and q_sim_cosine_topk / q_dedup_near / q_dedup_embed / q_text_tfidf
-# (r14 A/B targets per VERDICT r13 #4/#7). The full 306 ordering is
-# written out so the tail needs no fallback logic. Ordering only — no
-# semantic changes in this list.
-_PRIORITY = [
-    "q_tpch_q18",
-    "q_tpch_q7",
-    "q_tpch_q8",
-    "q_tpch_q9",
-    "q_tpch_q2",
-    "q_tpch_q11",
-    "q_tpch_q15",
-    "q_tpch_q16",
-    "q_tpch_q17",
-    "q_tpch_q20",
-    "q_tpch_q21",
-    "q_tpch_q22",
-    "q_tpch_q14",
-    "q_tpch_q19",
-    "q_join_inner",
-    "q_join_broadcast",
-    "q_sim_cosine_topk",
-    "q_dedup_near",
-    "q_dedup_embed",
-    "q_text_tfidf",
-    "q_ts_rollup",
-    "q_ts_seasonal_decompose",
-    "q_udf_arrow",
-    "q_udtf_analyze",
-    "q_union_by_name",
-    "q_url_funcs",
-    "q_variant_funcs",
-    "q_win_islands",
-    "q_win_share",
-    "q_winsorize",
-    "s_foreachbatch",
-    "s_progress_metrics",
-    "s_ss_join_louter",
-    "s_tile_ingest",
-    "sink_compact",
-    "sink_partition_overwrite",
-    "src_csv_badrecords",
-    "src_python_ds",
-    "src_python_ds_stream",
-    "src_text",
-    "src_xml",
-    "q_agg_collect",
-    "q_cast_types",
-    "q_date_funcs",
-    "q_dedup_exact",
-    "q_dedup_ngram",
-    "q_dedup_simhash",
-    "q_except",
-    "q_except_all",
-    "q_hash_funcs",
-    "q_intersect",
-    "q_intersect_all",
-    "q_json_funcs",
-    "q_kanon_audit",
-    "q_merge_audit",
-    "q_multimodal_decode",
-    "q_multimodal_join",
-    "q_sim_ann_ivf",
-    "q_str_funcs",
-    "q_table_changes",
-    "q_text_fingerprint",
-    "q_text_langid",
-    "q_text_quality",
-    "q_text_stats",
-    "q_text_tokens",
-    "q_tile_etl_e2e",
-    "q_tile_grid",
-    "q_tile_manifest_semi",
-    "q_tile_path",
-    "q_tile_s3_variant",
-    "q_tile_stats",
-    "q_topk",
-    "q_udaf_agg",
-    "q_udaf_grouped",
-    "q_udf_scalar",
-    "q_udtf",
-    "q_union_all",
-    "q_union_distinct",
-    "q_win_leadlag",
-    "q_window_sliding",
-    "sink_objectstore",
-    "sink_parquet",
-    "src_binary",
-    "src_csv_infer",
-    "src_csv_json",
-    "q_agg_argminmax",
-    "q_agg_distinct",
-    "q_agg_global",
-    "q_agg_having",
-    "q_agg_hll_sketch",
-    "q_agg_percentile",
-    "q_agg_stats",
-    "q_array_funcs",
-    "q_cogroup_pandas",
-    "q_cond_funcs",
-    "q_curation_e2e",
-    "q_data_split",
-    "q_date_funcs2",
-    "q_decontam",
-    "q_dedup_cluster",
-    "q_doc_chunk",
-    "q_dq_checks",
-    "q_embed_quantize",
-    "q_filter_range",
-    "q_funnel",
-    "q_graph_pagerank",
-    "q_join_fuzzy",
-    "q_join_skew_salted",
-    "q_join_theta",
-    "q_map_funcs",
-    "q_math_funcs",
-    "q_merge_upsert",
-    "q_mixture_weights",
-    "q_multimodal_framesample",
-    "q_partition_prune",
-    "q_pii_scrub",
-    "q_project_expr",
-    "q_quality_filter",
-    "q_table_checksum",
-    "q_win_ntile",
-    "q_win_range",
-    "q_win_rank",
-    "q_win_running",
-    "q_win_value",
-    "s_dedup",
-    "s_session",
-    "s_sliding",
-    "s_stateful",
-    "s_tumbling",
-    "s_watermark",
-    "q_abtest_ztest",
-    "q_agg_bitmap_distinct",
-    "q_agg_bloom_portable",
-    "q_agg_countmin",
-    "q_agg_entropy",
-    "q_agg_filtered",
-    "q_agg_incremental",
-    "q_agg_mode",
-    "q_agg_stringagg",
-    "q_agg_weighted_median",
-    "q_anomaly_window",
-    "q_context_pack",
-    "q_dedup_eval",
-    "q_dedup_incremental",
-    "q_dedup_segments",
-    "q_dedup_semantic",
-    "q_dedup_source_matrix",
-    "q_diff_in_diff",
-    "q_drift_chi2",
-    "q_embed_knn_graph",
-    "q_embed_pq",
-    "q_embed_quality",
-    "q_embed_truncation_eval",
-    "q_epoch_shuffle",
-    "q_hybrid_rrf",
-    "q_join_skew_profile",
-    "q_minhash_portable",
-    "q_mixture_interleave",
-    "q_multimodal_wavmeta",
-    "q_pack_efficiency",
-    "q_pareto",
-    "q_quality_agreement",
-    "q_sample_stratified",
-    "q_scan_project",
-    "q_scan_pushdown",
-    "q_sim_ann_lsh",
-    "q_simhash_portable",
-    "q_sketch_overlap",
-    "q_str_funcs2",
-    "q_text_normalize",
-    "q_text_repetition",
-    "q_tpch_q10",
-    "q_tpch_q3",
-    "q_tpch_q5",
-    "q_unpivot",
-    "s_join",
-    "s_ss_join",
-    "src_orc",
-    "q_array_funcs2",
-    "q_attribution",
-    "q_basket_pairs",
-    "q_bitwise_funcs",
-    "q_bm25",
-    "q_calendar_fill",
-    "q_cdc_apply",
-    "q_cohort_ltv",
-    "q_collation",
-    "q_corr_pearson",
-    "q_cumulative_uniques",
-    "q_cuped",
-    "q_dedup_cluster_stats",
-    "q_dedup_contain",
-    "q_dedup_url",
-    "q_delete_propagate",
-    "q_dq_partition_stats",
-    "q_embed_centroids",
-    "q_embed_prototype",
-    "q_event_transitions",
-    "q_feature_hash",
-    "q_feature_scale",
-    "q_funnel_ttc",
-    "q_generator_funcs",
-    "q_graph_bfs",
-    "q_graph_degree_dist",
-    "q_graph_triangles",
-    "q_join_setsim",
-    "q_pack_sequences",
-    "q_quality_model",
-    "q_session_native",
-    "q_shingle_novelty",
-    "q_sim_ann_pq",
-    "q_source_yield",
-    "q_target_encode",
-    "q_text_hapax",
-    "q_text_lang_confusion",
-    "q_tile_knn",
-    "q_tile_quadkey",
-    "q_tile_storage_plan",
-    "q_ts_changepoint",
-    "q_ts_gap_stats",
-    "q_ts_interpolate",
-    "q_ts_ohlc",
-    "q_ts_resample",
-    "q_win_regression",
-    "s_dedup_incremental",
-    "q_agg_cube",
-    "q_agg_gsets",
-    "q_agg_rollup",
-    "q_hist_equidepth",
-    "q_hist_equiwidth",
-    "q_hof_funcs",
-    "q_ivm_join",
-    "q_join_asof_fwd",
-    "q_join_bloom",
-    "q_join_dpp",
-    "q_join_hints",
-    "q_lateral_topn",
-    "q_lm_doc_score",
-    "q_map_in_arrow",
-    "q_multimodal_audio",
-    "q_multimodal_pngmeta",
-    "q_observe_metrics",
-    "q_onehot_encode",
-    "q_outlier_robust",
-    "q_param_sql",
-    "q_peak_concurrency",
-    "q_pipe_sql",
-    "q_pivot",
-    "q_recursive_cte",
-    "q_regex_funcs",
-    "q_retention_cohorts",
-    "q_rfm_segments",
-    "q_rolling_distinct",
-    "q_sample_reservoir",
-    "q_sample_weighted",
-    "q_scd2_intervals",
-    "q_schema_evolution",
-    "q_seasonality_dow",
-    "q_session_paths",
-    "q_skyline",
-    "q_sql_api",
-    "q_sql_udf",
-    "q_table_profile",
-    "q_text_bigram_lm",
-    "q_text_boilerplate",
-    "q_text_cooccur",
-    "q_text_inverted_index",
-    "q_text_vocab_growth",
-    "q_tile_haversine",
-    "q_tile_neighbors",
-    "q_tile_point_lookup",
-    "q_tile_pyramid",
-    "q_window_tumbling",
-    "q_agg_approx",
-    "q_agg_group",
-    "q_embed_pca",
-    "q_filter_in_like",
-    "q_filter_null_bool",
-    "q_join_anti",
-    "q_join_asof",
-    "q_join_bucketed",
-    "q_join_cross",
-    "q_join_full",
-    "q_join_interval",
-    "q_join_left",
-    "q_join_nullsafe",
-    "q_join_right",
-    "q_join_semi",
-    "q_rel_division",
-    "q_scd2_snapshot",
-    "q_sessionize",
-    "q_sort_multi",
-    "q_subquery_corr",
-    "q_subquery_scalar",
-    "q_text_compress_ratio",
-    "q_tile_sync_delta",
-    "q_tile_zorder",
-    "q_topk_heavy_hitters",
-    "q_topk_per_group",
-    "q_tpch_q12",
-    "q_tpch_q13",
-    "q_tpch_q4",
-    "q_tpch_q6",
-    "q_try_funcs",
-    "q_ts_ewma",
-    "q_ts_moving_median",
-]
+
+# Verification order, stalest first. The driver records ~50 CORRECTNESS
+# rows per round from the front of queries(), so the qids whose newest
+# driver row is oldest lead. Derived, never hand-kept: a qid's key is the
+# newest round N whose CORRECTNESS_rN.json beside this module has a row
+# for it (0 if none does); ties sort by qid. With no such file the order
+# is registration order.
+def _stalest_first() -> list[str]:
+    here = os.path.dirname(os.path.abspath(__file__))
+    newest: dict[str, int] = {}
+    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
+        if m is None:
+            continue
+        with open(path) as f:
+            for q in json.load(f):
+                newest[q] = max(newest.get(q, 0), int(m.group(1)))
+    if not newest:
+        return list(registry.QUERIES)
+    return sorted(registry.QUERIES, key=lambda q: (newest.get(q, 0), q))
 
 
-def _ordered(names: list[str]) -> list[str]:
-    """Priority qids first, then the rest in registration order."""
-    missing = [q for q in _PRIORITY if q not in registry.QUERIES]
-    assert not missing, f"priority qids not registered: {missing}"
-    # dict.fromkeys: a qid spliced to the front this round also keeps
-    # its vintage-block row below — first occurrence wins
-    front = [q for q in dict.fromkeys(_PRIORITY) if q in names]
-    return front + [q for q in names if q not in _PRIORITY]
+_ORDER = _stalest_first()
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -369,9 +61,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2B."""
-    return {q: registry.QUERIES[q] for q in _ordered(list(registry.QUERIES))}
+    return {q: registry.QUERIES[q] for q in _ORDER}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB ANSI-SQL twins for every H-checked qid (SURVEY §2B)."""
-    return {q: registry.ORACLES[q] for q in _ordered(list(registry.ORACLES))}
+    return {q: registry.ORACLES[q] for q in _ORDER if q in registry.ORACLES}

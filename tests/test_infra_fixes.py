@@ -7,16 +7,25 @@ reintroduce the latent failure mode.
 
 from __future__ import annotations
 
+import ast
+import glob
+import importlib.util
+import json
 import os
+import re
 import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from tests._compare import assert_query_matches_oracle
 from tile_etl_spark import cache as cache_mod
 from tile_etl_spark import io as io_mod
+from tile_etl_spark import registry
 from tile_etl_spark.session import ensure_session_determinism
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 class _FixedConf:
@@ -48,6 +57,66 @@ def test_ansi_pin_fails_fast_on_immutable_conf():
 def test_ansi_pin_passes_on_normal_session(spark):
     assert ensure_session_determinism(spark) is spark
     assert spark.conf.get("spark.sql.ansi.enabled") == "false"
+
+
+def test_registry_pins_a_foreign_session(spark, duck, sf_dir):
+    """A driver's session need not come from get_spark: Spark 4 starts
+    with ANSI on, and its time zone is the host's. Every registry call
+    pins both before the builder runs, so MinHash's int64 wraparound
+    (q_dedup_near) and UTC window bounds (q_window_tumbling) still match
+    their oracles, and the confs read back pinned afterwards."""
+    registry.load_all()
+    try:
+        for qid in ("q_dedup_near", "q_window_tumbling"):
+            spark.conf.set("spark.sql.ansi.enabled", "true")
+            spark.conf.set("spark.sql.session.timeZone", "America/Denver")
+            assert_query_matches_oracle(
+                registry.QUERIES[qid], registry.ORACLES[qid], spark, duck,
+                sf_dir, qid=qid,
+            )
+            assert spark.conf.get("spark.sql.ansi.enabled") == "false"
+            assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def test_only_the_registry_pins_the_session():
+    """registry.query pins every query's session; a builder or helper
+    that pins it again restates that decision."""
+    pkg = os.path.join(REPO, "tile_etl_spark")
+    callers = []
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        for node in ast.walk(ast.parse(open(path).read())):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", "")
+            if name == "ensure_session_determinism":
+                callers.append(os.path.relpath(path, pkg))
+    assert sorted(callers) == ["registry.py"]
+
+
+def test_driver_order_is_stalest_first():
+    """__spark_entry__ lists every registered qid once, ordered by the
+    newest CORRECTNESS_rN.json round holding a row for it (0 if none),
+    ties by qid; oracle_sql() keeps the same relative order."""
+    spec = importlib.util.spec_from_file_location(
+        "__spark_entry__", os.path.join(REPO, "__spark_entry__.py")
+    )
+    entry = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(entry)
+    newest = {}
+    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
+        if m:
+            for q in json.load(open(path)):
+                newest[q] = max(newest.get(q, 0), int(m.group(1)))
+    assert newest, "no CORRECTNESS_rN.json beside __spark_entry__.py"
+    order = list(entry.queries())
+    assert sorted(order) == sorted(registry.QUERIES)
+    assert order == sorted(order, key=lambda q: (newest.get(q, 0), q))
+    assert list(entry.oracle_sql()) == [q for q in order if q in registry.ORACLES]
 
 
 def test_load_memo_reloads_regenerated_fixture(spark, tmp_path):

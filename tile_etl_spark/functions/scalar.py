@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from tile_etl_spark.io import load
 from tile_etl_spark.registry import query
-from tile_etl_spark.session import ensure_session_determinism
 
 
 @query(
@@ -37,7 +36,6 @@ from tile_etl_spark.session import ensure_session_determinism
 def q_str_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String family. Note DuckDB regexp_replace needs the 'g' flag to
     match Spark's replace-all semantics."""
-    ensure_session_determinism(spark)
     p = load(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
@@ -77,7 +75,6 @@ def q_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date/time family. Dialect: Spark dayofweek is 1=Sunday, DuckDB
     0=Sunday (+1 on the oracle side); Spark date_trunc returns
     TIMESTAMP (cast to DATE); DuckDB epoch() is fractional (floor)."""
-    ensure_session_determinism(spark)
     o = load(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
@@ -117,7 +114,6 @@ def q_str_funcs2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second string family: reverse/repeat/instr/translate/
     levenshtein/split_part/left/right/contains/starts/ends — including
     edit distance, the classic fuzzy-matching kernel."""
-    ensure_session_determinism(spark)
     p = load(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
@@ -153,7 +149,6 @@ def q_str_funcs2(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_date_funcs2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second date family: quarter, ISO week, add_months (both engines
     clamp to month end), make_date, day diff from an epoch date."""
-    ensure_session_determinism(spark)
     o = load(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
@@ -191,7 +186,6 @@ def q_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     intrinsics and libm can differ in the final ulp; sqrt/pow on small
     ints are exact IEEE and compare raw via round's no-op. pmod is
     spelled ((x % n) + n) % n for DuckDB."""
-    ensure_session_determinism(spark)
     li = load(spark, sf_dir, "lineitem")
     qty = F.col("l_quantity")
     return li.select(
@@ -232,7 +226,6 @@ def q_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cond_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional family: CASE WHEN chains, coalesce/nullif,
     least/greatest (both engines skip NULLs), if-as-case."""
-    ensure_session_determinism(spark)
     o = load(spark, sf_dir, "orders")
     tp = F.col("o_totalprice")
     return o.select(
@@ -286,7 +279,6 @@ def q_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     through pandas ``sort_values``, which cannot hash list cells — the
     string form exercises the same array kernels with hashable output.
     Tokens are single words (no commas), so the join is lossless."""
-    ensure_session_determinism(spark)
     d = load(spark, sf_dir, "documents")
     words = F.split("text", " ")
     return d.select(
@@ -326,7 +318,6 @@ def q_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ground truth with a plain UNION ALL (DuckDB's MAP dialect differs;
     the oracle's job is ground truth, not mirroring the operator).
     Upgraded R→H in round 3 now that the output is all-scalar."""
-    ensure_session_determinism(spark)
     d = load(spark, sf_dir, "documents")
     m = F.create_map(
         F.lit("lang"), F.col("lang"), F.lit("source"), F.col("source")
@@ -362,7 +353,6 @@ def q_json_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOTH dialects — Spark's to_json drops null struct fields ('{}')
     while DuckDB emits '{"k":null}', so the unguarded forms disagree
     exactly on absent keys."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     parsed = F.from_json("props", "k INT")
     k_int = parsed.getField("k")
@@ -390,7 +380,6 @@ def q_json_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_hash_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash/encode family: md5 / sha2-256 (lowercase hex both sides),
     base64 of UTF-8 bytes, uppercase minimal hex of a bigint."""
-    ensure_session_determinism(spark)
     d = load(spark, sf_dir, "documents")
     as_bin = F.col("text").cast("binary")
     return d.select(
@@ -423,7 +412,6 @@ def q_cast_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes bad casts NULL regardless of the session's ANSI mode (the
     driver may hand us an ANSI-on session — never rely on session conf
     for NULL-on-bad-cast)."""
-    ensure_session_determinism(spark)
     p = load(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
@@ -477,7 +465,6 @@ def q_hof_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fine for this one-pass scalar family, a measured 50× trap when 64
     aggregate expressions each reference the array; aggregation
     barriers are the fix there.)"""
-    ensure_session_determinism(spark)
     d = load(spark, sf_dir, "documents")
     w = F.split("text", " ")
     return d.select(
@@ -529,7 +516,6 @@ def q_variant_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Outputs are plain scalars (INT/DOUBLE/BIGINT) — the variant stays
     internal, per the §5.3 driver-hashable-output rule."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     v = F.parse_json("props")
     k_int = F.try_variant_get(v, "$.k", "int")
@@ -566,7 +552,6 @@ def q_regex_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     documented portability boundary: backreferences and lookarounds
     are Java-only and deliberately out of the oracle-checked surface.
     Regex is codegen'd JVM-side in Spark — no Python in the loop."""
-    ensure_session_determinism(spark)
     p = load(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
@@ -609,7 +594,6 @@ def q_try_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     correct under either conf — the portability rule the session
     factory documents. DuckDB twins: TRY_CAST and nullif-guarded
     division (its division returns NULL-on-null rather than erroring)."""
-    ensure_session_determinism(spark)
     li = load(spark, sf_dir, "lineitem").where(
         F.col("l_orderkey") % 100 == 0
     )
@@ -662,7 +646,6 @@ def q_generator_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-based ordinality — normalized explicitly, with empties at -1 /
     '<none>'. Generators run inside codegen; the explode is the only
     row amplifier."""
-    ensure_session_determinism(spark)
     p = load(spark, sf_dir, "part")
     words = F.when(
         F.col("p_size") > 40, F.array().cast("array<string>")
@@ -711,7 +694,6 @@ def q_array_funcs2(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract (dialect note: DuckDB's array_to_string of an empty set
     result yields NULL where Spark's array_join yields '' — the
     oracle coalesces). All JVM-side codegen."""
-    ensure_session_determinism(spark)
     p = load(spark, sf_dir, "part")
     a, b = F.split("p_name", " "), F.split("p_type", " ")
     return p.select(
@@ -748,7 +730,6 @@ def q_bitwise_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     flag columns, Morton keys (q_tile_zorder) and hash mixing.
     Integer-exact in both engines by definition — no tolerance or
     canonicalization needed."""
-    ensure_session_determinism(spark)
     p = load(spark, sf_dir, "part")
     k = F.col("p_partkey")
     return p.select(
@@ -799,7 +780,6 @@ def q_url_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup/grouping key CommonCrawl-style pipelines bucket by. All
     JVM-side codegen expressions — at 100 TB this runs at scan
     throughput, no Python in the row path."""
-    ensure_session_determinism(spark)
     d = load(spark, sf_dir, "documents")
     url = F.concat(
         F.lit("https://"),

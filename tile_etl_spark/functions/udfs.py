@@ -16,7 +16,6 @@ from pyspark.sql.functions import pandas_udf
 
 from tile_etl_spark.io import load
 from tile_etl_spark.registry import query
-from tile_etl_spark.session import ensure_session_determinism
 
 
 @query(
@@ -31,8 +30,6 @@ def q_udf_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vectorized scalar pandas UDF ≡ the built-in expression. Arrow
     ships columnar batches both ways; the UDF computes in float64 so
     results match the JVM double expression bit-for-bit."""
-    ensure_session_determinism(spark)
-
     @pandas_udf("double")
     def revenue_udf(price: pd.Series, discount: pd.Series) -> pd.Series:
         # float64 arithmetic — bit-identical to the engines' double math
@@ -85,8 +82,6 @@ def q_udaf_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     NB: every callable shipped to Python workers in this package is a
     closure, so cloudpickle serializes it by value — the workers must
     not need `tile_etl_spark` importable on their own sys.path."""
-    ensure_session_determinism(spark)
-
     def znorm_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         g = pdf.groupby("user_id")["value"]
         mean = g.transform("mean")
@@ -125,8 +120,6 @@ def q_udaf_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped-aggregate pandas UDF: quantity-weighted mean discount,
     rounded 6 dp (pandas' pairwise-ish summation order differs from the
     engines' streaming sums in the last ulps)."""
-    ensure_session_determinism(spark)
-
     @pandas_udf("double")
     def weighted_avg(v: pd.Series, w: pd.Series) -> float:
         return float((v * w).sum() / w.sum())
@@ -153,7 +146,6 @@ def q_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Table function: words-with-position exploder via Python UDTF
     (Spark 3.5+), oracle = unnest WITH ORDINALITY (1-based positions
     both sides)."""
-    ensure_session_determinism(spark)
     from pyspark.sql.functions import udtf
 
     @udtf(returnType="pos INT, word STRING")
@@ -226,7 +218,6 @@ def q_cogroup_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins the stage's parallelism. The same rule applies on a real
     cluster — grouped-UDF stages should size partitions by key count,
     not bytes."""
-    ensure_session_determinism(spark)
     par = spark.sparkContext.defaultParallelism
     o = (
         load(spark, sf_dir, "orders")
@@ -283,7 +274,6 @@ def q_udf_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     equivalent expression) — registered to pin the API and its plan
     node (ArrowEvalPython), not as a recommended hot path; the rule
     stays: built-ins > pandas_udf > arrow udf > pickled udf."""
-    ensure_session_determinism(spark)
     from pyspark.sql.functions import udf
 
     @udf(returnType="string", useArrow=True)
@@ -317,7 +307,6 @@ def q_map_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups. Quantities are integer-valued doubles: partial sums are
     exact, so the split is hash-identical to the oracle's one-shot
     aggregate."""
-    ensure_session_determinism(spark)
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
 
     def partial_sums(batches):
@@ -362,7 +351,6 @@ def q_udtf_analyze(spark: SparkSession, sf_dir: str) -> DataFrame:
     site; executors then run the usual Arrow-batched eval against the
     fixed schema, so the 100 TB posture is identical to the plain UDTF
     (q_udtf). H-checked against DuckDB list indexing."""
-    ensure_session_determinism(spark)
     from pyspark.sql.functions import udtf as _udtf
     from pyspark.sql.types import StructType
     from pyspark.sql.udtf import AnalyzeArgument, AnalyzeResult

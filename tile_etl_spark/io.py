@@ -14,7 +14,7 @@ import weakref
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tile_etl_spark.session import SMALL_INPUT_BYTES, ensure_session_determinism
+from tile_etl_spark.session import SMALL_INPUT_BYTES
 
 TABLES = (
     "region",
@@ -262,7 +262,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     single-row-group fixtures are served from the compacted re-layout
     (see _scan_path), read through the same ``_read_raw`` as the raw
     file."""
-    ensure_session_determinism(spark)
     memo = _memo_for(spark)
     src = os.path.join(sf_dir, f"{name}.parquet")
     key = (sf_dir, name, source_fingerprint(src))

@@ -37,7 +37,6 @@ from tile_etl_spark.llm.dedup import (
     shingles_df,
 )
 from tile_etl_spark.registry import query
-from tile_etl_spark.session import ensure_session_determinism
 
 # --- near-dup cluster resolution ---------------------------------------
 
@@ -190,7 +189,6 @@ def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     closure is fine at oracle scale, while the Spark side stays
     propagation-shaped for 100 TB.
     """
-    ensure_session_determinism(spark)
     tag = f"q_dedup_cluster:{sf_dir}"
     _scope(tag)
     d = _parallelize_docs(load(spark, sf_dir, "documents"))
@@ -286,7 +284,6 @@ def q_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     5-grams not 13-grams (the common production n) because fixture docs
     are short; n is a parameter of the same plan.
     """
-    ensure_session_determinism(spark)
     d = _parallelize_docs(load(spark, sf_dir, "documents"))
     ev = d.where(F.col("doc_id") % 10 == 0)
     corp = d.where(F.col("doc_id") % 10 != 0)
@@ -353,7 +350,6 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     All five columns are single-pass narrow expressions — no shuffle,
     no UDF; at 100 TB this is a pure map stage pipelined into the scan.
     """
-    ensure_session_determinism(spark)
     c = load(spark, sf_dir, "customer")
     return c.select(
         "c_custkey",
@@ -409,7 +405,6 @@ def q_kanon_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     |QI-combination space| rows (bounded: 25 nations × 5 segments ×
     ~11 bands), never data-sized. The same audit at 100 TB costs one
     pass."""
-    ensure_session_determinism(spark)
     c = load(spark, sf_dir, "customer")
     return (
         c.groupBy(
@@ -459,7 +454,6 @@ def q_data_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side expression + one 15-key aggregate; the
     assignment itself never shuffles.
     """
-    ensure_session_determinism(spark)
     d = load(spark, sf_dir, "documents")
     b2 = F.substring(
         F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 2
@@ -552,7 +546,6 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     prescribed. Group state is one integer pair; memory per task is
     the group's (doc_id, tok) pairs only.
     """
-    ensure_session_determinism(spark)
     d = _parallelize_docs(load(spark, sf_dir, "documents"))
     tok = d.select(
         "lang",
@@ -629,7 +622,6 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     compares UNROUNDED ratios in both engines (rounding first would
     make the boundary engine-dependent).
     """
-    ensure_session_determinism(spark)
     d = _parallelize_docs(load(spark, sf_dir, "documents"))
     wc = (
         d.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
@@ -704,7 +696,6 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage filter with small probe sides; stage frames only shrink.
     Output is one row per funnel stage with the surviving user count.
     """
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     s1 = (
         e.where(F.col("event_type") == "signup")
@@ -784,7 +775,6 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: pure map expression + one small aggregate; the sampled
     subset itself (filter on the same flag) never shuffles.
     """
-    ensure_session_determinism(spark)
     d = load(spark, sf_dir, "documents")
     th = (F.ascii(F.substring("lang", 1, 1)) % 10) + 3
     h1 = F.substring(
@@ -857,7 +847,6 @@ def q_doc_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle. At 100 TB chunking pipelines into the scan and the
     downstream repartition is the packing stage's, not chunking's.
     """
-    ensure_session_determinism(spark)
     d = _parallelize_docs(load(spark, sf_dir, "documents"))
     w = F.split("text", " ")
     base = d.select("doc_id", w.alias("w"), F.size(w).alias("n"))
@@ -921,7 +910,6 @@ def q_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern as tf-idf's N. The rates then drive the same hash-threshold
     sampler as q_sample_stratified.
     """
-    ensure_session_determinism(spark)
     d = load(spark, sf_dir, "documents")
     per_src = (
         d.groupBy("source")
@@ -1011,7 +999,6 @@ def q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates for the repetition signal, joined back to the per-doc
     scalar pass on doc_id — two shuffles total, both map-side-combined.
     """
-    ensure_session_determinism(spark)
     d = _parallelize_docs(load(spark, sf_dir, "documents"))
     words = F.split("text", " ")
     rep = (
@@ -1095,7 +1082,6 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-element, which is fine off the hot path; the GEMM tier
     (similarity.py) is where vector math must be BLAS.
     """
-    ensure_session_determinism(spark)
     em = load(spark, sf_dir, "embeddings")
     e = F.transform("embedding", lambda x: x.cast("double"))
     base = em.select("vec_id", e.alias("e"))
@@ -1231,7 +1217,6 @@ def q_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage counters; the union of 5 tiny aggregates adds no shuffle of
     data-bearing rows.
     """
-    ensure_session_determinism(spark)
     _scope(f"q_curation_e2e:{sf_dir}")
     d = _parallelize_docs(load(spark, sf_dir, "documents"))
 
@@ -1391,7 +1376,6 @@ def q_dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     to a size histogram (integer keys, map-side combined) with the
     corpus total broadcast as a 1-row frame. All exact integers plus
     one exact-ratio round."""
-    ensure_session_determinism(spark)
     assign = q_dedup_cluster(spark, sf_dir)
     csize = assign.groupBy("cluster_rep").agg(
         F.count(F.lit(1)).alias("n")
@@ -1455,7 +1439,6 @@ def q_feature_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: stats aggregate is map-side combined to one row per
     group; the scoring pass is a broadcast join + per-row codegen —
     two scans total, no shuffle of the fact table."""
-    ensure_session_determinism(spark)
     li = load(spark, sf_dir, "lineitem")
     x = F.col("l_extendedprice").cast("decimal(18,2)")
     stats = li.groupBy("l_returnflag").agg(
@@ -1511,7 +1494,6 @@ def q_onehot_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     category is a detectable upstream error rather than a silent hash
     bucket). Pure per-row codegen, no shuffle, columns not rows — the
     layout a feature store materializes."""
-    ensure_session_determinism(spark)
     o = load(spark, sf_dir, "orders")
 
     def ind(col, val, name):
@@ -1595,7 +1577,6 @@ def q_quality_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen; the model rides the plan as literals (a bigger model
     would be a broadcast map + F.aggregate dot product, same shape).
     """
-    ensure_session_determinism(spark)
     d = load(spark, sf_dir, "documents").where(F.length("text") > 0)
     toks = F.split(F.col("text"), " ")
     n_tokens = F.size(toks)
@@ -1695,7 +1676,6 @@ def q_dedup_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     intermediate, and it hash-partitions evenly (uniform text hashes)
     with combiner-reduced counts.
     """
-    ensure_session_determinism(spark)
     d = _parallelize_docs(load(spark, sf_dir, "documents"))
     from tile_etl_spark.llm.dedup import let_tokens
 
@@ -1773,7 +1753,6 @@ def q_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact table never shuffles, exactly how a feature pipeline encodes
     a 100 TB training table (the o_orderkey % 100 filter just bounds
     the emitted audit rows)."""
-    ensure_session_determinism(spark)
     o = load(spark, sf_dir, "orders")
     cents = o.select(
         "o_orderkey",
@@ -1874,7 +1853,6 @@ def q_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape does not change. Position is what a downstream reader sorts
     ON within its shard file, so no stage here ever orders the full
     corpus globally."""
-    ensure_session_determinism(spark)
     d = load(spark, sf_dir, "documents").select("doc_id")
     epochs = F.explode(
         F.sequence(F.lit(0), F.lit(_SHUF_EPOCHS - 1))
@@ -1940,7 +1918,6 @@ def q_quality_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined aggregates), joined on doc_id and rolled up to
     ≤10 rows — the audit costs one extra co-keyed join over what the
     two filters already compute."""
-    ensure_session_determinism(spark)
     from tile_etl_spark.registry import QUERIES
 
     m = QUERIES["q_quality_model"](spark, sf_dir).select("doc_id", "score")
@@ -2004,7 +1981,6 @@ def q_source_yield(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivor flag is a min-over-md5 window (hash-partitioned, no global
     sort — same key as q_dedup_exact's aggregate); one final rollup on
     source. All three passes ride the same corpus scan at 100 TB."""
-    ensure_session_determinism(spark)
     from pyspark.sql import Window
     from tile_etl_spark.registry import QUERIES
 
@@ -2097,7 +2073,6 @@ def q_mixture_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
     so range partitions balance; the range-partitioned block is cached
     so the histogram pass and the rank pass see the SAME sampled
     boundaries."""
-    ensure_session_determinism(spark)
     from pyspark.sql import Window
 
     _scope(f"q_mixture_interleave:{sf_dir}")
@@ -2166,7 +2141,6 @@ def q_pack_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: a ≤bins-row rollup over the existing packer output — the
     sequential-by-construction packing (applyInPandas per shard) stays
     untouched; the audit itself is one tiny aggregate."""
-    ensure_session_determinism(spark)
     from tile_etl_spark.registry import QUERIES
 
     p = QUERIES["q_pack_sequences"](spark, sf_dir)

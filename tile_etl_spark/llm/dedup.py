@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 
 from tile_etl_spark.io import load, plan_memo, source_fingerprint
 from tile_etl_spark.registry import query
-from tile_etl_spark.session import ensure_session_determinism
 
 # Scoped persist lifecycle — see tile_etl_spark.cache for the contract.
 from tile_etl_spark.cache import persist_scoped as _persist  # noqa: E402
@@ -63,7 +62,6 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     saves nothing while the per-row ``unhex`` plus post-agg re-``hex``
     add real work. The string-key form IS the floor here; the residual
     over DuckDB is the job floor + doc-text scan, not the key width."""
-    ensure_session_determinism(spark)
     d = load(spark, sf_dir, "documents")
     return d.groupBy(
         F.md5(F.col("text").cast("binary")).alias("content_hash")
@@ -148,8 +146,9 @@ def _perm_params(n: int = N_PERM) -> list[tuple[int, int]]:
     accident — unlike a Mersenne-prime family, whose 61-bit products
     cannot be formed in int64 at all (a bounded-multiplier variant is
     near-linear, correlating the permutations and wrecking the
-    agreement-rate ≈ Jaccard estimate). Requires non-ANSI mode
-    (``ensure_session_determinism``) — ANSI would raise on the wrap.
+    agreement-rate ≈ Jaccard estimate). Requires non-ANSI mode, which
+    ``registry.query`` pins (``session.ensure_session_determinism``)
+    before every builder — ANSI would raise on the wrap.
     ``a`` / ``b`` are emitted as SIGNED int64 so F.lit round-trips."""
 
     def signed(v: int) -> int:
@@ -522,7 +521,6 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical: see plans/r14/AB_DEDUP_HASHED_SHINGLES.json."""
     import os
 
-    ensure_session_determinism(spark)
     _scope(f"q_dedup_near:{sf_dir}")
     fpr = source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
 
@@ -573,7 +571,6 @@ def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     one shingle; at 100 TB this exact tier runs after LSH.
 
     Plan shape: see ngram_jaccard_pairs."""
-    ensure_session_determinism(spark)
     _scope(f"q_dedup_ngram:{sf_dir}")
     d = _parallelize_docs(load(spark, sf_dir, "documents"))
     return ngram_jaccard_pairs(d)
@@ -696,7 +693,6 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts ride the join key, and union sizes come from per-doc counts
     — nothing quadratic in either side alone. Join keys are 64-bit
     shingle hashes (see ngram_jaccard_pairs for the collision bound)."""
-    ensure_session_determinism(spark)
     _scope(f"q_dedup_incremental:{sf_dir}")
     d = _parallelize_docs(load(spark, sf_dir, "documents"))
     is_new = F.col("source").isin(*_INC_NEW_SOURCES)
@@ -798,7 +794,6 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     64-bit signature, found via 4×16-bit band buckets (a pair within
     distance 3 must agree exactly on ≥1 of 4 bands). R-checked; unit
     test recomputes signatures in Python."""
-    ensure_session_determinism(spark)
     _scope(f"q_dedup_simhash:{sf_dir}")
     d = _parallelize_docs(load(spark, sf_dir, "documents"))
     s = simhash64(d)
@@ -906,7 +901,6 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~250× slower at sf0.1; the previous driver-collect variant held the
     whole corpus in one process — fine at test SF, fatal at 100 M
     vectors.)"""
-    ensure_session_determinism(spark)
     # No cache scope here: the builder persists nothing, and @plan_memo
     # skips the body on a hit — a scope switch (which unpersists other
     # scopes) would run on the first call only, giving memoized calls
@@ -1005,7 +999,6 @@ def q_dedup_contain(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB it rides the same LSH-candidate front end; only the
     scoring expression differs. Emits both containment and jaccard so
     downstream policy can distinguish subset-dups from near-identity."""
-    ensure_session_determinism(spark)
     _scope(f"q_dedup_contain:{sf_dir}")
     d = _parallelize_docs(load(spark, sf_dir, "documents"))
     sh = _persist(
@@ -1108,7 +1101,6 @@ def q_dedup_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle on the canonical-URL key; at 100 TB this tier
     typically removes 30-50% of a raw crawl before any content-hash
     tier runs — the ordering of tiers IS the cost model."""
-    ensure_session_determinism(spark)
     d = load(spark, sf_dir, "documents")
     url = F.concat(
         F.lit("https://"),
@@ -1214,7 +1206,6 @@ def q_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc, shingle) → ONE aggregate with 64 map-side-combining mins;
     signatures emitted as a joined string (ARRAY output is not
     driver-hashable)."""
-    ensure_session_determinism(spark)
     d = load(spark, sf_dir, "documents")
     sh = shingles_df(d)
     h = F.conv(
@@ -1277,7 +1268,6 @@ def q_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Same one-shuffle shape: hash once per (doc, word), 60 map-side
     conditional-sum aggregates, zero HOFs, zero Python."""
-    ensure_session_determinism(spark)
     return portable_simhash(load(spark, sf_dir, "documents"))
 
 
@@ -1372,7 +1362,6 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     (not just the pair list) is what a curation pipeline joins back to
     the corpus to filter.
     """
-    ensure_session_determinism(spark)
     import numpy as np
     import pandas as pd
 
@@ -1468,7 +1457,6 @@ def q_join_setsim(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join on PREFIX tokens only — the frequency-aware exact
     alternative to LSH when recall must be 1.0 — and the verify tier
     is the same intersection-as-join-key shape as exact_jaccard."""
-    ensure_session_determinism(spark)
     _scope(f"q_join_setsim:{sf_dir}")
     from pyspark.sql import Window
 
@@ -1647,7 +1635,6 @@ def q_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: candidates via band equi-join buckets (never
     all-pairs hamming); truth via shared-shingle grouping; one full
     outer join of two pair sets; constant-size output."""
-    ensure_session_determinism(spark)
     _scope(f"q_dedup_eval:{sf_dir}")
     d = _parallelize_docs(load(spark, sf_dir, "documents"))
     sigs = portable_simhash(d)
@@ -1783,7 +1770,6 @@ def q_sketch_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparison touches ONLY sketches (|sources|² tiny rows). The
     exact audit column is the only content-width join and exists for
     verification, not the production path."""
-    ensure_session_determinism(spark)
     _scope(f"q_sketch_overlap:{sf_dir}")
     d = _parallelize_docs(load(spark, sf_dir, "documents"))
     sh = _persist(
@@ -1871,7 +1857,6 @@ def q_dedup_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the doc→source map is a projection of the corpus scan — at 100 TB
     it rides the same scan, not a second pass) and a tiny aggregate
     over pair rows."""
-    ensure_session_determinism(spark)
     _scope(f"q_dedup_source_matrix:{sf_dir}")
     d = _parallelize_docs(load(spark, sf_dir, "documents"))
     pairs = ngram_jaccard_pairs(d)
@@ -1931,7 +1916,6 @@ def q_shingle_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     a per-doc rollup. At 100 TB the firsts table IS the incremental
     dedup index's sibling artifact: both are keyed by shingle hash and
     co-partition for free."""
-    ensure_session_determinism(spark)
     _scope(f"q_shingle_novelty:{sf_dir}")
     d = _parallelize_docs(load(spark, sf_dir, "documents"))
     sh = _persist(

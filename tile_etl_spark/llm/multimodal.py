@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 
 from tile_etl_spark.io import load
 from tile_etl_spark.registry import query
-from tile_etl_spark.session import ensure_session_determinism
 
 
 def payloads_df(docs: DataFrame) -> DataFrame:
@@ -60,7 +59,6 @@ def q_multimodal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text metadata ⋈ binary payloads in one row set, filtered on
     blob length, header re-hexed — BINARY columns flowing through a
     join + filter + expression, H-checked via recomputation."""
-    ensure_session_determinism(spark)
     d = load(spark, sf_dir, "documents")
     p = payloads_df(d)
     joined = d.join(p, "doc_id").select(
@@ -85,7 +83,6 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed shape is the production one: binary Arrow batches in,
     fixed-schema feature rows out, no driver involvement.
     """
-    ensure_session_determinism(spark)
     d = load(spark, sf_dir, "documents")
     p = payloads_df(d)
 
@@ -142,7 +139,6 @@ def q_multimodal_framesample(spark: SparkSession, sf_dir: str) -> DataFrame:
     blob yields one row per sampled 'frame' (every 256th byte offset) —
     the 1:N exploding UDF shape of a real ffmpeg frame sampler, with
     the decode itself stubbed to a deterministic byte slice hash."""
-    ensure_session_determinism(spark)
     d = load(spark, sf_dir, "documents")
     p = payloads_df(d)
 
@@ -205,7 +201,6 @@ def q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     numpy vectorized per batch, fixed output schema, zero driver
     involvement — per-task output is rows = ceil(bytes/{AUDIO_FRAME}),
     streaming-friendly at any corpus size."""
-    ensure_session_determinism(spark)
     d = load(spark, sf_dir, "documents")
     p = payloads_df(d)
 
@@ -273,7 +268,6 @@ def q_multimodal_pngmeta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     All JVM-side codegen expressions on BINARY — no Python, no UDFs;
     at 100 TB this is a pure map over the blob store scan."""
-    ensure_session_determinism(spark)
     d = load(spark, sf_dir, "documents")
     width = (16 + F.col("doc_id") % 1024).cast("int")
     height = (16 + F.col("n_chars") % 512).cast("int")
@@ -351,7 +345,6 @@ def q_multimodal_wavmeta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     All JVM-side codegen expressions on BINARY — no Python, no UDFs;
     at 100 TB this is a pure map over the blob store scan."""
-    ensure_session_determinism(spark)
     d = load(spark, sf_dir, "documents")
     rate = (
         F.when(F.col("doc_id") % 5 == 0, 8000)

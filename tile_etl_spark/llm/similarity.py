@@ -23,7 +23,6 @@ from tile_etl_spark import cache
 from tile_etl_spark.io import load, plan_memo
 from tile_etl_spark.operators.windows import bounded_window_key
 from tile_etl_spark.registry import query
-from tile_etl_spark.session import ensure_session_determinism
 
 N_PROBES = 10  # vec_id 0..9 serve as probe vectors
 TOP_K = 5
@@ -170,7 +169,6 @@ def cosine_topk(
 def q_sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-5 for 10 probe vectors, vec_id tiebreak,
     similarity rounded 6 dp (H-checked against DuckDB list ops)."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "embeddings")
     return cosine_topk(e, e.where(F.col("vec_id") < N_PROBES))
 
@@ -368,7 +366,6 @@ def q_sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     locality family look weak — documented at N_PROBE_CELLS too)."""
     import numpy as np
 
-    ensure_session_determinism(spark)
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
@@ -463,7 +460,6 @@ def q_sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     R-checked; the unit test measures recall vs q_sim_cosine_topk."""
     import numpy as np
 
-    ensure_session_determinism(spark)
     cache.scope(f"q_sim_ann_ivf:{sf_dir}")
     # the trainer makes iters+1 passes and the scorer one more — cache
     # the projected corpus once instead of re-reading parquet per pass
@@ -580,7 +576,6 @@ def q_embed_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: posexplode → one hash aggregate keyed (label, dim) — the
     transpose-free distributed mean; no vector ever materializes on
     the driver."""
-    ensure_session_determinism(spark)
     em = load(spark, sf_dir, "embeddings")
     flat = em.select(
         "label",
@@ -658,7 +653,6 @@ def q_embed_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the exact grid is the verification tier; the scale path
     prunes the grid to IVF-cell neighbor pairs first (q_sim_ann_ivf's
     layout), which this operator's output itself helps validate."""
-    ensure_session_determinism(spark)
     import numpy as np
 
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -809,7 +803,6 @@ def q_embed_prototype(spark: SparkSession, sf_dir: str) -> DataFrame:
     (label, dim), one (vec_id) hash agg, one per-label top-k window.
     Corpus rows never collect; everything scales as one explode + two
     map-side-combined aggregates at 100 TB."""
-    ensure_session_determinism(spark)
     em = load(spark, sf_dir, "embeddings")
     micro = F.floor(
         F.col("comp").cast("double") * 1000000 + 0.5
@@ -889,7 +882,6 @@ def q_embed_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     largest-|loading| element is positive — eigenvectors are
     sign-ambiguous and this pins a deterministic output.
     """
-    ensure_session_determinism(spark)
     import numpy as np
 
     emb = load(spark, sf_dir, "embeddings").select(
@@ -1054,7 +1046,6 @@ def q_embed_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     and reduces with ONE hash-aggregate per (vec, subspace, code) then
     a bounded window (K=10 rows per key) for the argmin. Vectors never
     pair with each other — cost is linear in corpus × K."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "embeddings")
     flat = _pq_flat(e)
     cb = _pq_codebook(flat)
@@ -1175,7 +1166,6 @@ def q_sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     + a sum over M rows per (probe, vector); the exact-distance audit
     column is corpus-width work that exists for verification only, not
     the production path."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "embeddings")
     flat = cache.persist_scoped(_pq_flat(e), tag=f"q_sim_ann_pq:{sf_dir}")
     cb = _pq_codebook(flat)
@@ -1319,7 +1309,6 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from tile_etl_spark.llm.text import q_bm25
 
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "embeddings")
     lex = q_bm25(spark, sf_dir).select(
         "doc_id", F.col("rank").alias("lex_rank")
@@ -1426,7 +1415,6 @@ def q_embed_truncation_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     real IO savings, which is exactly what the overlap number justifies
     (fixture vectors are near-uniform, so overlap here is low; on real
     MRL-trained embeddings it is typically >0.8)."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "embeddings")
     full_top = cosine_topk(e, e.where(F.col("vec_id") < N_PROBES))
     half = e.select(
@@ -1489,7 +1477,6 @@ def q_embed_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: per-row fold for the dot product (each array referenced
     once), one partial+final hash aggregate on label — one shuffle of
     ≤labels × 3 longs."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "embeddings")
     # single-pass fold: acc + x²  (r9 — was transform→zip_with→fold,
     # which materialized two intermediate arrays per row in the
@@ -1572,7 +1559,6 @@ def q_context_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     join is a k-row broadcast probe of the corpus (at 100 TB the token
     count is a stored column, not a recompute) and the running-sum
     window orders k rows — nothing here scales with corpus size."""
-    ensure_session_determinism(spark)
     from tile_etl_spark.registry import QUERIES
 
     fused = QUERIES["q_hybrid_rrf"](spark, sf_dir).select("rank", "doc_id")

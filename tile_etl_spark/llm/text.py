@@ -20,30 +20,11 @@ from tile_etl_spark.operators.windows import (
     pid_hist_window,
 )
 from tile_etl_spark.registry import query
-from tile_etl_spark.session import ensure_session_determinism
-
-# Corpus row counts collected once per (session, sf_dir, source
-# fingerprint) — a bounded broadcast-build step (1 row) like the probe
-# collects in similarity.py; the fingerprint key means a changed source
-# file recounts instead of reusing a stale N.
-_CORPUS_N: dict[tuple, int] = {}
 
 # io.source_memo store: sf_dir → (session id, source fingerprint,
 # (tfc, idf, final)) — the same bounded build-memo protocol as
 # q_dedup_near's _NEAR_MEMO (semantics live in io.source_memo).
 _TFIDF_MEMO: dict[str, tuple] = {}
-
-
-def _corpus_count(spark: SparkSession, sf_dir: str, view: str) -> int:
-    import os
-
-    fp = source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    key = (id(spark), sf_dir, fp)
-    if key not in _CORPUS_N:
-        _CORPUS_N[key] = spark.sql(
-            f"SELECT count(*) FROM {view}"
-        ).collect()[0][0]
-    return _CORPUS_N[key]
 
 
 @query(
@@ -80,7 +61,6 @@ def _corpus_count(spark: SparkSession, sf_dir: str, view: str) -> int:
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language corpus stats + most frequent term (count desc, term
     asc tiebreak). Two aggregations + one broadcast join."""
-    ensure_session_determinism(spark)
     d = load(spark, sf_dir, "documents")
     tok = d.select(
         "lang", "n_chars", F.size(F.split("text", " ")).alias("n_tokens")
@@ -141,10 +121,9 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
       rows-per-term in tfc IS the document frequency, and the ln(N/df)
       is evaluated once per term here, not once per (doc, term) pair.
       Always broadcastable (vocabulary ≪ corpus at any scale).
-    - N (corpus cardinality) is a driver-collected literal, memoized
-      per (session, sf_dir, source fingerprint) like every other
-      bounded broadcast-build step — one count job per session instead
-      of one 1-row-aggregate job per call.
+    - N (corpus cardinality) is a driver-collected literal, counted
+      once per build; ``io.source_memo`` re-runs the build only for a
+      new session or source fingerprint.
     - Scoring is ONE job: cached tfc ⋈ broadcast(idf), tf·idf, then a
       per-doc argmax via min_by on (-tfidf, term) — the struct key
       reproduces the (tfidf DESC, term ASC) ranking, and the partial
@@ -158,7 +137,6 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ln(N/df): N and df are the same doubles either way and ln is
     deterministic, so factoring it out of the pair loop cannot change
     a single output bit."""
-    ensure_session_determinism(spark)
     scope(f"q_text_tfidf:{sf_dir}")
     t = table_view(spark, sf_dir, "documents")
     fpr = source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
@@ -173,7 +151,7 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         v = f"__tfidf_tfc_{tfc.semanticHash() & 0xFFFFFFFF:x}"
         tfc.createOrReplaceTempView(v)
-        n_docs = _corpus_count(spark, sf_dir, t)
+        n_docs = spark.sql(f"SELECT count(*) FROM {t}").collect()[0][0]
         idf = persist_scoped(
             spark.sql(
                 f"SELECT term, ln(CAST({n_docs} AS DOUBLE) / count(*)) AS"
@@ -288,7 +266,6 @@ def q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID scoring: per-language marker-hit counts + argmax
     (first language in pinned order wins ties — the CASE encodes the
     same total order both sides)."""
-    ensure_session_determinism(spark)
     return langid_scored(load(spark, sf_dir, "documents"))
 
 
@@ -317,7 +294,6 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality scoring: token count, punctuation ratio, stopword ratio,
     mean token length, and a pass/fail gate — the standard pre-training
     filter feature set, all in one projection pass."""
-    ensure_session_determinism(spark)
     d = load(spark, sf_dir, "documents")
     words = F.split("text", " ")
     stop = F.size(
@@ -356,7 +332,6 @@ def q_text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting two ways: whitespace split and a BPE-ish regex
     (letter runs / digit runs / single symbols) — the cheap proxy used
     to budget LLM token counts at corpus scale."""
-    ensure_session_determinism(spark)
     d = load(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
@@ -404,7 +379,6 @@ def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     posexplode + window + groupBy shape that shuffled every token row.
     Logic in ``fingerprint_stats`` (shared with the scale-stress
     harness)."""
-    ensure_session_determinism(spark)
     return fingerprint_stats(load(spark, sf_dir, "documents"))
 
 
@@ -470,7 +444,6 @@ def q_text_normalize(spark, sf_dir: str):
 
     Pure single-pass narrow expressions: no shuffle, no UDF — at
     100 TB this pipelines into the scan like q_pii_scrub."""
-    ensure_session_determinism(spark)
     d = load(spark, sf_dir, "documents")
     normalized = F.trim(
         F.regexp_replace(
@@ -520,7 +493,6 @@ def q_text_inverted_index(spark, sf_dir: str):
     past the aggregate because HAVING prunes them before the sink, and
     hot terms would instead go to a postings-sharding tier (documented,
     not needed at fixture scale)."""
-    ensure_session_determinism(spark)
     d = load(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id", F.explode(F.split("text", " ")).alias("term")
@@ -594,7 +566,6 @@ def q_text_cooccur(spark, sf_dir: str):
     blowup exactly like the LSH shingle prune in llm/dedup.py — at
     100 TB the vocabulary table is the small side of a broadcast join
     and the pair aggregate is the only wide shuffle."""
-    ensure_session_determinism(spark)
     scope(f"q_text_cooccur:{sf_dir}")
     d = load(spark, sf_dir, "documents")
     # three consumers (vocab, both self-join sides) — persist instead
@@ -682,7 +653,6 @@ def q_text_bigram_lm(spark, sf_dir: str):
     The n >= 5 floor caps the table the way real LM tables prune
     hapax bigrams; at 100 TB the pair aggregate is the one wide
     shuffle, map-side combined."""
-    ensure_session_determinism(spark)
     d = load(spark, sf_dir, "documents").where(F.length("text") > 0)
     words = d.select(F.split("text", " ").alias("w"))
     bigrams = words.select(
@@ -768,7 +738,6 @@ def q_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     ascii nibble math), so the H-check pins the exact feature layout.
     Shape: split → explode → one (doc, bucket) hash aggregate; one
     shuffle, map-side combined, no HOFs."""
-    ensure_session_determinism(spark)
     d = load(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id", F.explode(F.split("text", " ")).alias("t")
@@ -825,7 +794,6 @@ def q_text_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combined. At 100 TB the df table is the only wide state
     and it shrinks with deduplication; the join back is a
     hash-partitioned equi-join on the sentence key."""
-    ensure_session_determinism(spark)
     scope(f"q_text_boilerplate:{sf_dir}")
     d = load(spark, sf_dir, "documents")
     sent = (
@@ -921,7 +889,6 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     ⇒ identical engine arithmetic) with doc_id tiebreak; only the
     emitted score is rounded. A doc lacking term i contributes +0.0 for
     it (IEEE-identical to the oracle's absent-row sum)."""
-    ensure_session_determinism(spark)
     d = load(spark, sf_dir, "documents")
     tfs = ", ".join(
         f"CAST(size(filter(tk, t -> t = '{t}')) AS BIGINT) AS tf{i}"
@@ -1013,7 +980,6 @@ def q_lm_doc_score(spark, sf_dir: str):
     two aggregates; scoring is one hash join of doc-bigrams against
     the LM on (w1, w2) — co-partitioned with the pair aggregate at
     100 TB — and one per-doc aggregate."""
-    ensure_session_determinism(spark)
     scope(f"q_lm_doc_score:{sf_dir}")
     d = load(spark, sf_dir, "documents").where(F.length("text") > 0)
     words = d.select("doc_id", F.split("text", " ").alias("w"))
@@ -1092,7 +1058,6 @@ def q_text_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The range-partitioned block is cached so the totals pass and the
     local-prefix pass agree on partition boundaries."""
-    ensure_session_determinism(spark)
     scope(f"q_text_vocab_growth:{sf_dir}")
     d = load(spark, sf_dir, "documents")
     terms = d.select(
@@ -1154,7 +1119,6 @@ def q_text_compress_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     core of zlib, which at 100 TB argues for sampling long docs (first
     64 KB compresses indistinguishably from the whole for gating
     purposes — documented knob, not implemented here)."""
-    ensure_session_determinism(spark)
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
@@ -1229,7 +1193,6 @@ def q_text_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of corpus size, then a |langs|-row broadcast join for
     the shares — audit output is constant-size however big the input.
     """
-    ensure_session_determinism(spark)
     pred = langid_scored(load(spark, sf_dir, "documents"))
     cm = pred.groupBy("lang", "predicted").agg(
         F.count(F.lit(1)).alias("n")
@@ -1275,7 +1238,6 @@ def q_text_hapax(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: one token explode, one corpus term-count aggregate
     (map-side combined), one join back on term, one source rollup —
     the same explode+agg skeleton as tf-idf, nothing quadratic."""
-    ensure_session_determinism(spark)
     scope(f"q_text_hapax:{sf_dir}")
     d = load(spark, sf_dir, "documents")
     tok = persist_scoped(

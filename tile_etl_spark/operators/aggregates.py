@@ -23,7 +23,6 @@ from tile_etl_spark.io import (
     table_view,
 )
 from tile_etl_spark.registry import query
-from tile_etl_spark.session import ensure_session_determinism
 
 # Dialect-shared Q1 text (valid Spark SQL and DuckDB SQL verbatim):
 # oracle binds {t}=lineitem, the builder binds {t}=the memoized temp
@@ -164,7 +163,6 @@ _Q1_FROM_CELLS_SQL = """
 )
 def q_agg_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ungrouped multi-aggregate: one shuffle of one row per partition."""
-    ensure_session_determinism(spark)
     li = load(spark, sf_dir, "lineitem")
     return li.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -191,7 +189,6 @@ def q_agg_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     _Q1_CELLS_SQL), with zero per-row BigDecimal work and the same
     stage count as the canonical plan.
     """
-    ensure_session_determinism(spark)
     return q1_from_cells(spark, table_view(spark, sf_dir, "lineitem"))
 
 
@@ -219,7 +216,6 @@ def q_agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct aggregates: Catalyst plans these as an Expand + two-level
     aggregate — the dedup happens partitioned by (group, value), never
     on one node."""
-    ensure_session_determinism(spark)
     li = load(spark, sf_dir, "lineitem")
     return li.groupBy("l_suppkey").agg(
         F.countDistinct("l_partkey").alias("n_parts"),
@@ -242,7 +238,6 @@ def q_agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Post-aggregation filter (HAVING) — a plain Filter above the agg;
     Catalyst cannot push it below (it references the aggregate)."""
-    ensure_session_determinism(spark)
     o = load(spark, sf_dir, "orders")
     return (
         o.groupBy("o_custkey")
@@ -291,7 +286,6 @@ def q_agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     four arms at both SFs); no coalesce stitch — the r12 A/B measured
     the COALESCE(1) hint slower than letting the tiny exchange
     happen (0.177 vs 0.145)."""
-    ensure_session_determinism(spark)
     t = table_view(spark, sf_dir, "orders")
     return spark.sql(
         f"""
@@ -333,7 +327,6 @@ def q_agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf1, while the cells pre-agg's extra exchange is constant-size at
     any scale; the one-SQL build removes the ~10 eager DataFrame
     steps the r11 form paid. Identical by additivity of counts."""
-    ensure_session_determinism(spark)
     t = table_view(spark, sf_dir, "orders")
     return spark.sql(
         f"""
@@ -367,7 +360,6 @@ def q_agg_gsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_agg_rollup sf1 A/B — Expand belongs above the cells, and the
     former two-statement cells+temp-view dance paid a
     createOrReplaceTempView round trip per build)."""
-    ensure_session_determinism(spark)
     t = table_view(spark, sf_dir, "orders")
     return spark.sql(
         f"""
@@ -400,7 +392,6 @@ def q_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     order of the one-pass moment formulas differs across engines in the
     last few ulps). Computed over small-magnitude columns so 6-dp
     rounding genuinely absorbs the noise."""
-    ensure_session_determinism(spark)
     li = load(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.round(F.stddev_samp("l_quantity"), 6).alias("sd_qty"),
@@ -428,7 +419,6 @@ def q_agg_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver harness canonicalizes results through pandas, which cannot
     hash list cells — the string form exercises the same aggregate with
     a hashable output."""
-    ensure_session_determinism(spark)
     o = load(spark, sf_dir, "orders")
     return o.groupBy("o_custkey").agg(
         F.array_join(
@@ -453,7 +443,6 @@ def q_agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT percentiles (linear interpolation in both engines) — the
     sort-based exact aggregate, vs q_agg_approx's sketch. At 100 TB use
     the approx form; the exact form exists for verification tiers."""
-    ensure_session_determinism(spark)
     li = load(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.round(F.percentile("l_quantity", 0.5), 6).alias("median_qty"),
@@ -477,7 +466,6 @@ def q_agg_argminmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer's priciest/cheapest order. NB: ties on o_totalprice would
     be engine-dependent; the fixture's 2-decimal prices are unique per
     customer (asserted by the hash match itself at sf0.01)."""
-    ensure_session_determinism(spark)
     o = load(spark, sf_dir, "orders")
     return o.groupBy("o_custkey").agg(
         F.max_by("o_orderkey", "o_totalprice").alias("priciest_order"),
@@ -705,7 +693,6 @@ def q_agg_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     default IS the tolerance being asserted, so the sketch must be
     strictly tighter than the gate for the check to measure drift
     rather than luck."""
-    ensure_session_determinism(spark)
     li = load(spark, sf_dir, "lineitem")
 
     # Two separate head jobs on purpose: mixing count_distinct with
@@ -805,7 +792,6 @@ def q_agg_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin by construction) plus the exact count as a real cross-engine
     value check; the exact leg exists only to verify — production runs
     the sketch alone."""
-    ensure_session_determinism(spark)
     li = load(spark, sf_dir, "lineitem")
     shards = li.groupBy(
         "l_returnflag", (F.col("l_orderkey") % 16).alias("shard")
@@ -847,7 +833,6 @@ def q_agg_stringagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_agg_collect lesson). Grouped lists are bounded here by the
     filter; unbounded LISTAGG at 100 TB belongs in the inverted-index
     shape (df-capped) instead."""
-    ensure_session_determinism(spark)
     o = load(spark, sf_dir, "orders").where(F.col("o_custkey") % 97 == 0)
     return o.groupBy("o_orderstatus").agg(
         F.array_join(
@@ -884,7 +869,6 @@ def q_agg_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     when()-wrapped inputs (count counts non-nulls; sum skips nulls;
     count distinct ignores nulls), which compiles to the same single
     partial+final hash aggregate."""
-    ensure_session_determinism(spark)
     li = load(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n_all"),
@@ -930,7 +914,6 @@ def q_agg_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     every mask positive — no sign-bit/overflow divergence between
     engines.
     """
-    ensure_session_determinism(spark)
     li = load(spark, sf_dir, "lineitem")
     words = (
         li.select(
@@ -985,7 +968,6 @@ def q_calendar_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, so the join input is days, not orders — at 100 TB the fill
     join costs nothing regardless of table size. DECIMAL revenue sums;
     zero-fill happens after the cast so both engines emit exact 0.0."""
-    ensure_session_determinism(spark)
     o = load(spark, sf_dir, "orders")
     # DATE-typed calendar: constructed TIMESTAMP outputs are the
     # driver-red representation class (round 3) — and o_orderdate is a
@@ -1034,7 +1016,6 @@ def q_agg_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     state — are what make incremental pipelines hard; see
     q_agg_bitmap_distinct and q_agg_hll_sketch for the mergeable
     distinct-count states.)"""
-    ensure_session_determinism(spark)
     o = load(spark, sf_dir, "orders")
 
     def partial(df: DataFrame) -> DataFrame:
@@ -1100,7 +1081,6 @@ def q_agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     range-partition + broadcast-offsets two-pass rewrite used by
     q_hist_equidepth) and a 1-row-per-group pick. The emitted price is
     DOUBLE per the §5.3 money rule."""
-    ensure_session_determinism(spark)
     from pyspark.sql import Window
 
     li = load(spark, sf_dir, "lineitem").select(

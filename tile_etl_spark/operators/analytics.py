@@ -35,7 +35,6 @@ from tile_etl_spark.operators.windows import (
     pid_hist_window,
 )
 from tile_etl_spark.registry import query
-from tile_etl_spark.session import ensure_session_determinism
 
 # Bloom geometry: m = 8192 bits (128 int64 words), k = 3 hash probes.
 # For the ~40 part keys of one p_size at sf0.01 the false-positive rate
@@ -119,7 +118,6 @@ def q_join_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi-join — but the probe-side shuffle volume at 100 TB is the
     match set, not the table.
     """
-    ensure_session_determinism(spark)
     part = load(spark, sf_dir, "part")
     li = load(spark, sf_dir, "lineitem")
     keys = part.where(F.col("p_size") == 15).select(
@@ -167,7 +165,6 @@ def q_hist_equiwidth(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same pattern as tf-idf's corpus-size N) — two passes over the
     data, zero driver-side math, map-side-combined count per bucket.
     """
-    ensure_session_determinism(spark)
     li = load(spark, sf_dir, "lineitem")
     c = li.select(F.expr(_EW_CENTS).alias("cents"))
     bounds = c.agg(
@@ -222,7 +219,6 @@ def q_hist_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram rows), then ntile becomes arithmetic on the global row
     number and the per-bucket aggregate is an ordinary groupBy.
     """
-    ensure_session_determinism(spark)
     cache.scope(f"q_hist_equidepth:{sf_dir}")
     c = load(spark, sf_dir, "lineitem").select(
         F.expr(_EW_CENTS).alias("cents"), "l_orderkey", "l_linenumber"
@@ -315,7 +311,6 @@ def q_topk_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent of partitioning, which only affects candidate-set
     slack.
     """
-    ensure_session_determinism(spark)
     import pandas as pd
 
     li = load(spark, sf_dir, "lineitem")
@@ -407,7 +402,6 @@ def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     the single global sort. At 100 TB the global window sees ~frontier-
     sized input (thousands of points), not the table.
     """
-    ensure_session_determinism(spark)
     o = load(spark, sf_dir, "orders")
     pts = o.groupBy(
         dec("o_totalprice").alias("price"),
@@ -469,7 +463,6 @@ def q_agg_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     -Σ p·log2 p sum runs over ≤ |event types| (single digits) doubles;
     6-dp rounding absorbs cross-engine addition-order ulp drift.
     """
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     c = e.groupBy("user_id", "event_type").agg(
         F.count(F.lit(1)).alias("cnt")
@@ -538,7 +531,6 @@ def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     first/last — the same encoding trick in both engines, no struct
     comparison semantics to align.
     """
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     us = F.unix_micros("ts")
     touch = F.when(
@@ -615,7 +607,6 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     the customer frame, each a parallel range shuffle, NO
     single-reducer ntile sort anywhere even if the customer frame
     itself outgrows one reducer."""
-    ensure_session_determinism(spark)
     cache.scope(f"q_rfm_segments:{sf_dir}")
     o = load(spark, sf_dir, "orders")
     cust = o.groupBy(F.col("o_custkey").alias("custkey")).agg(
@@ -689,7 +680,6 @@ def q_dq_partition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     at any scale the windowed frame is calendar-sized. The alert needs
     ≥ 3 trailing days and σ > 0 (both spelled identically in the
     oracle) so cold starts and constant weeks never divide by zero."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(F.col("ts").cast("date").alias("event_date")).agg(
         F.count(F.lit(1)).alias("n")
@@ -757,7 +747,6 @@ def q_rel_division(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantifier satisfiable and the answer non-empty at any scale
     (21/1500 customers at sf0.01, 325/15000 at sf0.1).
     """
-    ensure_session_determinism(spark)
     part = load(spark, sf_dir, "part")
     orders = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
@@ -812,7 +801,6 @@ def q_cumulative_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative-sum-of-first-appearances, mathematically identical and
     linear at 100 TB. (HLL sketches — q_agg_hll_sketch — are the
     approximate mergeable variant when per-segment curves multiply.)"""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     firsts = e.groupBy("user_id").agg(
         F.min(F.col("ts").cast("date")).alias("first_day")
@@ -893,7 +881,6 @@ def q_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     but equal-delta rows commute under prefix summation, so the set of
     running-sum values (hence the max) is order-invariant — the same
     argument that makes the sweep deterministic in one pass."""
-    ensure_session_determinism(spark)
     from tile_etl_spark.operators.sessionize import sessionize
 
     cache.scope(f"q_peak_concurrency:{sf_dir}")
@@ -969,7 +956,6 @@ def q_seasonality_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's convention (1 = Sunday); the oracle shifts DuckDB's
     0-based dayofweek to match.
     Two map-side-combined aggregates, the second over 7×|types| rows."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type",
@@ -1030,7 +1016,6 @@ def q_funnel_ttc(spark: SparkSession, sf_dir: str) -> DataFrame:
     reversed running-min rewrite (ONE user-keyed shuffle — the
     correlated-subquery oracle is the O(n·m) semantics statement, not
     the plan), then a single global summary row."""
-    ensure_session_determinism(spark)
     from tile_etl_spark.operators.joins import asof_join
 
     e = load(spark, sf_dir, "events")
@@ -1105,7 +1090,6 @@ def q_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the basket self-join is the only wide stage and it
     co-partitions on the basket key; hot baskets are bounded by
     items-per-order, not corpus size."""
-    ensure_session_determinism(spark)
     li = load(spark, sf_dir, "lineitem")
     p = load(spark, sf_dir, "part")
     baskets = (
@@ -1196,7 +1180,6 @@ def q_corr_pearson(spark: SparkSession, sf_dir: str) -> DataFrame:
     count), then per-group scalar math — the same single-shuffle cost
     as a plain sum at any scale. The same moment-vector is mergeable
     state for incremental maintenance (cf. q_agg_incremental)."""
-    ensure_session_determinism(spark)
     li = load(spark, sf_dir, "lineitem")
     x = F.col("l_quantity").cast("decimal(18,2)")
     y = F.col("l_extendedprice").cast("decimal(18,2)")
@@ -1274,7 +1257,6 @@ def q_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the only wide shuffle), a 1-row pooled-stats reduce broadcast
     back, and a 2-group arm aggregate — CUPED at 100 TB costs one
     pass + one broadcast."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     v = F.col("value").cast("decimal(18,6)")
     zero = F.lit(0).cast("decimal(18,6)")
@@ -1345,7 +1327,6 @@ def q_sample_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange carries k·partitions rows, not the table. md5 on the key
     string is identical in both engines; the event_id tiebreak makes
     the order total."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     w = Window.partitionBy("event_type").orderBy(
         F.md5(F.col("event_id").cast("string")), F.col("event_id")
@@ -1402,7 +1383,6 @@ def q_anomaly_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     computation in both engines. Shape: one day-grain aggregate (the
     only pass over raw events), then a tiny per-type window over the
     calendar grain; at 100 TB the window input is days×types rows."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.date_trunc("day", "ts").cast("date").alias("d")
@@ -1495,7 +1475,6 @@ def q_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     derivation (first 8 md5 hex chars as uint32, +0.5, /2^32) is
     spelled digit-arithmetically in the oracle so no hex-parsing
     dialect difference can bite."""
-    ensure_session_determinism(spark)
     d = load(spark, sf_dir, "documents")
     u = (
         F.conv(
@@ -1601,7 +1580,6 @@ def q_agg_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins against those 128 broadcast-able cells. Hashes are the
     engine-portable md5-hex construction (cf. q_sample_weighted), so
     the sketch is bit-identical cross-engine → H-checked."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     js = F.explode(
         F.array(*[F.lit(j) for j in range(_CM_D)])
@@ -1715,7 +1693,6 @@ def q_agg_bloom_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     — broadcast, so the probe side never shuffles. This is exactly the
     semi-join-reduction shape a distributed engine ships to the scan
     side of a selective join."""
-    ensure_session_determinism(spark)
     c = load(spark, sf_dir, "customer")
     js = F.explode(
         F.array(*[F.lit(j) for j in range(_BF_K)])
@@ -1802,7 +1779,6 @@ def q_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     events table reduces map-side. Output is a single audit row with
     all four cell means, so the parallel-trends eyeball check is in
     the result itself."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     cutoff = F.lit("2024-01-16 00:00:00").cast("timestamp")
     cells = (
@@ -1902,7 +1878,6 @@ def q_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows over supplier-count-sized groups (thousands, not fact
     rows) and a tiny final aggregate — fact data crosses the wire
     once, at supplier grain."""
-    ensure_session_determinism(spark)
     l = load(spark, sf_dir, "lineitem")
     s = load(spark, sf_dir, "supplier")
     n = load(spark, sf_dir, "nation")
@@ -1990,7 +1965,6 @@ def q_drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one hash-aggregate to ≤ 2·|bins| cells, two 1-row
     period totals broadcast back — the full table reduces map-side;
     output is |bins| audit rows."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     cutoff = F.lit("2024-01-16 00:00:00").cast("timestamp")
     binned = e.select(
@@ -2065,7 +2039,6 @@ def q_join_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     key needs salting. The fixture's user_id is near-uniform by
     construction — the profile PROVING that is the point (you check
     before you salt, not after the straggler)."""
-    ensure_session_determinism(spark)
     kc = cache.persist_scoped(
         load(spark, sf_dir, "events")
         .groupBy("user_id")

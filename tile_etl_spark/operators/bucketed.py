@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 
 from tile_etl_spark.io import as_double, dec, load
 from tile_etl_spark.registry import query
-from tile_etl_spark.session import ensure_session_determinism
 
 N_BUCKETS = 16
 
@@ -117,7 +116,6 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-hashed into the same 16 buckets and pre-sorted, so the
     sort-merge join plans with no Exchange and no Sort (falls back to
     the shuffling join where no metastore exists — same rows)."""
-    ensure_session_determinism(spark)
     bkt = bucketed_tables(spark, sf_dir)
     if bkt is not None:
         o, li = bkt

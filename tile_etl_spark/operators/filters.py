@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from tile_etl_spark.io import as_double, dec, load, table_view
 from tile_etl_spark.registry import query
-from tile_etl_spark.session import ensure_session_determinism
 
 # Dialect-shared SQL (valid Spark SQL AND DuckDB SQL verbatim): the
 # oracle binds {t}=the DuckDB view, the builder binds {t}=the memoized
@@ -43,7 +42,6 @@ _FILTER_RANGE_SQL = """
 def q_scan_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pure projection: ReadSchema must shrink to exactly 4 columns —
     the scan never materializes the other 7."""
-    ensure_session_determinism(spark)
     return load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_shipdate"
     )
@@ -59,7 +57,6 @@ def q_scan_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_scan_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range predicate pushed to the parquet reader (PushedFilters:
     GreaterThanOrEqual(l_shipdate, ...)) — row-group min/max skipping."""
-    ensure_session_determinism(spark)
     li = load(spark, sf_dir, "lineitem")
     return li.filter(F.col("l_shipdate") >= F.lit("1998-01-01").cast("timestamp")).select(
         "l_orderkey", "l_linenumber", "l_shipdate", "l_quantity"
@@ -73,7 +70,6 @@ def q_filter_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     final hash agg with a 1-row shuffle. Issued as ONE dialect-shared
     spark.sql() over the memoized scan view (_FILTER_RANGE_SQL) —
     identical resolved plan, ~10× cheaper plan construction."""
-    ensure_session_determinism(spark)
     return spark.sql(
         _FILTER_RANGE_SQL.format(t=table_view(spark, sf_dir, "lineitem"))
     )
@@ -95,7 +91,6 @@ def q_filter_range(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_project_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Computed projection — stays inside whole-stage codegen; no
     Python in the row path."""
-    ensure_session_determinism(spark)
     li = load(spark, sf_dir, "lineitem")
     revenue = dec("l_extendedprice") * (1 - dec("l_discount"))
     return li.select(
@@ -121,7 +116,6 @@ def q_project_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_filter_in_like(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN-list, LIKE, BETWEEN, NOT — all pushdown-eligible (In,
     StringContains, StringStartsWith reach the parquet reader)."""
-    ensure_session_determinism(spark)
     p = load(spark, sf_dir, "part")
     return p.filter(
         (
@@ -153,7 +147,6 @@ def q_filter_null_bool(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose UNKNOWN outcome must be kept (IS NOT FALSE), and boolean
     outputs carrying NULLs. The fixture has no stored NULLs, so NULL is
     injected with the same CASE in both engines."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     v = F.when(F.col("event_type") == "error", F.lit(None)).otherwise(
         F.col("value")

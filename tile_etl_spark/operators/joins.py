@@ -17,7 +17,6 @@ from tile_etl_spark.io import (
     as_double, cached_dim_view, dec, load, table_view,
 )
 from tile_etl_spark.registry import query
-from tile_etl_spark.session import ensure_session_determinism
 
 
 @query(
@@ -46,7 +45,6 @@ def q_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     don't grow with fact data). Interleaved A/B, values bit-identical:
     sf0.1 median 0.426 s → 0.346 (−19%); sf1 0.954 → 0.775 (−19%,
     min −33%) — a both-SF winner, no inversion."""
-    ensure_session_determinism(spark)
     o = table_view(spark, sf_dir, "orders")
     c = cached_dim_view(spark, sf_dir, "customer",
                         ("c_custkey", "c_nationkey"))
@@ -80,7 +78,6 @@ def q_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left outer with null extension: customers without orders keep
     n_orders = 0 (count of a NULL column) and NULL total_spend."""
-    ensure_session_determinism(spark)
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders")
     return (
@@ -104,7 +101,6 @@ def q_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_join_right(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Right outer: every customer survives; unmatched ones carry a
     NULL o_orderkey."""
-    ensure_session_determinism(spark)
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders")
     return o.join(c, o.o_custkey == c.c_custkey, "right").select(
@@ -130,7 +126,6 @@ def q_join_right(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full outer over partially overlapping integer domains — rows
     null-extended on either side."""
-    ensure_session_determinism(spark)
     a = (
         load(spark, sf_dir, "part")
         .groupBy(F.col("p_size").alias("k"))
@@ -156,7 +151,6 @@ def q_join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left semi — customers WITH orders; probe side deduplicates, no
     row multiplication, and only the left schema survives."""
-    ensure_session_determinism(spark)
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders")
     return c.join(
@@ -173,7 +167,6 @@ def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left anti — customers WITHOUT orders."""
-    ensure_session_determinism(spark)
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders")
     return c.join(
@@ -220,7 +213,6 @@ def q_join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.717 -> 0.693 (wash — the build is an O(dim) constant that
     amortizes); shipped because pinning hot dims is the long-lived
     cluster serving path regardless."""
-    ensure_session_determinism(spark)
     li = table_view(spark, sf_dir, "lineitem")
     pt = cached_dim_view(spark, sf_dir, "part",
                          ("p_partkey", "p_brand"))
@@ -259,7 +251,6 @@ def q_join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cartesian product of two tiny dims (5×25) — the only place a
     cross join is ever acceptable; Spark broadcasts one side."""
-    ensure_session_determinism(spark)
     r = load(spark, sf_dir, "region")
     n = load(spark, sf_dir, "nation")
     return r.crossJoin(n).select(
@@ -296,7 +287,6 @@ def q_join_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     probed against the full catalog — which is how production theta
     joins are kept affordable: bound one side, let the other scale.
     Output then grows linearly with the big side."""
-    ensure_session_determinism(spark)
     p = load(spark, sf_dir, "part")
     p1 = (
         p.alias("p1")
@@ -341,7 +331,6 @@ def q_join_nullsafe(spark: SparkSession, sf_dir: str) -> DataFrame:
     1/97-sampled: the NULL bucket is inherently quadratic — at scale
     null-keyed rows are the canonical skew case (salt or pre-filter
     them; here the sample keeps the demo bounded)."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     k = F.when(F.col("event_type") == "error", F.lit(None)).otherwise(
         F.col("user_id")
@@ -479,7 +468,6 @@ def q_join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the naive theta join; results identical). The banding equi-join
     (interval_self_join / _INTERVAL_SELF_SQL) remains the composable
     API and the shape stream-stream joins use."""
-    ensure_session_determinism(spark)
     return spark.sql(
         _INTERVAL_WINDOW_SQL.format(t=table_view(spark, sf_dir, "events"))
     )
@@ -569,7 +557,6 @@ def q_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     Issued as the single-spark.sql twin of asof_join's union-tag +
     running last(ignorenulls) shape — same plan, right rows ordering
     before left at equal instants, right ties to the highest id."""
-    ensure_session_determinism(spark)
     return spark.sql(
         _ASOF_BACKWARD_SQL.format(t=table_view(spark, sf_dir, "events"))
     )
@@ -657,7 +644,6 @@ def q_join_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     catalog, so pinning name_pairs driver-side would trade the sweep's
     quadratic bug for a broadcast OOM at large SF — AQE decides
     broadcast-vs-shuffle from the measured size instead."""
-    ensure_session_determinism(spark)
     p = load(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_name")
     dn = (
         p.select("p_brand", "p_name")
@@ -748,7 +734,6 @@ def q_join_asof_fwd(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same union-tag + running-last rewrite over the reversed (ts DESC)
     order — still ONE user-keyed shuffle, no inequality join; the
     oracle is the correlated ascending top-1 subquery."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     errors = e.where(F.col("event_type") == "error").select(
         "event_id", "user_id", "ts"
@@ -780,7 +765,6 @@ def q_join_hints(spark: SparkSession, sf_dir: str) -> DataFrame:
     choose, not WHAT the query means — results are hash-identical to
     the unhinted plan, which is exactly what the oracle proves.
     test_plan_quality pins that the hint is actually honored."""
-    ensure_session_determinism(spark)
     c = load(spark, sf_dir, "customer")
     n = load(spark, sf_dir, "nation").hint("shuffle_hash")
     return (

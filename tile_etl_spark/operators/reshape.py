@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from tile_etl_spark.io import load, table_view
 from tile_etl_spark.registry import query
-from tile_etl_spark.session import ensure_session_determinism
 
 
 @query(
@@ -52,7 +51,6 @@ def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~5 result rows: bit-identical by additivity, no per-row decimal
     casts. count(IF(...)) yields 0 on empty cells and sum(IF(...))
     yields NULL — the oracle's FILTER semantics exactly."""
-    ensure_session_determinism(spark)
     t = table_view(spark, sf_dir, "orders")
     cents = "CAST(round(o_totalprice * 100) AS BIGINT)"
 
@@ -99,7 +97,6 @@ def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot (melt): wide → long without a shuffle — a generator
     expression per row, the columnar-friendly normalization step."""
-    ensure_session_determinism(spark)
     li = load(spark, sf_dir, "lineitem")
     return li.unpivot(
         ["l_orderkey", "l_linenumber"],
@@ -130,7 +127,6 @@ def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uncorrelated scalar subquery: planned once, broadcast as a
     literal into the filter/projection (Catalyst subquery execution)."""
-    ensure_session_determinism(spark)
     load(spark, sf_dir, "orders").createOrReplaceTempView("orders_sq")
     return spark.sql(
         """
@@ -158,7 +154,6 @@ def q_subquery_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated scalar subquery: Catalyst decorrelates it into an
     aggregate + join — never a per-row re-execution (the plan-quality
     suite's no-nested-loop rule applies here too)."""
-    ensure_session_determinism(spark)
     load(spark, sf_dir, "orders").createOrReplaceTempView("orders_sqc")
     load(spark, sf_dir, "customer").createOrReplaceTempView("customer_sqc")
     return spark.sql(
@@ -203,7 +198,6 @@ def q_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     join against the previous step's frontier — at scale the frontier
     is partition-parallel and the fixpoint terminates when a step adds
     no rows (here: depth 4)."""
-    ensure_session_determinism(spark)
     load(spark, sf_dir, "nation").createOrReplaceTempView("nation")
     return spark.sql(_RECURSIVE_SQL)
 
@@ -234,7 +228,6 @@ def q_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plan-level point being pinned: a correlated LIMIT subquery
     must not execute once per outer row at scale, it must become one
     set-based plan."""
-    ensure_session_determinism(spark)
     load(spark, sf_dir, "region").createOrReplaceTempView("region")
     load(spark, sf_dir, "nation").createOrReplaceTempView("nation")
     load(spark, sf_dir, "customer").createOrReplaceTempView("customer")

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 from tile_etl_spark.io import as_double, load, plan_memo, table_view
 from tile_etl_spark.operators.windows import bounded_window_key
 from tile_etl_spark.registry import query
-from tile_etl_spark.session import ensure_session_determinism
 
 GAP_US = 30 * 60 * 1_000_000  # 30-minute session gap
 
@@ -75,7 +74,6 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE dialect-shared spark.sql() over the memoized events view
     (_SESSIONIZE_SQL; the generic ``sessionize()`` helper remains the
     composable DataFrame form used by the other session operators)."""
-    ensure_session_determinism(spark)
     return spark.sql(
         _SESSIONIZE_SQL.format(
             epoch="unix_micros", t=table_view(spark, sf_dir, "events")
@@ -102,7 +100,6 @@ def q_window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     event contributes to exactly 4 epoch-aligned windows — the oracle
     expands them arithmetically, Spark's F.window does the same via an
     internal explode."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     return (
         e.groupBy(
@@ -144,7 +141,6 @@ def q_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     r12 A/Bs: 0.125 (decimal-cast window()) -> 0.105 (micro-units) ->
     0.106/0.098 (date_trunc); the remainder is scan+floor by DECOMP
     (scan 0.039 + floor 0.026 of the 0.103 full)."""
-    ensure_session_determinism(spark)
     t = table_view(spark, sf_dir, "events")
     return spark.sql(
         f"""
@@ -269,7 +265,6 @@ def q_ts_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (observation_pairs). Values are picked, never summed — no
     float-order risk.
     """
-    ensure_session_determinism(spark)
     pairs = observation_pairs(load(spark, sf_dir, "events"))
     step = F.lit(RESAMPLE_S).cast("long")
     return pairs.withColumn(
@@ -341,7 +336,6 @@ def q_ts_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the same expression tree in both engines (double
     subtraction/division/rounding), so the 6-dp values hash-match.
     """
-    ensure_session_determinism(spark)
     pairs = observation_pairs(load(spark, sf_dir, "events"))
     step = F.lit(RESAMPLE_S).cast("long")
     rows = pairs.withColumn(
@@ -421,7 +415,6 @@ def q_ts_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain with day/month folding hourly partials (documented, same
     arithmetic). DECIMAL sums keep the three grains' values exactly
     consistent (hour rows sum to their day row bit-for-bit)."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events").select(
         F.date_trunc("hour", "ts").alias("h"),
         F.date_trunc("day", "ts").alias("d"),
@@ -490,7 +483,6 @@ def q_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     as-of lookup this table serves is q_join_asof's union+window
     rewrite. The (ts, event_id) total-order tiebreak makes the
     intervals deterministic under same-timestamp changes."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events").where(
         F.col("event_type") == "purchase"
     )
@@ -541,7 +533,6 @@ def q_outlier_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast back into the scan for the scoring pass. Group
     cardinality (3 event types) makes the medians' per-group sort the
     bounded cost."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     med = e.groupBy("event_type").agg(
         F.expr("percentile(value, 0.5)").alias("med")
@@ -599,7 +590,6 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     count), tiny stats broadcast, then a pure map — the big side never
     shuffles. At 100 TB swap percentile for approx_percentile and a
     tolerance when sketch error is acceptable."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     pct = e.groupBy("event_type").agg(
         F.expr("percentile(value, 0.05)").alias("p05"),
@@ -645,7 +635,6 @@ def q_ts_moving_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One user-keyed shuffle + in-partition sort; the bounded ROWS frame
     keeps per-row state at 5 values regardless of scale."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -708,7 +697,6 @@ def q_ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-partition sort — no shuffle beyond the user_id hash, O(1) state
     per row at 100 TB.
     """
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     num = F.lit(0.0)
@@ -788,7 +776,6 @@ def q_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate and a bounded top-k. At 100 TB the per-session state is
     {PATH_LEN} rows and the path-count table is tiny (|event types|^
     {PATH_LEN} ceiling)."""
-    ensure_session_determinism(spark)
     s = sessionize(load(spark, sf_dir, "events"))
     w = Window.partitionBy("user_id", "session_id").orderBy(
         "__us", "event_id"
@@ -887,7 +874,6 @@ def q_ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate broadcast back into the day-grain rows. At 100 TB the
     day-grain table is ~10^3 rows per type regardless of event volume:
     everything after the first aggregate is metadata-sized."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     daily = (
         e.groupBy(
@@ -977,7 +963,6 @@ def q_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketches (q_agg_hll_sketch) when the pair table itself gets big —
     documented tier, same topology. Cf. q_cumulative_uniques for the
     unbounded (since-launch) variant via first-seen rewrite."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     ud = e.select(
         "user_id", F.date_trunc("day", "ts").cast("date").alias("d")
@@ -1033,7 +1018,6 @@ def q_scd2_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     is non-empty at every SF: an out-of-range T made both engines
     agree on 0 rows — a vacuously green check that proves nothing
     (150 rows at sf0.01, ~1.5k at sf0.1 with this T)."""
-    ensure_session_determinism(spark)
     t = "2024-01-15 00:00:00"
     e = load(spark, sf_dir, "events").where(
         (F.col("event_type") == "purchase") & (F.col("ts") <= t)
@@ -1088,7 +1072,6 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange carries keys, not log volume. At 100 TB the log would be
     partitioned by ingest date and the replay runs per partition with
     a final latest-wins merge — same operator, one more level."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     log = e.where(
         F.col("event_type").isin("purchase", "signup", "error")
@@ -1175,7 +1158,6 @@ def q_ts_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange), then a bounded argmax window on the same partitioning —
     two exchanges total, both keyed by user_id; series length never
     materializes anywhere but the window frame."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     v = F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("bigint")
     w_ord = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -1260,7 +1242,6 @@ def q_session_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     the manual form, with the merge logic inside the operator instead
     of three window passes. The streaming twin (s_session) runs the
     SAME operator with watermarked state."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     agg = (
         e.groupBy(
@@ -1315,7 +1296,6 @@ def q_ts_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     emit as epoch-second BIGINT (the driver-hashable representation —
     constructed TIMESTAMP outputs are the one class that cannot be
     cross-engine hashed)."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     key = F.struct("ts", "event_id")
     bucket = (
@@ -1378,7 +1358,6 @@ def q_ts_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     same single-shuffle skeleton as q_sessionize) and a per-user
     rollup riding the same partitioning; gaps are integer microsecond
     differences divided down, so every emitted stat is exact."""
-    ensure_session_determinism(spark)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     us = F.unix_micros("ts")
     # gaps stay integer MICROSECONDS until the last step: a double

@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from tile_etl_spark.io import load, plan_memo, table_view
 from tile_etl_spark.registry import query
-from tile_etl_spark.session import ensure_session_determinism
 
 # Dialect-shared grouped-top-k text (valid Spark SQL and DuckDB SQL
 # verbatim; {t} = orders view). The builder issues it as ONE
@@ -45,7 +44,6 @@ def q_sort_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULLS FIRST asc, DuckDB NULLS LAST — spelled out on both sides).
     The driver's hash is order-insensitive; this verifies the row set
     survives a global range-partitioned sort."""
-    ensure_session_determinism(spark)
     o = load(spark, sf_dir, "orders")
     return o.select("o_orderkey", "o_orderstatus", "o_totalprice").orderBy(
         F.asc_nulls_first("o_orderstatus"),
@@ -67,7 +65,6 @@ def q_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 by (totalprice DESC, orderkey ASC) — a total order, so
     the set is deterministic. Physical plan: TakeOrderedAndProject
     (per-partition heap, no global sort)."""
-    ensure_session_determinism(spark)
     o = load(spark, sf_dir, "orders")
     return (
         o.select("o_orderkey", "o_custkey", "o_totalprice")
@@ -90,7 +87,6 @@ def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the fact table shuffles once at write time, never per query).
     Falls back to the plain scan view (one shuffle) where the
     environment has no metastore; identical rows either way."""
-    ensure_session_determinism(spark)
     from tile_etl_spark.operators.bucketed import orders_by_custkey
 
     t = orders_by_custkey(spark, sf_dir) or table_view(
@@ -109,7 +105,6 @@ def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bag union by name — no shuffle at all; partitions concatenate."""
-    ensure_session_determinism(spark)
     o = load(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("custkey"), F.lit("order").alias("src")
     )
@@ -129,7 +124,6 @@ def q_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set union = bag union + hash-distinct (one shuffle on the key)."""
-    ensure_session_determinism(spark)
     o = load(spark, sf_dir, "orders").select(F.col("o_custkey").alias("custkey"))
     c = load(spark, sf_dir, "customer").select(F.col("c_custkey").alias("custkey"))
     return o.union(c).distinct()
@@ -146,7 +140,6 @@ def q_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT (distinct semantics) — planned as a left-semi join on
     all columns after dedup."""
-    ensure_session_determinism(spark)
     a = load(spark, sf_dir, "lineitem").select(
         F.col("l_quantity").cast("int").alias("v")
     )
@@ -164,7 +157,6 @@ def q_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT (distinct) — left-anti join after dedup."""
-    ensure_session_determinism(spark)
     a = load(spark, sf_dir, "part").select(F.col("p_size").alias("v"))
     b = load(spark, sf_dir, "lineitem").select(
         F.col("l_quantity").cast("int").alias("v")
@@ -183,7 +175,6 @@ def q_except(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT ALL — bag difference with multiplicity (each nation key
     removes one customer occurrence)."""
-    ensure_session_determinism(spark)
     a = load(spark, sf_dir, "customer").select(
         F.col("c_nationkey").alias("v")
     )
@@ -201,7 +192,6 @@ def q_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT ALL — bag intersection (min multiplicity per value)."""
-    ensure_session_determinism(spark)
     a = (
         load(spark, sf_dir, "lineitem")
         .where(F.col("l_quantity") <= 10)
@@ -233,7 +223,6 @@ def q_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     complement of q_schema_evolution's mergeSchema read. Spark:
     ``unionByName(allowMissingColumns=True)``; DuckDB: ``UNION ALL BY
     NAME`` — both engines treat names, not positions, as the contract."""
-    ensure_session_determinism(spark)
     p = load(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("key"),
         F.col("p_retailprice").alias("price"),

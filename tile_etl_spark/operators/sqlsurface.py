@@ -33,7 +33,6 @@ from tile_etl_spark.io import (
     table_view,
 )
 from tile_etl_spark.registry import query
-from tile_etl_spark.session import ensure_session_determinism
 
 
 @query(
@@ -60,7 +59,6 @@ def q_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     inlining is semantics-preserving). The 100 TB posture is therefore
     the same as any expression: no serialization boundary, no Arrow
     batches, no Python workers."""
-    ensure_session_determinism(spark)
     from tile_etl_spark.io import register_once
 
     load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
@@ -125,7 +123,6 @@ def q_pipe_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial+final aggregate, same codegen. ``EXTEND`` is the projection
     stage (money math into DECIMAL per §5.3), ``AGGREGATE … GROUP BY``
     the one-shuffle aggregation."""
-    ensure_session_determinism(spark)
     load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     return spark.sql(
         """
@@ -162,7 +159,6 @@ def q_param_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     literals (the scan's PushedFilters carries the bound date). The
     oracle is the same query with the parameters inlined — hash match
     proves binding ≡ literal substitution."""
-    ensure_session_determinism(spark)
     load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     import datetime as dt
 
@@ -202,7 +198,6 @@ def q_collation(spark: SparkSession, sf_dir: str) -> DataFrame:
     collated column, and emits the canonical lowercase label; the twin
     spells the same semantics with ``lower()`` — hash match pins
     collated-equality ≡ normalize-then-compare for this collation."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     mixed = F.when(
         F.col("event_id") % 2 == 0, F.upper("event_type")
@@ -296,7 +291,6 @@ def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     r14: the supplier-backed hints are size-gated (supplier grows
     ~linearly with SF); nation is constant-size and its file stays
     under the gate at any SF."""
-    ensure_session_determinism(spark)
     li = table_view(spark, sf_dir, "lineitem")
     o = table_view(spark, sf_dir, "orders")
     s = cached_dim_view(spark, sf_dir, "supplier",

@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 from tile_etl_spark import cache
 from tile_etl_spark.io import as_double, dec, load
 from tile_etl_spark.registry import query
-from tile_etl_spark.session import ensure_session_determinism
 
 
 def pid_hist_window():
@@ -127,7 +126,6 @@ def ntile_from_rank(rn, n, buckets: int):
 def q_win_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ranking family per customer by totalprice (o_orderkey tiebreak →
     total order → deterministic)."""
-    ensure_session_determinism(spark)
     o = load(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
@@ -158,7 +156,6 @@ def q_win_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running sum per customer over order history. The sum runs in
     exact decimals — a running double sum would drift between engines
     at every prefix."""
-    ensure_session_determinism(spark)
     o = load(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
@@ -187,7 +184,6 @@ def q_win_running(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_win_leadlag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag/lead per user ordered by (ts, event_id). Values are carried
     (not re-aggregated), so only output rounding is needed."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts").asc(), F.col("event_id").asc()
@@ -234,7 +230,6 @@ def q_win_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     The range-partitioned block is cached so the histogram pass and the
     rank pass see the SAME partition boundaries (the range sampler is
     not guaranteed stable across separate evaluations)."""
-    ensure_session_determinism(spark)
     cache.scope(f"q_win_ntile:{sf_dir}")
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     n_parts = spark.sparkContext.defaultParallelism
@@ -304,7 +299,6 @@ def q_win_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Value window family: first/last/nth over a total per-customer
     order. last_value gets the full frame explicitly — its default
     frame (up to CURRENT ROW) is the classic silent-wrong-answer."""
-    ensure_session_determinism(spark)
     o = load(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
@@ -340,7 +334,6 @@ def q_win_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANGE frame over physical time: per-user mean of `value` within
     ±10 minutes, keyed on microsecond epoch (identical integer domain
     both engines; decimal sum / count division for bit equality)."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -389,7 +382,6 @@ def q_win_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the same partition); the aggregate is map-side combined. The
     (ts, event_id) total order makes runs deterministic under equal
     timestamps."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     order = [F.col("ts").asc(), F.col("event_id").asc()]
     w_u = Window.partitionBy("user_id").orderBy(*order)
@@ -435,7 +427,6 @@ def q_win_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     data (single-reducer trap): it's a 1-row exact aggregate broadcast
     back — same result as ``sum() OVER ()``, scale-safe shape. The
     per-customer window is an ordinary partitioned frame."""
-    ensure_session_determinism(spark)
     o = load(spark, sf_dir, "orders")
     w_cust = Window.partitionBy("o_custkey")
     total = o.agg(
@@ -510,7 +501,6 @@ def q_win_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates plus the per-user min (same window exchange); output
     restricted to full frames (n=5). This is the reversed-running-
     aggregate-safe direction (trailing frame, O(rows))."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     w_all = Window.partitionBy("user_id")
     w = (

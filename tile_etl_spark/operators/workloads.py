@@ -30,7 +30,6 @@ from tile_etl_spark.io import (
     table_view,
 )
 from tile_etl_spark.registry import query
-from tile_etl_spark.session import ensure_session_determinism
 
 _REV = "CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))"
 
@@ -69,7 +68,6 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject (no global sort materialization). l_orderkey
     tiebreak makes the top-10 cut total-order deterministic.
     """
-    ensure_session_determinism(spark)
     cutoff = F.lit("1998-01-01 00:00:00").cast("timestamp")
     c = load(spark, sf_dir, "customer").where(
         F.col("c_mktsegment") == "BUILDING"
@@ -123,7 +121,6 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     critical path). Region filter prunes nations before they reach the
     fact join.
     """
-    ensure_session_determinism(spark)
     lo = F.lit("1996-01-01 00:00:00").cast("timestamp")
     hi = F.lit("1998-01-01 00:00:00").cast("timestamp")
     r = load(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
@@ -180,7 +177,6 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer attributes, TakeOrderedAndProject for the top-20 with a
     c_custkey tiebreak.
     """
-    ensure_session_determinism(spark)
     lo = F.lit("1997-01-01 00:00:00").cast("timestamp")
     hi = F.lit("1998-01-01 00:00:00").cast("timestamp")
     c = load(spark, sf_dir, "customer")
@@ -250,7 +246,6 @@ def q_join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same key, as here — the groupBy(grp) re-keys, so salt never
     leaks downstream).
     """
-    ensure_session_determinism(spark)
     li = load(spark, sf_dir, "lineitem")
     fact = li.select(
         F.when(F.col("l_orderkey") % 10 < 7, F.lit(0))
@@ -322,7 +317,6 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB — plus narrow expressions. On a cluster the target side is
     the bucketed/partitioned table, so the shuffle is one-sided.
     """
-    ensure_session_determinism(spark)
     c = load(spark, sf_dir, "customer")
     tgt = c.select(F.col("c_custkey").alias("k"), F.col("c_acctbal").alias("bal"))
     src = (
@@ -420,7 +414,6 @@ def q_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     key join against the target, then a ≤5-row metrics aggregate — the
     same single co-partitioned pass as q_merge_upsert at any scale,
     with exact DECIMAL deltas per the engine's money rule."""
-    ensure_session_determinism(spark)
     return merge_audit_metrics(load(spark, sf_dir, "customer"))
 
 
@@ -517,7 +510,6 @@ def q_table_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     structs built with CASE — the oracle's 4-way UNION re-reads the
     join four times, the engine reads it once. Unchanged rows emit an
     empty array and vanish in the explode (Generate outer=false)."""
-    ensure_session_determinism(spark)
     c = load(spark, sf_dir, "customer")
     tgt = c.select(
         F.col("c_custkey").alias("tk"), F.col("c_acctbal").alias("old_bal")
@@ -604,7 +596,6 @@ def q_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: one map-side-combined groupBy into 16 bucket rows — a
     single scan, one tiny shuffle, at any scale."""
-    ensure_session_determinism(spark)
     o = load(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
     row_h = (
@@ -698,7 +689,6 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-iteration DuckDB recursive CTE replays the identical
     computation — a rare case of an ITERATIVE algorithm being
     H-checkable."""
-    ensure_session_determinism(spark)
     o = load(spark, sf_dir, "orders")
     edges = (
         o.select(
@@ -810,7 +800,6 @@ def q_dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     Nothing collects; the audit over 100 TB is the same few scans a
     single analytics query costs.
     """
-    ensure_session_determinism(spark)
     o = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
     c = load(spark, sf_dir, "customer")
@@ -897,7 +886,6 @@ def q_sql_api(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL text and DataFrame calls into the same logical plan space, so
     every plan-quality property (broadcast dims, partial aggs, window
     group limits) holds identically."""
-    ensure_session_determinism(spark)
     load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     return spark.sql(_SQL_API_TEXT)
@@ -928,7 +916,6 @@ def q_agg_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine stable by construction. Two map-side-combined
     aggregates + a 3-row window — the first groupBy collapses the data
     to (type, bucket) cardinality before any window sees it."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     b = (
         e.select(
@@ -988,7 +975,6 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB the user-keyed aggregates are the only wide shuffles and
     they reuse one hash partitioning; the final triangle is tiny."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     # cohort_week emitted as DATE: constructed TIMESTAMP output columns
     # are the one driver-red representation class (round 3: the only
@@ -1071,7 +1057,6 @@ def q_abtest_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality rows), the 1-row control broadcast, pure arithmetic —
     the experiment-analysis query at 100 TB is exactly this aggregate
     plus scalar math."""
-    ensure_session_determinism(spark)
     o = load(spark, sf_dir, "orders")
     arms = o.groupBy(F.col("o_orderpriority").alias("arm")).agg(
         F.count(F.lit(1)).alias("n"),
@@ -1155,7 +1140,6 @@ def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     under the 32 MB gate, dropped past it so AQE picks the strategy
     from runtime sizes. Bench-SF plans byte-identical (both sources
     under the gate there)."""
-    ensure_session_determinism(spark)
     li = table_view(spark, sf_dir, "lineitem")
     o = table_view(spark, sf_dir, "orders")
     c = cached_dim_view(spark, sf_dir, "customer", ("c_custkey",))
@@ -1218,7 +1202,6 @@ def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     probabilities are single double divisions of exact counts — no
     float-order risk. At 100 TB the window's user partitioning is the
     only wide shuffle; the matrix itself is |types|² rows."""
-    ensure_session_determinism(spark)
     from pyspark.sql import Window
 
     e = load(spark, sf_dir, "events")
@@ -1284,7 +1267,6 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     swapping the (a,b) ordering key; both joins stay hash-partitioned
     equi-joins with map-side-combined count aggregation, and the small
     hot side broadcasts."""
-    ensure_session_determinism(spark)
     o = load(spark, sf_dir, "orders")
     s, d = F.col("o_custkey") % 100, F.col("o_orderkey") % 100
     ue = (
@@ -1356,7 +1338,6 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     analysis and four dim parquet decodes per action. Interleaved
     A/B, values bit-identical: sf0.1 median 0.597 s -> 0.372 (-38%);
     sf1 1.36 -> 1.24 (-9%) — both-SF winner."""
-    ensure_session_determinism(spark)
     li = table_view(spark, sf_dir, "lineitem")
     o = table_view(spark, sf_dir, "orders")
     s = cached_dim_view(spark, sf_dir, "supplier",
@@ -1424,7 +1405,6 @@ def q_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the TPC-H tier). Interleaved A/B, values bit-identical: sf0.1
     median 0.738 s -> 0.448 (-39%); sf1 2.34 -> 2.07 (-12%) — both-SF
     winner, same plan shape (orders is fact-sized, no dim cache)."""
-    ensure_session_determinism(spark)
     li = table_view(spark, sf_dir, "lineitem")
     o = table_view(spark, sf_dir, "orders")
     return spark.sql(
@@ -1477,7 +1457,6 @@ def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     action and the eager chain collapses to one analysis round trip.
     Interleaved A/B, values bit-identical: sf0.1 median 0.527 s ->
     0.311 (-41%); sf1 1.33 -> 1.02 (-23%) — both-SF winner."""
-    ensure_session_determinism(spark)
     li = table_view(spark, sf_dir, "lineitem")
     p = cached_dim_view(spark, sf_dir, "part", ("p_partkey", "p_type"))
     return spark.sql(
@@ -1534,7 +1513,6 @@ def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     biggest extra-tier win. Interleaved A/B, values bit-identical:
     sf0.1 median 0.547 s -> 0.190 (-65%); sf1 0.436 -> 0.263
     (-40%) — both-SF winner."""
-    ensure_session_determinism(spark)
     li = table_view(spark, sf_dir, "lineitem")
     p = cached_dim_view(
         spark, sf_dir, "part", ("p_partkey", "p_brand", "p_size")
@@ -1599,7 +1577,6 @@ def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cohort, month) aggregate, cohort sizes broadcast back, and a
     cumulative window over the TINY (cohort × month) frame — at 100 TB
     every wide stage is map-side combined on the same customer hash."""
-    ensure_session_determinism(spark)
     o = load(spark, sf_dir, "orders")
     firsts = o.groupBy("o_custkey").agg(
         F.min(F.date_trunc("month", "o_orderdate")).alias("cohort")
@@ -1669,7 +1646,6 @@ def q_graph_degree_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     orientation and join-salting strategies the other graph operators
     document. Two integer aggregates over the edge endpoints; entirely
     map-side-combinable."""
-    ensure_session_determinism(spark)
     o = load(spark, sf_dir, "orders")
     s, d = F.col("o_custkey") % 100, F.col("o_orderkey") % 100
     ue = (
@@ -1721,7 +1697,6 @@ def q_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     c_custkey (one shuffle over customers), second on the tiny c_count
     domain. At 100 TB the orders side is pre-filtered before the
     shuffle and both aggregates are map-side combined."""
-    ensure_session_determinism(spark)
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders")
     joined = c.join(
@@ -1775,7 +1750,6 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     Interleaved A/B, values bit-identical: sf0.1 median -29%; sf1
     first read +8% in a burst-hit 5-rep window, re-measured alone at
     9 reps -17% (new arm wins 7/9 adjacent pairs) — both-SF winner."""
-    ensure_session_determinism(spark)
     li = table_view(spark, sf_dir, "lineitem")
     s = cached_dim_view(spark, sf_dir, "supplier",
                         ("s_suppkey", "s_name"))
@@ -1843,7 +1817,6 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     build and the validating inner join), and the 6-step eager chain
     paid per-op analysis. Interleaved A/B, values bit-identical:
     sf0.1 median -26%; sf1 -33% — both-SF winner."""
-    ensure_session_determinism(spark)
     li = table_view(spark, sf_dir, "lineitem")
     p = cached_dim_view(spark, sf_dir, "part", ("p_partkey", "p_brand"))
     # r14: part grows ~linearly with SF — hints size-gated
@@ -1915,7 +1888,6 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer was decoded TWICE per action (average leg + main leg).
     Interleaved A/B, values bit-identical: sf0.1 median -41%; sf1
     -52% — both-SF winner."""
-    ensure_session_determinism(spark)
     o = table_view(spark, sf_dir, "orders")
     c = cached_dim_view(spark, sf_dir, "customer",
                         ("c_custkey", "c_mktsegment", "c_acctbal"))
@@ -1974,7 +1946,6 @@ def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of a full-width part decode per action. Interleaved A/B,
     values bit-identical: sf0.1 median 0.332 s -> 0.229 (-31%); sf1
     0.677 -> 0.596 (-12%) — both-SF winner."""
-    ensure_session_determinism(spark)
     li = table_view(spark, sf_dir, "lineitem")
     s = cached_dim_view(spark, sf_dir, "supplier",
                         ("s_suppkey", "s_nationkey"))
@@ -2041,7 +2012,6 @@ def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the 8-step eager chain paid per-op analysis. Interleaved A/B,
     values bit-identical: sf0.1 median -33%; sf1 -12% — both-SF
     winner."""
-    ensure_session_determinism(spark)
     li = table_view(spark, sf_dir, "lineitem")
     p = cached_dim_view(spark, sf_dir, "part",
                         ("p_partkey", "p_name", "p_size"))
@@ -2106,7 +2076,6 @@ def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes on l_orderkey and evaluates the residual per match,
     stopping at the first hit (semi semantics — no fan-out); final
     aggregate is 5 groups, map-side combined."""
-    ensure_session_determinism(spark)
     o = load(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= "1996-01-01")
         & (F.col("o_orderdate") < "1996-04-01")
@@ -2145,7 +2114,6 @@ def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     single partial+final sum. The discount literals compare against
     the same stored doubles in both engines, so the band edges select
     identical rows."""
-    ensure_session_determinism(spark)
     li = load(spark, sf_dir, "lineitem")
     return (
         li.where(
@@ -2205,7 +2173,6 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     decodes per action (supplier, customer, nation twice, region).
     Interleaved A/B, values bit-identical: sf0.1 median -52%; sf1 -7%
     — both-SF winner (the deepest-chain analog of Q7's -38%/-9%)."""
-    ensure_session_determinism(spark)
     li = table_view(spark, sf_dir, "lineitem")
     o = table_view(spark, sf_dir, "orders")
     s = cached_dim_view(spark, sf_dir, "supplier",
@@ -2283,7 +2250,6 @@ def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     6-step eager chain paid per-op analysis plus two dim parquet
     decodes per action. Interleaved A/B, values bit-identical: sf0.1
     median -37%; sf1 -16% — both-SF winner."""
-    ensure_session_determinism(spark)
     li = table_view(spark, sf_dir, "lineitem")
     s = cached_dim_view(spark, sf_dir, "supplier",
                         ("s_suppkey", "s_nationkey"))
@@ -2342,7 +2308,6 @@ def q_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     four columns and the supplier blacklist re-decoded parquet per
     action before. Interleaved A/B, values bit-identical: sf0.1
     median -14%; sf1 -23% — both-SF winner."""
-    ensure_session_determinism(spark)
     li = table_view(spark, sf_dir, "lineitem")
     p = cached_dim_view(spark, sf_dir, "part",
                         ("p_partkey", "p_brand", "p_type", "p_size"))
@@ -2410,7 +2375,6 @@ def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     8-step eager chain paid per-op analysis, and part + supplier
     re-decoded per action. Interleaved A/B, values bit-identical:
     sf0.1 median -25%; sf1 -23% — both-SF winner."""
-    ensure_session_determinism(spark)
     li = table_view(spark, sf_dir, "lineitem")
     p = cached_dim_view(spark, sf_dir, "part", ("p_partkey", "p_name"))
     s = cached_dim_view(spark, sf_dir, "supplier",
@@ -2477,7 +2441,6 @@ def q_delete_propagate(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows via a semi join on surviving orderkeys — at 100 TB that semi
     join is the only wide shuffle, and with a table format it becomes
     MERGE DELETE using the same join plan."""
-    ensure_session_determinism(spark)
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
@@ -2531,7 +2494,6 @@ def q_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputing the full A⋈B; all four terms share the orderkey hash
     partitioning, and the final aggregate is map-side combined over
     the unioned deltas."""
-    ensure_session_determinism(spark)
     o = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
     # DIFFERENT delta predicates per table (keys ≡0 mod 20 vs mod 30,
@@ -2609,7 +2571,6 @@ def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     one shuffle round under AQE) + a 3-row unpivot — at scale the scan
     cost dominates and is paid ONCE for all columns, which is the
     point vs per-column ANALYZE statements."""
-    ensure_session_determinism(spark)
     li = load(spark, sf_dir, "lineitem")
 
     def stats(c):
@@ -2675,7 +2636,6 @@ def q_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     that piggy-backed observation ≡ a dedicated aggregation pass. At
     100 TB the difference is one full scan saved per audit metric
     family."""
-    ensure_session_determinism(spark)
     from pyspark.sql import Observation
 
     li = load(spark, sf_dir, "lineitem")
@@ -2760,7 +2720,6 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     as q_graph_pagerank). The oracle spells it as a bounded recursive
     CTE with UNION-dedup + min(dist) — semantics pinned: min over all
     ≤6-hop walks ≡ BFS layering."""
-    ensure_session_determinism(spark)
     li = load(spark, sf_dir, "lineitem")
     # checkpoint BEFORE symmetrizing (the connected_components
     # discipline): the union's two branches would each re-execute the

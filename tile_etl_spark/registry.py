@@ -13,7 +13,7 @@ from collections.abc import Callable
 from typing import Any
 
 from tile_etl_spark.io import input_bytes
-from tile_etl_spark.session import conf_for
+from tile_etl_spark.session import conf_for, ensure_session_determinism
 
 QUERIES: dict[str, Callable[..., Any]] = {}
 ORACLES: dict[str, str] = {}
@@ -22,11 +22,14 @@ ORACLES: dict[str, str] = {}
 def query(name: str, oracle: str | None = None):
     """Register a query builder, optionally with its DuckDB oracle twin.
 
-    The registered function wraps the builder: before building, it sets
-    ``conf_for(io.input_bytes(sf_dir), defaultParallelism)`` on the
-    session (shuffle width, AQE, scan split keys). The builder's own
-    eager jobs and the caller's action both plan under that conf; so
-    does any frame built earlier that runs after the call.
+    The registered function wraps the builder: before building, it pins
+    the session's UTC time zone and ANSI-off arithmetic
+    (``session.ensure_session_determinism``) and sets
+    ``conf_for(io.input_bytes(sf_dir), defaultParallelism)`` on it
+    (shuffle width, AQE, scan split keys). This is the one place a
+    query's session is pinned: builders assume it and do not repeat it.
+    The builder's own eager jobs and the caller's action both plan under
+    that conf; so does any frame built earlier that runs after the call.
 
     Oracle-less registrations get the driver's weaker rows-only check
     (streaming / non-SQL-expressible ops — SURVEY §2B codes B and R).
@@ -35,6 +38,7 @@ def query(name: str, oracle: str | None = None):
     def deco(fn):
         @functools.wraps(fn)
         def sized(spark, sf_dir):
+            ensure_session_determinism(spark)
             cpus = spark.sparkContext.defaultParallelism
             for k, v in conf_for(input_bytes(sf_dir), cpus).items():
                 spark.conf.set(k, v)

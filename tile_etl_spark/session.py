@@ -2,11 +2,15 @@
 
 ``get_spark`` builds the session with fixed defaults: AQE on (runtime
 re-planning, skew-join handling, partition coalescing), 32 shuffle
-partitions, UTC session time zone for cross-engine determinism (SURVEY
-§5.3). ``conf_for`` derives a job's shuffle width, AQE setting and scan
-splits from its input size and core count; every registry query sets it
-on the session before it builds (``registry.query``), so the defaults
-hold only for work that no registry call precedes.
+partitions, UTC session time zone and ANSI off for cross-engine
+determinism (SURVEY §5.3). ``conf_for`` derives a job's shuffle width,
+AQE setting and scan splits from its input size and core count; every
+registry query sets it on the session before it builds
+(``registry.query``), so the defaults hold only for work that no
+registry call precedes. A session from elsewhere (the driver's) gets
+UTC and ANSI off from ``ensure_session_determinism``, which
+``registry.query`` calls before every builder; engine helpers called
+outside the registry assume a ``get_spark`` session or that call.
 
 The driver JVM starts from an application class-data-sharing (AppCDS)
 archive of the installed JDK and Spark jars when one exists; the first
@@ -458,8 +462,9 @@ def ensure_session_determinism(spark: SparkSession) -> SparkSession:
     """Pin runtime confs that affect cross-engine value equality.
 
     Queries receive an externally created session (driver contract), so
-    each query builder routes through this to guarantee UTC rendering of
-    timestamps and NULL-on-bad-cast semantics regardless of caller setup.
+    ``registry.query`` calls this before every builder to guarantee UTC
+    rendering of timestamps and NULL-on-bad-cast semantics regardless of
+    caller setup.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     try:

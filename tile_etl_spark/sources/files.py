@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 
 from tile_etl_spark.io import as_double, load, source_fingerprint
 from tile_etl_spark.registry import query
-from tile_etl_spark.session import ensure_session_determinism
 from tile_etl_spark.tiles.grid import (
     PRESENT_SQL,
     grid_oracle_cte,
@@ -91,7 +90,6 @@ def src_csv_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     read back with an explicit DDL schema (schema-first policy, SURVEY
     §1.3), join on the key. Losslessness makes the oracle the original
     table itself — an H-checked round trip."""
-    ensure_session_determinism(spark)
     n = load(spark, sf_dir, "nation")
     csv_dir, json_dir = _art("nation_csv"), _art("nation_json")
     n.coalesce(1).write.mode("overwrite").option("header", True).csv(csv_dir)
@@ -125,7 +123,6 @@ def src_csv_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin's types match). Inference costs an extra pass over the file —
     fine for ad-hoc ingest, never for the 100 TB path (explicit DDL,
     as src_csv_json)."""
-    ensure_session_determinism(spark)
     n = load(spark, sf_dir, "nation")
     csv_dir = _art("nation_csv_infer")
     n.coalesce(1).write.mode("overwrite").option("header", True).csv(csv_dir)
@@ -159,7 +156,6 @@ def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale note: partitionBy on a low-cardinality column is exactly how
     a 100 TB table should land; each partition's files write in
     parallel from their tasks."""
-    ensure_session_determinism(spark)
     out = _art("orders_by_status")
     o = load(spark, sf_dir, "orders")
     o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
@@ -185,7 +181,6 @@ def src_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle the original table — DuckDB never needs to read ORC
     itself. Columnar-format interop matters for lakes that standardized
     on ORC (Hive lineage) rather than Parquet."""
-    ensure_session_determinism(spark)
     n = load(spark, sf_dir, "nation")
     orc_dir = _art("nation_orc")
     n.coalesce(1).write.mode("overwrite").orc(orc_dir)
@@ -213,7 +208,6 @@ def src_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     large export parallelizes like any text source. Scale note: XML is
     an INGEST format here — the first hop lands it in Parquet
     (sink_parquet), nothing downstream re-parses XML."""
-    ensure_session_determinism(spark)
     n = load(spark, sf_dir, "nation")
     xml_dir = _art("nation_xml")
     (
@@ -303,7 +297,6 @@ def src_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     and content reads are both cluster-parallel, and `pathGlobFilter`
     prunes non-tiles at listing time. H-checked: path, byte length and
     content md5 all recomputed by DuckDB from the shared formula."""
-    ensure_session_determinism(spark)
     base = tile_cache(spark)
     files = (
         spark.read.format("binaryFile")
@@ -371,7 +364,6 @@ def q_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     first: without a selective predicate on the dim side, dynamic
     partition pruning does not engage and the scan read every
     directory)."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events")
     part = spark.read.parquet(_events_partitioned(spark, sf_dir))
     min_date = e.agg(F.min(F.col("ts").cast("date"))).first()[0]
@@ -414,7 +406,6 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     The dim is a REAL separate parquet artifact (dates + day-of-month,
     rebuilt per source fingerprint): DPP only engages for a genuine
     scan-side build relation, not a LocalRelation."""
-    ensure_session_determinism(spark)
     fact = spark.read.parquet(_events_partitioned(spark, sf_dir))
 
     def write(tmp: str) -> None:
@@ -462,7 +453,6 @@ def src_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     source table itself, H-checked — proving codec + escaping fidelity,
     the property that matters when a 100 TB corpus round-trips through
     plain-text interchange."""
-    ensure_session_determinism(spark)
     d = load(spark, sf_dir, "documents")
     out = _art("documents_txt")
     clean = F.regexp_replace("text", "[\\n\\r\\t]", " ")
@@ -531,7 +521,6 @@ def q_tile_sync_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata-sized regardless of tile payload bytes; content hashes
     come from the tile content itself (md5 over the same deterministic
     fixture recipe as src_binary, recomputable by the oracle)."""
-    ensure_session_determinism(spark)
     g = _tile_files_df(spark)
     cur = g.select(
         "src_path", F.md5(F.col("content_str").cast("binary")).alias("h")
@@ -602,8 +591,6 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity), so the oracle recomputes the identical union from the
     source table. The two-generation artifact is built once per source
     fingerprint and published as ONE rename."""
-    ensure_session_determinism(spark)
-
     def write(tmp: str) -> None:
         o = load(spark, sf_dir, "orders")
         o.where(F.col("o_orderkey") % 2 == 0).select(
@@ -665,7 +652,6 @@ def src_csv_badrecords(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic (nationkey % 5), so the oracle recomputes the
     expected good/bad split and the checksum over surviving values
     from the clean table."""
-    ensure_session_determinism(spark)
     n = load(spark, sf_dir, "nation")
     csv_dir = _art("nation_csv_bad")
     line = F.concat_ws(
@@ -739,7 +725,6 @@ def sink_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     clustering in ONE shuffle. At 100 TB this runs per-partition
     (compact yesterday's directory, not the table) — the same plan
     applies under a partition predicate."""
-    ensure_session_determinism(spark)
     compacted = _art("events_compacted")
     # the compaction job: few range-clustered files, bounded size
     (
@@ -789,7 +774,6 @@ def src_python_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
     same stripe split tile_grid does with its explicit repartition).
     The H-check proves the Python source's output is bit-identical to
     the declarative SQL twin."""
-    ensure_session_determinism(spark)
     from pyspark.sql.datasource import (
         DataSource,
         DataSourceReader,
@@ -856,7 +840,6 @@ def src_python_ds_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch source: draining the stream must reproduce the batch answer
     row-for-row — offset bookkeeping can neither drop nor duplicate a
     level."""
-    ensure_session_determinism(spark)
     from pyspark.sql.datasource import (
         DataSource,
         DataSourceStreamReader,
@@ -944,7 +927,6 @@ def sink_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is THE nightly operation: reprocess one ingest day
     out of thousands without locking or rewriting the table; cost is
     proportional to the repaired partition, not the table."""
-    ensure_session_determinism(spark)
     e = load(spark, sf_dir, "events").withColumn(
         "event_date", F.col("ts").cast("date")
     )

@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 
 from tile_etl_spark.io import as_double
 from tile_etl_spark.registry import query
-from tile_etl_spark.session import ensure_session_determinism
 from tile_etl_spark.streaming.replay import (
     EVENTS_SCHEMA,
     _art_root,
@@ -40,7 +39,6 @@ def s_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Complete output mode: the memory sink holds the final state of
     every window once the replay drains."""
-    ensure_session_determinism(spark)
     stream = read_stream(spark, replay_dir(spark, sf_dir))
     agg = (
         stream.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -61,7 +59,6 @@ def s_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming sliding window (1 h window, 15 min slide) ≡
     q_window_sliding: every event lands in 4 overlapping windows."""
-    ensure_session_determinism(spark)
     stream = read_stream(spark, replay_dir(spark, sf_dir))
     agg = (
         stream.groupBy(
@@ -79,7 +76,6 @@ def s_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user, session_start, n_events) multiset. session_window merges
     events whose gaps are < 30 min — the stateful-merge equivalent of
     the batch lag+cumsum build."""
-    ensure_session_determinism(spark)
     stream = read_stream(spark, replay_dir(spark, sf_dir))
     agg = (
         stream.groupBy(
@@ -98,7 +94,6 @@ def s_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     are dropped — the unit test injects one and asserts its absence.
     Windows still open when the replay drains are NOT in the output;
     that is watermark semantics, not data loss."""
-    ensure_session_determinism(spark)
     stream = read_stream(spark, replay_dir(spark, sf_dir))
     agg = (
         stream.withWatermark("ts", "10 minutes")
@@ -116,7 +111,6 @@ def s_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     copies — state for an id is kept only within the watermark horizon,
     the unbounded-state-safe way to dedup an infinite stream.
     Output ≡ batch per-type distinct counts."""
-    ensure_session_determinism(spark)
     base = replay_dir(spark, sf_dir)
     stream = read_stream(spark, base).unionByName(read_stream(spark, base))
     dedup = stream.withWatermark("ts", "30 minutes").dropDuplicatesWithinWatermark(
@@ -140,7 +134,6 @@ def s_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     On a cluster the dim table is re-resolved per batch, picking up
     slowly-changing updates; semantics here ≡ the batch twin asserted
     in tests."""
-    ensure_session_determinism(spark)
     from tile_etl_spark.io import load
 
     stream = read_stream(spark, replay_dir(spark, sf_dir))
@@ -172,7 +165,6 @@ def s_ss_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory-sink rows are then aggregated per user batch-side. Scale:
     state is partitioned by the equi key (user_id) — the same shuffle a
     batch join would take, held incrementally."""
-    ensure_session_determinism(spark)
     base = replay_dir(spark, sf_dir)
     clicks = (
         read_stream(spark, base)
@@ -222,7 +214,6 @@ def s_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     running event counter whose state survives across micro-batches.
     Emits the running total each batch (update mode); the final figure
     per user ≡ batch groupBy(user).count() — asserted in tests."""
-    ensure_session_determinism(spark)
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -276,7 +267,6 @@ def s_stateful_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     Final figure per user ≡ batch groupBy(user).count() — the same
     stream≡batch contract as s_stateful (asserted in tests where the
     API is available)."""
-    ensure_session_determinism(spark)
     import pandas as pd
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
@@ -434,7 +424,6 @@ def s_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-outer merge is one co-partitioned shuffle per batch (or a
     MERGE INTO on a table format); state stays columnar on disk, never
     on the driver."""
-    ensure_session_determinism(spark)
     import uuid as _uuid
 
     base = os.path.join(
@@ -478,7 +467,6 @@ def s_ss_join_louter(spark: SparkSession, sf_dir: str) -> DataFrame:
     (asserted in tests against the batch twin). Output: per-user
     converted vs unconverted click counts — the funnel numerator and
     denominator from ONE join."""
-    ensure_session_determinism(spark)
     base = replay_dir_with_flush(spark, sf_dir)
     clicks = (
         read_stream(spark, base)
@@ -545,7 +533,6 @@ def s_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     Emitted as a small driver-side DataFrame (one row per micro-batch
     — O(batches), never data-sized). Only the progress feed is read, so
     the aggregate goes to the noop sink."""
-    ensure_session_determinism(spark)
     stream = read_stream(spark, replay_dir(spark, sf_dir))
     agg = (
         stream.withWatermark("ts", "10 minutes")
@@ -617,7 +604,6 @@ def s_tile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid — the stream must land every tile exactly once, byte-for-byte,
     to hash-match. availableNow drains the backlog; the groupBy runs in
     complete mode over the drained replay."""
-    ensure_session_determinism(spark)
     from tile_etl_spark.sources.files import tile_cache
     from tile_etl_spark.tiles.grid import parse_src_path
 
@@ -679,7 +665,6 @@ def s_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     computation."""
     import uuid
 
-    ensure_session_determinism(spark)
     from tile_etl_spark.llm.dedup import (
         _INC_NEW_SOURCES,
         incremental_pair_verify,

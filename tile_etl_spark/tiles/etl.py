@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 
 from tile_etl_spark.registry import query
 from tile_etl_spark.tiles.grid import PRESENT_SQL, grid_oracle_cte
-from tile_etl_spark.session import ensure_session_determinism
 from tile_etl_spark.tiles.sink import objectstore_sink
 
 
@@ -58,7 +57,6 @@ def q_tile_etl_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     dead-letter (A10–A11) → per-level progress summary (A13). The
     oracle recomputes uploads, dead letters and byte volume from the
     shared deterministic formulas."""
-    ensure_session_determinism(spark)
     from tile_etl_spark.sources.files import _art, tile_cache
     from tile_etl_spark.tiles.grid import parse_src_path
 

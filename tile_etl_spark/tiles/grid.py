@@ -23,7 +23,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tile_etl_spark.registry import query
-from tile_etl_spark.session import ensure_session_determinism
 
 # Constants from the reference (P:24-33). One fixed Web-Mercator delta —
 # SURVEY §1.1 notes the two reference programs disagree in the 6th
@@ -273,7 +272,6 @@ def parse_src_path(path_col: F.Column) -> tuple[F.Column, F.Column, F.Column]:
 )
 def q_tile_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1–A4 end-to-end: the full candidate grid, 37,819 rows (§6)."""
-    ensure_session_determinism(spark)
     return tile_grid(spark)
 
 
@@ -292,7 +290,6 @@ def q_tile_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_tile_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5 + A8 codecs, plus the round-trip parse (oracle asserts identity)."""
-    ensure_session_determinism(spark)
     g = tile_grid(spark).withColumn("src_path", src_path_col())
     lvl, row, col = parse_src_path(F.col("src_path"))
     return g.select(
@@ -326,7 +323,6 @@ def q_tile_s3_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproduced per-variant, not papered over), and its slash-namespaced
     map name. Same builders, different constants — the parameterization
     IS the feature."""
-    ensure_session_determinism(spark)
     g = tile_grid(
         spark, levels=S3_LEVELS, extent=S3_EXTENT, delta=S3_DELTA
     )
@@ -411,7 +407,6 @@ def q_tile_manifest_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the scan-less equivalent of `File.Exists` (P:102-106). Catalyst
     broadcasts the smaller side; at scale both sides hash-partition on
     src_path and the join stays shuffle-balanced."""
-    ensure_session_determinism(spark)
     g = tile_grid(spark).withColumn("src_path", src_path_col())
     manifest = tile_manifest(spark).select("src_path")
     return g.join(manifest, "src_path", "left_semi").select(
@@ -445,7 +440,6 @@ def q_tile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7 + A9 rollup: per-level tile count, byte volume, distinct
     content hashes over the present-tile manifest. Partial aggregation
     (map-side combine) happens automatically in the hash aggregate."""
-    ensure_session_determinism(spark)
     m = tile_manifest(spark)
     return m.groupBy("level").agg(
         F.count(F.lit(1)).alias("tile_count"),
@@ -507,7 +501,6 @@ def q_tile_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined count keyed (level,row,col) — the natural
     spatial-bucketing shuffle, skew-bounded because hot tiles cap at
     one key each."""
-    ensure_session_determinism(spark)
     from tile_etl_spark.io import load
 
     x, y = _point_cols()
@@ -564,7 +557,6 @@ def q_tile_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation collapses nearly all rows before the shuffle. At 100 TB
     (a deep pyramid with per-tile stats) the rollup is one shuffle per
     zoom step over already-parent-grouped partials."""
-    ensure_session_determinism(spark)
     g = tile_grid(spark)
     return (
         g.where(F.col("level") > 5)
@@ -624,7 +616,6 @@ def q_tile_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the SAME expression text in both engines — pure int64, zero
     float risk; zrank pins the within-level Z traversal order with a
     (row, col) tiebreak (unique pairs make it total)."""
-    ensure_session_determinism(spark)
     g = tile_grid(spark).where(F.col("level") <= 8)
     # +16 keeps every padded index non-negative (level 5 pads to
     # col -2) so the bit interleave is over true unsigned coordinates
@@ -686,7 +677,6 @@ def q_tile_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     pyramid both sides hash on the same key so the join co-partitions.
     Levels ≤ 7 keep the qid's cell count driver-friendly; the shape is
     level-count-invariant."""
-    ensure_session_determinism(spark)
     present = (
         tile_grid(spark)
         .where(F.col("level") <= 7)
@@ -784,7 +774,6 @@ def q_tile_haversine(spark: SparkSession, sf_dir: str) -> DataFrame:
     and everything after the explode is per-row math in whole-stage
     codegen: embarrassingly parallel at any pyramid depth, no shuffle
     at all."""
-    ensure_session_determinism(spark)
     tile_size = F.lit(WEB_MERCATOR_DELTA * math.pow(2, 1 - _HAV_LEVEL))
     cells = (
         spark.range(_HAV_R0, _HAV_R1 + 1)
@@ -901,7 +890,6 @@ def q_tile_quadkey(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: pure per-row expression work — no shuffle, no join;
     whole-stage codegen end to end. Canonical tiles only (the level-5
     extent pad reaches col −2, outside quadkey's domain)."""
-    ensure_session_determinism(spark)
     g = (
         tile_grid(spark)
         .where((F.col("row") >= 0) & (F.col("col") >= 0))
@@ -983,7 +971,6 @@ def q_tile_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunes to k before the shuffle). Ranking on the INTEGER dist²
     avoids float order risk; the reported dist is sqrt (correctly
     rounded IEEE, identical cross-engine)."""
-    ensure_session_determinism(spark)
     present = (
         tile_grid(spark)
         .where(F.col("level") == 7)

@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 
 from tile_etl_spark.registry import query
 from tile_etl_spark.tiles.grid import PRESENT_SQL, grid_oracle_cte
-from tile_etl_spark.session import ensure_session_determinism
 
 # Deterministic injected PUT failure: ~1/16 of keys, recomputable by
 # the DuckDB twin (md5 of the object key starts with '0').
@@ -172,7 +171,6 @@ def sink_objectstore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8–A11 end-to-end: level-5 present tiles PUT to a local-FS
     object store with key codec + metadata; dead-letter split counted
     per status. The DuckDB twin recomputes which keys must fail."""
-    ensure_session_determinism(spark)
     from tile_etl_spark.sources.files import ART_DIR, _tile_files_df
     from tile_etl_spark.tiles.grid import object_key_col
 
